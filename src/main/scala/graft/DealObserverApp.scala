@@ -1,6 +1,5 @@
 package graft
 
-import graft.ingest.DealIngest
 import graft.state.{DealStateStore, ResolvePayloadCids, SubmitDeals}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
@@ -42,43 +41,23 @@ object DealObserverApp {
       spark, cfg.eventLog, cfg.storeRoot, cfg.checkpoint, chainHead, trigger,
       metrics = Some(new graft.streaming.MetricsSink(spark, cfg.metricsRoot)))
 
-  /** Delta-write helper: persist only the epoch-days `touched` rows
-    * live in, carrying the rest of the table forward by reference. */
-  private def writeTouchedDays(
-      store: DealStateStore, newState: DataFrame, touched: DataFrame): Unit = {
-    import org.apache.spark.sql.functions._
-    val days = touched
-      .select((col("activated_at_epoch") / store.EpochsPerDay).cast("int").as("d"))
-      .distinct().collect().map(_.getInt(0))
-    if (days.isEmpty) return
-    val daySet = days.toSet
-    val dayCol = (col("activated_at_epoch") / store.EpochsPerDay).cast("int")
-    store.writeDelta(newState.filter(dayCol.isInCollection(daySet)))
-    if (store.chainDepth() > 32) store.compact()
-  }
+  /** Delta-write helper: persist only the epoch-days in `days`, carrying
+    * the rest of the table forward by reference. `newState` must hold
+    * every row of those days. */
+  private def writeDays(store: DealStateStore, newState: DataFrame, days: Set[Int]): Unit =
+    if (days.nonEmpty) {
+      store.writeDelta(newState.filter(DealStateStore.dayCol.isInCollection(days)))
+      if (store.chainDepth() > 32) store.compact()
+    }
 
+  /** The resolve tick over the fixture lookup tables (demo wiring). */
   def resolveTick(
       spark: SparkSession, cfg: Config,
       peerIds: DataFrame, payloadLookup: DataFrame,
-      now: java.sql.Timestamp): Unit = {
-    val store = new DealStateStore(spark, cfg.storeRoot)
-    val state = store.read()
-    if (!state.isEmpty) {
-      val queue = ResolvePayloadCids.workQueue(state, now, cfg.maxDeals).cache()
-      val queued = queue.count()
-      if (queued > 0) {
-        val merged = ResolvePayloadCids.resolve(
-          state, peerIds, payloadLookup, now, cfg.maxDeals)
-        writeTouchedDays(store, merged, queue)
-        // S12: reference resolve loop telemetry (resolve-payload-cids.js:93-97)
-        val counts = ResolvePayloadCids.countsByState(store.read()).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        new graft.streaming.MetricsSink(spark, cfg.metricsRoot)
-          .record("resolve", counts + ("queued" -> queued), now)
-      }
-      queue.unpersist()
+      now: java.sql.Timestamp): Unit =
+    resolveTickWith(spark, cfg, now) { (state, _) =>
+      ResolvePayloadCids.resolve(state, peerIds, payloadLookup, now, cfg.maxDeals)
     }
-  }
 
   /** The resolve tick with LIVE transports on both lookup legs
     * (reference deployment shape): the peerId dimension comes from
@@ -93,40 +72,52 @@ object DealObserverApp {
       spark: SparkSession, cfg: Config,
       directory: graft.state.PeerIdDirectory,
       pieceIndexerUrl: String,
-      now: java.sql.Timestamp): Unit = {
-    import org.apache.spark.sql.functions.{col, concat, lit}
+      now: java.sql.Timestamp): Unit =
+    resolveTickWith(spark, cfg, now) { (state, queue) =>
+      import org.apache.spark.sql.functions.{col, concat, lit}
+      val miners = queue
+        .select(concat(lit("f0"), col("miner_id")).as("m"))
+        .distinct().collect().map(_.getString(0)).toSeq
+      val dim = directory.refreshed(spark, miners, now.getTime)
+      ResolvePayloadCids.resolveLive(state, dim, None, pieceIndexerUrl, now, cfg.maxDeals)
+    }
+
+  /** One resolve tick: read the days that hold open-resolve rows, cache
+    * the work queue, let `lookup(state, queue)` merge this tick's
+    * lookups into `state`, write back the queue's days, record the
+    * telemetry, release the queue. */
+  private def resolveTickWith(spark: SparkSession, cfg: Config, now: java.sql.Timestamp)(
+      lookup: (DataFrame, DataFrame) => DataFrame): Unit = {
     val store = new DealStateStore(spark, cfg.storeRoot)
-    val state = store.read()
-    if (!state.isEmpty) {
-      val queue = ResolvePayloadCids.workQueue(state, now, cfg.maxDeals).cache()
+    val open = store.openDays(_.openResolve)
+    if (open.isEmpty) return
+    val state = store.read(open)
+    val queue = ResolvePayloadCids.workQueue(state, now, cfg.maxDeals).cache()
+    try {
       val queued = queue.count()
       if (queued > 0) {
-        val miners = queue
-          .select(concat(lit("f0"), col("miner_id")).as("m"))
-          .distinct().collect().map(_.getString(0)).toSeq
-        val dim = directory.refreshed(spark, miners, now.getTime)
-        val merged = ResolvePayloadCids.resolveLive(
-          state, dim, None, pieceIndexerUrl, now, cfg.maxDeals)
-        writeTouchedDays(store, merged, queue)
-        val counts = ResolvePayloadCids.countsByState(store.read()).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        val days = queue.select(DealStateStore.dayCol).distinct().collect().map(_.getInt(0))
+        writeDays(store, lookup(state, queue), days.toSet)
+        // S12: reference resolve loop telemetry (resolve-payload-cids.js:93-97)
         new graft.streaming.MetricsSink(spark, cfg.metricsRoot)
-          .record("resolve", counts + ("queued" -> queued), now)
+          .record("resolve", store.stateCounts() + ("queued" -> queued), now)
       }
-      queue.unpersist()
-    }
+    } finally queue.unpersist()
   }
 
+  /** One submit tick over the days that hold open-submit rows; the new
+    * version rewrites only the days of the deals POSTed this tick. */
   def submitTick(
       spark: SparkSession, cfg: Config,
       post: Seq[Row] => (Long, Long),
       now: java.sql.Timestamp): SubmitDeals.SubmitResult = {
     val store = new DealStateStore(spark, cfg.storeRoot)
-    val state = store.read()
+    val open = store.openDays(_.openSubmit)
+    val state = store.read(open)
+    if (open.isEmpty) return SubmitDeals.SubmitResult(0, 0, 0, state, Set.empty)
     val res = SubmitDeals.submit(state, now, cfg.submitBatchSize, post)
     if (res.submitted > 0) {
-      writeTouchedDays(store, res.newState,
-        res.newState.filter(org.apache.spark.sql.functions.col("submitted_at").isNotNull))
+      writeDays(store, res.newState, res.postedDays)
       // S12: reference submit loop telemetry (spark-api-submit-deals.js:23-25)
       new graft.streaming.MetricsSink(spark, cfg.metricsRoot).record("submit",
         Map("submitted" -> res.submitted, "ingested" -> res.ingested,
@@ -190,7 +181,7 @@ object DealObserverApp {
         rows => { println(s"[submit] POST batch of ${rows.length}"); (rows.length.toLong, 0L) },
         now)
       val store = new DealStateStore(spark, cfg.storeRoot)
-      println(s"[tick $tick] state=${store.read().count()} submitted=${sub.submitted}")
+      println(s"[tick $tick] state=${store.rowCount()} submitted=${sub.submitted}")
       tick += 1
       if (tick < maxTicks) Thread.sleep(cfg.loopIntervalSecs * 1000L)
     }

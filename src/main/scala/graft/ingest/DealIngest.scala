@@ -97,15 +97,29 @@ object DealIngest {
     // tick is a no-op (reference deal-observer.test.js:274-277; the main
     // binary separately asserts the invariant at startup,
     // deal-observer-backend.js:34).
-    val lastStored = storedWatermark match {
-      case Some(wm) => wm.getOrElse(Int.MinValue)
-      case None =>
-        val watermark = existing.agg(max("activated_at_epoch")).collect()(0)
-        if (watermark.isNullAt(0)) Int.MinValue else watermark.getInt(0)
+    val lastStored = storedWatermark.getOrElse {
+      val watermark = existing.agg(max("activated_at_epoch")).collect()(0)
+      if (watermark.isNullAt(0)) None else Some(watermark.getInt(0))
     }
-    val startEpoch = math.max(chainHeadHeight - maxPastEpochs, lastStored + 1)
+    window(chainHeadHeight, lastStored, maxPastEpochs, finalityEpochs) match {
+      case Some((startEpoch, endEpoch)) =>
+        dedupeAgainst(decodeRange(raw, startEpoch, endEpoch), existing)
+      case None => existing.limit(0)
+    }
+  }
+
+  /** The epoch range one observe tick ingests: from just past the
+    * stored watermark (but not before the lookback cap) to the finality
+    * lag; None when empty. Every deal it appends, and every stored row
+    * its dedup can collide with, lies inside it. */
+  def window(
+      chainHeadHeight: Int,
+      lastStored: Option[Int],
+      maxPastEpochs: Int = MaxPastEpochs,
+      finalityEpochs: Int = FinalityEpochs): Option[(Int, Int)] = {
+    val startEpoch = math.max(chainHeadHeight - maxPastEpochs,
+      lastStored.fold(Int.MinValue)(_ + 1))
     val endEpoch = chainHeadHeight - finalityEpochs
-    if (startEpoch > endEpoch) existing.limit(0)
-    else dedupeAgainst(decodeRange(raw, startEpoch, endEpoch), existing)
+    if (startEpoch > endEpoch) None else Some((startEpoch, endEpoch))
   }
 }

@@ -1,8 +1,9 @@
 package graft.state
 
-import graft.model.ActiveDeal
+import graft.model.{ActiveDeal, PayloadRetrievabilityState => St}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.IntegerType
 
 /** Versioned-snapshot state table.
   *
@@ -20,9 +21,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * anti-join prunes to just the touched days, and (b) point lookups by
   * epoch range skip files. At 100 TB this is the difference between
   * rewriting a few partitions and rewriting the world; writers use
-  * dynamic partition overwrite semantics.
+  * dynamic partition overwrite semantics. Every write repartitions by
+  * `epoch_day` first, so each changed day lands as exactly one file.
+  *
+  * `_META` (one per version) carries, besides the table watermark and the
+  * rescan span, per-day counters of the days that version wrote:
+  *   - `dayRows`: row count;
+  *   - `dayStates`: row count per `payload_retrievability_state`;
+  *   - `openResolve`: rows with no payload CID in state NOT_QUERIED or
+  *     UNRESOLVED — a superset of the resolve work queue (no time gate);
+  *   - `openSubmit`: rows with a payload CID and no `submitted_at` — a
+  *     superset of the submit-eligible set (no time gates).
+  * The loops use them to read only the days they can touch
+  * (`read(keep)`), and telemetry sums them instead of scanning. A day
+  * whose `_META` lacks the counters (older layouts) counts as open.
   */
 final class DealStateStore(spark: SparkSession, root: String) {
+  import DealStateStore._
   import org.apache.spark.sql.functions._
 
   private val rootPath = new Path(root)
@@ -30,7 +45,7 @@ final class DealStateStore(spark: SparkSession, root: String) {
   private val latestPtr = new Path(rootPath, "_LATEST")
 
   /** Epochs per Filecoin day (30 s blocks): 2880. */
-  val EpochsPerDay = 2880
+  val EpochsPerDay: Int = DealStateStore.EpochsPerDay
 
   def latestVersion: Option[Long] =
     if (!fs.exists(latestPtr)) recoverLatest()
@@ -55,15 +70,48 @@ final class DealStateStore(spark: SparkSession, root: String) {
   private def emptyState: DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ActiveDeal.schema)
 
-  /** Current state snapshot; empty (with schema) when uninitialized.
-    * Chain-aware: full snapshots resolve to themselves, delta versions
-    * resolve each epoch_day to the newest version that wrote it. */
-  def read(): DataFrame = latestVersion match {
-    case Some(_) =>
-      val (days, _) = resolveChain()
-      if (days.isEmpty) emptyState
-      else spark.read.schema(ActiveDeal.schema).parquet(days.values.toSeq: _*)
-    case None => emptyState
+  /** The state rows of the epoch-days `keep` accepts; empty (with
+    * schema) when none. `read()` is the whole snapshot. Chain-aware:
+    * full snapshots resolve to themselves, delta versions resolve each
+    * epoch_day to the newest version that wrote it. */
+  def read(keep: Int => Boolean = _ => true): DataFrame = {
+    val paths = resolveChain()._1.collect { case (d, (_, p)) if keep(d) => p }
+    if (paths.isEmpty) emptyState
+    else spark.read.schema(ActiveDeal.schema).parquet(paths.toSeq: _*)
+  }
+
+  /** Every resolved epoch-day with its `_META` counters (None: the
+    * writing version predates them). Zero Spark jobs. */
+  def days(): Map[Int, Option[DayStats]] = {
+    val resolved = resolveChain()._1
+    val metas = resolved.values.map(_._1).toSet.map((v: Long) => v -> readMeta(v)).toMap
+    resolved.map { case (d, (v, _)) => d -> metas(v).flatMap(_.days.get(d)) }
+  }
+
+  /** The days whose `open` counter is positive, plus every counter-less
+    * day: the only days a loop gated on that counter can touch. */
+  def openDays(open: DayStats => Long): Set[Int] =
+    days().collect { case (d, s) if s.forall(open(_) > 0) => d }.toSet
+
+  /** Row count per retrievability state, summed from the counters; only
+    * counter-less days are counted by a Spark job. */
+  def stateCounts(): Map[String, Long] = {
+    val ds = days()
+    val unknown = ds.collect { case (d, None) => d }.toSet
+    val scanned =
+      if (unknown.isEmpty) Nil
+      else read(unknown).groupBy("payload_retrievability_state").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toSeq
+    (ds.values.flatten.flatMap(_.byState) ++ scanned)
+      .groupMapReduce(_._1)(_._2)(_ + _)
+  }
+
+  /** Row count, summed from the counters; only counter-less days are
+    * counted by a Spark job. */
+  def rowCount(): Long = {
+    val ds = days()
+    val unknown = ds.collect { case (d, None) => d }.toSet
+    ds.values.flatten.map(_.rows).sum + (if (unknown.isEmpty) 0L else read(unknown).count())
   }
 
   /** Write a full replacement snapshot and flip the pointer. The rescan
@@ -75,12 +123,7 @@ final class DealStateStore(spark: SparkSession, root: String) {
     val prevCeil = latestVersion.flatMap(ceilOf)
     val next = latestVersion.getOrElse(-1L) + 1
     val vdir = new Path(rootPath, s"v=$next")
-    state
-      .withColumn("epoch_day", (col("activated_at_epoch") / EpochsPerDay).cast("int"))
-      .write
-      .partitionBy("epoch_day")
-      .mode("overwrite")
-      .parquet(vdir.toString)
+    writeDays(state, vdir)
     writeMeta(vdir, parentMax = None, floor = prevFloor, ceil = prevCeil)
     flipPointer(next)
     // GC: keep the new snapshot and everything reachable from the
@@ -91,6 +134,17 @@ final class DealStateStore(spark: SparkSession, root: String) {
     stale.foreach(p => fs.delete(p, true))
     next
   }
+
+  /** The partitioned write both writers share: one file per epoch-day
+    * (all of a day's rows go to one task). */
+  private def writeDays(rows: DataFrame, vdir: Path): Unit =
+    rows
+      .withColumn("epoch_day", dayCol)
+      .repartition(col("epoch_day"))
+      .write
+      .partitionBy("epoch_day")
+      .mode("overwrite")
+      .parquet(vdir.toString)
 
   private def chainVersions(from: Option[Long]): Set[Long] = {
     var cur = from.filter(v => fs.exists(new Path(rootPath, s"v=$v")))
@@ -142,12 +196,7 @@ final class DealStateStore(spark: SparkSession, root: String) {
     val next = latestVersion.getOrElse(-1L) + 1
     val parent = latestVersion
     val vdir = new Path(rootPath, s"v=$next")
-    changed
-      .withColumn("epoch_day", (col("activated_at_epoch") / EpochsPerDay).cast("int"))
-      .write
-      .partitionBy("epoch_day")
-      .mode("overwrite")
-      .parquet(vdir.toString)
+    writeDays(changed, vdir)
     parent.foreach { p =>
       val out = fs.create(new Path(vdir, "_PARENT"), true)
       try out.write(p.toString.getBytes("UTF-8")) finally out.close()
@@ -208,63 +257,93 @@ final class DealStateStore(spark: SparkSession, root: String) {
 
   /** Per-version metadata sidecar (`v=N/_META`): the table-level
     * high-watermark (max `activated_at_epoch` across the WHOLE logical
-    * state as of this version) plus per-day row counts of the days this
-    * version wrote. Written at commit time from a column-pruned scan of
-    * just-written files (O(changed) for deltas), so ingest ticks read
-    * the watermark in O(1) instead of `agg(max)` over the table — at
-    * 100 TB that agg is a full state scan every 10 s tick. */
+    * state as of this version), the rescan span, and the per-day
+    * counters of the days this version wrote (see the class doc). All
+    * come from ONE grouped aggregate over the just-written files
+    * (O(changed) for deltas), so ingest ticks read the watermark in O(1)
+    * instead of `agg(max)` over the table — at 100 TB that agg is a
+    * full state scan every 10 s tick — and the loops pick their days
+    * without scanning. */
   private def writeMeta(
       vdir: Path, parentMax: Option[Int], floor: Option[Int] = None,
       ceil: Option[Int] = None): Unit = {
     val written = fs.globStatus(new Path(vdir, "epoch_day=*"))
-    val stats: Array[(Int, Long, Int)] =
+    val st = col("payload_retrievability_state")
+    // (day, state, rows, max epoch, open-resolve rows, open-submit rows)
+    val groups: Array[(Int, String, Long, Int, Long, Long)] =
       if (written.isEmpty) Array.empty
-      else spark.read.parquet(vdir.toString)
-        .groupBy("epoch_day")
-        .agg(count(lit(1)).as("n"), max("activated_at_epoch").as("mx"))
+      else spark.read.schema(WrittenSchema).parquet(vdir.toString)
+        .groupBy(col("epoch_day"), st)
+        .agg(count(lit(1)), max("activated_at_epoch"),
+          count(when(col("payload_cid").isNull && st.isin(St.NotQueried, St.Unresolved), 1)),
+          count(when(col("payload_cid").isNotNull && col("submitted_at").isNull, 1)))
         .collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getInt(2)))
-    val ownMax = if (stats.isEmpty) None else Some(stats.map(_._3).max)
+        .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getInt(3), r.getLong(4),
+          r.getLong(5)))
+    val ownMax = if (groups.isEmpty) None else Some(groups.map(_._4).max)
     val tableMax = (ownMax.toSeq ++ parentMax.toSeq).reduceOption(_ max _)
-    val dayRows = stats.sortBy(_._1)
-      .map { case (d, n, _) => s""""$d":$n""" }.mkString("{", ",", "}")
-    val json =
-      s"""{"maxEpoch":${tableMax.map(_.toString).getOrElse("null")},""" +
-        s""""rescanFloor":${floor.map(_.toString).getOrElse("null")},""" +
-        s""""rescanCeil":${ceil.map(_.toString).getOrElse("null")},""" +
-        s""""dayRows":$dayRows}"""
+    val json = Mapper.createObjectNode()
+    def opt(name: String, v: Option[Int]): Unit =
+      v.fold(json.putNull(name))(x => json.put(name, x))
+    opt("maxEpoch", tableMax)
+    opt("rescanFloor", floor)
+    opt("rescanCeil", ceil)
+    val dayRows = json.putObject("dayRows")
+    val dayStates = json.putObject("dayStates")
+    val openResolve = json.putObject("openResolve")
+    val openSubmit = json.putObject("openSubmit")
+    groups.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (d, gs) =>
+      val k = d.toString
+      dayRows.put(k, gs.map(_._3).sum)
+      val byState = dayStates.putObject(k)
+      gs.sortBy(_._2).foreach(g => byState.put(g._2, g._3))
+      openResolve.put(k, gs.map(_._5).sum)
+      openSubmit.put(k, gs.map(_._6).sum)
+    }
     val out = fs.create(new Path(vdir, "_META"), true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    try out.write(Mapper.writeValueAsBytes(json)) finally out.close()
   }
 
-  /** Outer None = no sidecar (pre-sidecar layout); inner Nones = empty
-    * table / no floor / no ceiling. */
-  private def readMeta(
-      version: Long): Option[(Option[Int], Option[Int], Option[Int])] = {
+  /** None = no sidecar (pre-sidecar layout). */
+  private def readMeta(version: Long): Option[Meta] = {
     val p = new Path(rootPath, s"v=$version/_META")
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
       val node =
-        try new com.fasterxml.jackson.databind.ObjectMapper().readTree(
-          org.apache.commons.io.IOUtils.toByteArray(in))
+        try Mapper.readTree(org.apache.commons.io.IOUtils.toByteArray(in))
         finally in.close()
       def field(name: String): Option[Int] = {
         val f = node.get(name)
         if (f == null || f.isNull) None else Some(f.asInt)
       }
-      Some((field("maxEpoch"), field("rescanFloor"), field("rescanCeil")))
+      // the counters exist only in layouts that write all four maps
+      val counters = Seq("dayRows", "dayStates", "openResolve", "openSubmit")
+        .map(n => Option(node.get(n)))
+      val days: Map[Int, DayStats] = counters match {
+        case Seq(Some(rows), Some(states), Some(res), Some(sub)) =>
+          import scala.jdk.CollectionConverters._
+          rows.properties().asScala.map { e =>
+            val k = e.getKey
+            k.toInt -> DayStats(
+              e.getValue.asLong,
+              states.get(k).properties().asScala.map(s => s.getKey -> s.getValue.asLong).toMap,
+              res.get(k).asLong, sub.get(k).asLong)
+          }.toMap
+        case _ => Map.empty
+      }
+      Some(Meta(field("maxEpoch"), field("rescanFloor"), field("rescanCeil"), days))
     }
   }
 
-  private def metaMaxOf(version: Long): Option[Int] = readMeta(version).flatMap(_._1)
-  private def floorOf(version: Long): Option[Int] = readMeta(version).flatMap(_._2)
-  private def ceilOf(version: Long): Option[Int] = readMeta(version).flatMap(_._3)
+  private def metaMaxOf(version: Long): Option[Int] = readMeta(version).flatMap(_.maxEpoch)
+  private def floorOf(version: Long): Option[Int] = readMeta(version).flatMap(_.floor)
+  private def ceilOf(version: Long): Option[Int] = readMeta(version).flatMap(_.ceil)
 
   /** The raw stored max `activated_at_epoch` (monotone; NOT floor-
     * capped) — receipt detection compares re-deliveries against it. */
   def storedMaxEpoch(): Option[Int] = latestVersion.flatMap { v =>
-    readMeta(v).map(_._1).getOrElse {
+    readMeta(v).map(_.maxEpoch).getOrElse {
       val r = read().agg(max("activated_at_epoch")).collect()(0)
       if (r.isNullAt(0)) None else Some(r.getInt(0))
     }
@@ -317,16 +396,17 @@ final class DealStateStore(spark: SparkSession, root: String) {
 
   /** Resolve the chain: for each epoch_day take the NEWEST version that
     * wrote it; a day tombstoned by a newer version stops resolving in
-    * older ones. Returns the resolved day→path map and the chain length. */
-  private def resolveChain(): (Map[Int, String], Int) = {
-    var days = Map.empty[Int, String]
+    * older ones. Returns the resolved day→(version, path) map and the
+    * chain length. */
+  private def resolveChain(): (Map[Int, (Long, String)], Int) = {
+    var days = Map.empty[Int, (Long, String)]
     var dead = Set.empty[Int]
     var cur = latestVersion
     var depth = 0
     while (cur.isDefined) {
       val v = cur.get
       dayDirs(v).foreach { case (d, p) =>
-        if (!days.contains(d) && !dead.contains(d)) days += d -> p
+        if (!days.contains(d) && !dead.contains(d)) days += d -> (v -> p)
       }
       // this version's tombstones hide the day in ALL older versions
       // (its own day dirs were already considered above, so a later
@@ -345,4 +425,28 @@ final class DealStateStore(spark: SparkSession, root: String) {
   /** Fold the delta chain into one full snapshot (run when the chain
     * outgrows the read-amplification budget). */
   def compact(): Long = write(read())
+}
+
+object DealStateStore {
+  /** Epochs per Filecoin day (30 s blocks): 2880. */
+  val EpochsPerDay = 2880
+
+  /** The partition column: a row's epoch-day. */
+  def dayCol: Column =
+    (org.apache.spark.sql.functions.col("activated_at_epoch") / EpochsPerDay).cast("int")
+
+  /** `dayCol` for one epoch (same truncation). */
+  def dayOf(epoch: Int): Int = epoch / EpochsPerDay
+
+  /** One epoch-day's `_META` counters (see the class doc). */
+  final case class DayStats(
+      rows: Long, byState: Map[String, Long], openResolve: Long, openSubmit: Long)
+
+  private final case class Meta(
+      maxEpoch: Option[Int], floor: Option[Int], ceil: Option[Int], days: Map[Int, DayStats])
+
+  /** The schema of a version directory read with its partition column. */
+  private val WrittenSchema = ActiveDeal.schema.add("epoch_day", IntegerType)
+
+  private val Mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 }

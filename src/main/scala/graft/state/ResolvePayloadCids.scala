@@ -18,8 +18,10 @@ import org.apache.spark.sql.functions._
   * (injected as a DataFrame for tests / batch replays; a `mapPartitions`
   * HTTP client with bounded concurrency in live mode). The state
   * transition is a `when/otherwise` column program; the merge is a
-  * broadcast left join of the ≤maxDeals update set against the full
-  * state — the big side never shuffles.
+  * broadcast left join of the ≤maxDeals update set against the state
+  * it is given — the big side never shuffles. The app's resolve tick
+  * gives only the epoch-days that hold open-resolve rows
+  * (`DealStateStore.openDays`), a superset of the work queue's days.
   */
 object ResolvePayloadCids {
 
@@ -46,7 +48,7 @@ object ResolvePayloadCids {
     * @param payloadLookup  (peerId, pieceCid) → payloadCid lookup table
     * @param now            injected clock (reference threads `now` the
     *                       same way, resolve-payload-cids.js:32)
-    * @return the new full state snapshot
+    * @return `state` with this tick's updates merged in
     */
   def resolve(
       state: DataFrame,
@@ -86,7 +88,12 @@ object ResolvePayloadCids {
     * isolating the failing rows keeps one bad CID from stalling the
     * other ≤ maxDeals−1 resolutions. A clean `PROVIDER_OR_PIECE_NOT_
     * FOUND` miss advances the retry state machine exactly like the
-    * injected-lookup path. */
+    * injected-lookup path.
+    *
+    * The lookups run once, here: their ≤ maxDeals results are collected
+    * into a local table, so the merge never re-runs the HTTP calls and
+    * nothing stays cached. The work queue is not cached here either; a
+    * caller that reuses it (the app's resolve tick) caches it. */
   def resolveLive(
       state: DataFrame,
       peerIdsPrimary: DataFrame,
@@ -96,13 +103,14 @@ object ResolvePayloadCids {
       maxDeals: Int = 1000,
       concurrency: Int = 4,
       retries: Int = 5): DataFrame = {
-    val queue = workQueue(state, now, maxDeals).cache()
+    val queue = workQueue(state, now, maxDeals)
     val pairs = joinPeer(queue, peerIdsPrimary, peerIdsFallback)
       .filter(col("peerId").isNotNull)
       .select(col("peerId"), col("piece_cid").as("pieceCid"))
       .distinct()
-    val looked = graft.sources.PieceIndexer
-      .lookup(pairs, pieceIndexerUrl, concurrency, retries).cache()
+    val remote = graft.sources.PieceIndexer.lookup(pairs, pieceIndexerUrl, concurrency, retries)
+    val looked = state.sparkSession.createDataFrame(
+      java.util.Arrays.asList(remote.collect(): _*), remote.schema)
     val hits = looked.filter(col("payloadCid").isNotNull)
       .select("peerId", "pieceCid", "payloadCid")
     val errored = looked.filter(col("error").isNotNull)

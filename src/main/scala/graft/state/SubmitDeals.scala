@@ -48,7 +48,11 @@ object SubmitDeals {
       EpochFunctions.epochToTimestamp(col("term_start_epoch") + col("term_min"))
         .as("expiresAt"))
 
-  final case class SubmitResult(submitted: Long, ingested: Long, skipped: Long, newState: DataFrame)
+  /** `postedDays`: the epoch-days of the deals POSTed this tick — the
+    * only days whose rows `newState` changed. */
+  final case class SubmitResult(
+      submitted: Long, ingested: Long, skipped: Long, newState: DataFrame,
+      postedDays: Set[Int])
 
   /** One submit tick. `post` is the injected external call (mirrors the
     * reference's DI of `submitEligibleDeals`); it returns
@@ -113,6 +117,8 @@ object SubmitDeals {
           .withColumn("submitted_at", coalesce(col("new_submitted_at"), col("submitted_at")))
           .drop("new_submitted_at")
       }
-    SubmitResult(submitted, ingested, skipped, newState)
+    val epochIdx = ActiveDeal.naturalKey.indexOf("activated_at_epoch")
+    SubmitResult(submitted, ingested, skipped, newState,
+      doneKeys.map(k => DealStateStore.dayOf(k.getInt(epochIdx))).toSet)
   }
 }

@@ -54,7 +54,6 @@ object DealObserverStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val head = chainHead()
         val store = new DealStateStore(batch.sparkSession, storeRoot)
-        val existing = store.read()
         // BEYOND-REFERENCE opt-in (ST4+): a reverted re-delivery carries
         // the ORIGINAL epoch (≤ the stored watermark), so it is decoded
         // from the full batch, not the new-epoch window. The lookback
@@ -87,6 +86,11 @@ object DealObserverStream {
           case (Some(w), Some(lo)) => Some(math.min(w, lo - 1))
           case (w, _) => w
         }
+        // the dedup can only collide with stored rows of the window's
+        // own epochs (the natural key holds the epoch): read those days
+        val window = DealIngest.window(head, effectiveWm, maxPastEpochs, finalityEpochs)
+          .map { case (lo, hi) => (DealStateStore.dayOf(lo), DealStateStore.dayOf(hi)) }
+        val existing = store.read(d => window.exists { case (lo, hi) => lo <= d && d <= hi })
         // dedup against the POST-retraction state: a same-batch
         // replacement carrying the identical natural key must not be
         // anti-joined away by the row it replaces
@@ -102,13 +106,12 @@ object DealObserverStream {
           // (existing rows of those days, minus retracted keys, plus the
           // new rows) — an ingest tick costs O(touched days), never
           // O(table)
-          val dayOf = (col("activated_at_epoch") / store.EpochsPerDay).cast("int")
           val r = appended.unionByName(reverts).agg(
             min("activated_at_epoch").as("lo"), max("activated_at_epoch").as("hi"))
             .collect()(0)
-          val loDay = r.getInt(0) / store.EpochsPerDay
-          val hiDay = r.getInt(1) / store.EpochsPerDay
-          val touched = existing.filter(dayOf.between(loDay, hiDay))
+          val loDay = DealStateStore.dayOf(r.getInt(0))
+          val hiDay = DealStateStore.dayOf(r.getInt(1))
+          val touched = store.read(d => d >= loDay && d <= hiDay)
           // parity default: plain append path, no retraction plan nodes
           val newDays =
             if (nr > 0) DealIngest.retractReverted(touched, reverts)
@@ -120,8 +123,8 @@ object DealObserverStream {
           val emptiedDays: Set[Int] =
             if (nr == 0) Set.empty
             else {
-              val before = touched.select(dayOf.as("d")).distinct()
-              val after = newDays.select(dayOf.as("d")).distinct()
+              val before = touched.select(DealStateStore.dayCol.as("d")).distinct()
+              val after = newDays.select(DealStateStore.dayCol.as("d")).distinct()
               before.join(after, Seq("d"), "left_anti")
                 .collect().map(_.getInt(0)).toSet
             }
