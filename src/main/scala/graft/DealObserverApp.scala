@@ -105,14 +105,15 @@ object DealObserverApp {
     } finally queue.unpersist()
   }
 
-  /** One submit tick over the days that hold open-submit rows; the new
+  /** One submit tick over the days that hold open-submit rows whose
+    * terms have not all ended (`DealStateStore.submitDays`); the new
     * version rewrites only the days of the deals POSTed this tick. */
   def submitTick(
       spark: SparkSession, cfg: Config,
       post: Seq[Row] => (Long, Long),
       now: java.sql.Timestamp): SubmitDeals.SubmitResult = {
     val store = new DealStateStore(spark, cfg.storeRoot)
-    val open = store.openDays(_.openSubmit)
+    val open = store.submitDays(now)
     val state = store.read(open)
     if (open.isEmpty) return SubmitDeals.SubmitResult(0, 0, 0, state, Set.empty)
     val res = SubmitDeals.submit(state, now, cfg.submitBatchSize, post)

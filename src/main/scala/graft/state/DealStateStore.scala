@@ -1,5 +1,6 @@
 package graft.state
 
+import graft.functions.EpochFunctions
 import graft.model.{ActiveDeal, PayloadRetrievabilityState => St}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -31,7 +32,9 @@ import org.apache.spark.sql.types.IntegerType
   *   - `openResolve`: rows with no payload CID in state NOT_QUERIED or
   *     UNRESOLVED — a superset of the resolve work queue (no time gate);
   *   - `openSubmit`: rows with a payload CID and no `submitted_at` — a
-  *     superset of the submit-eligible set (no time gates).
+  *     superset of the submit-eligible set (no time gates);
+  *   - `submitUntil`: the latest `term_start_epoch + term_min` over those
+  *     rows — once `now` passes it, none of them is ever eligible again.
   * The loops use them to read only the days they can touch
   * (`read(keep)`), and telemetry sums them instead of scanning. A day
   * whose `_META` lacks the counters (older layouts) counts as open.
@@ -80,18 +83,35 @@ final class DealStateStore(spark: SparkSession, root: String) {
     else spark.read.schema(ActiveDeal.schema).parquet(paths.toSeq: _*)
   }
 
-  /** Every resolved epoch-day with its `_META` counters (None: the
-    * writing version predates them). Zero Spark jobs. */
-  def days(): Map[Int, Option[DayStats]] = {
+  /** Every resolved epoch-day with the `_META` of the version that wrote it. */
+  private def dayMetas(): Map[Int, Option[Meta]] = {
     val resolved = resolveChain()._1
     val metas = resolved.values.map(_._1).toSet.map((v: Long) => v -> readMeta(v)).toMap
-    resolved.map { case (d, (v, _)) => d -> metas(v).flatMap(_.days.get(d)) }
+    resolved.map { case (d, (v, _)) => d -> metas(v) }
   }
+
+  /** Every resolved epoch-day with its `_META` counters (None: the
+    * writing version predates them). Zero Spark jobs. */
+  def days(): Map[Int, Option[DayStats]] =
+    dayMetas().map { case (d, m) => d -> m.flatMap(_.days.get(d)) }
 
   /** The days whose `open` counter is positive, plus every counter-less
     * day: the only days a loop gated on that counter can touch. */
   def openDays(open: DayStats => Long): Set[Int] =
     days().collect { case (d, s) if s.forall(open(_) > 0) => d }.toSet
+
+  /** The days a submit tick at `now` can touch: the open-submit days,
+    * minus those whose `submitUntil` term end is not after `now` (their
+    * open-submit deals expired unsubmitted and are never eligible). A
+    * day without the field counts as open. Zero Spark jobs. */
+  def submitDays(now: java.sql.Timestamp): Set[Int] = {
+    def live(until: Int): Boolean = (until.toLong * EpochFunctions.BlockDelaySeconds +
+      EpochFunctions.GenesisUnixSeconds) * 1000L > now.getTime
+    dayMetas().collect {
+      case (d, m) if m.flatMap(_.days.get(d)).forall(_.openSubmit > 0) &&
+          m.flatMap(_.submitUntil.get(d)).forall(live) => d
+    }.toSet
+  }
 
   /** Row count per retrievability state, summed from the counters; only
     * counter-less days are counted by a Spark job. */
@@ -269,17 +289,20 @@ final class DealStateStore(spark: SparkSession, root: String) {
       ceil: Option[Int] = None): Unit = {
     val written = fs.globStatus(new Path(vdir, "epoch_day=*"))
     val st = col("payload_retrievability_state")
-    // (day, state, rows, max epoch, open-resolve rows, open-submit rows)
-    val groups: Array[(Int, String, Long, Int, Long, Long)] =
+    val openSubmit = col("payload_cid").isNotNull && col("submitted_at").isNull
+    // (day, state, rows, max epoch, open-resolve rows, open-submit rows,
+    // latest open-submit term end)
+    val groups: Array[(Int, String, Long, Int, Long, Long, Option[Int])] =
       if (written.isEmpty) Array.empty
       else spark.read.schema(WrittenSchema).parquet(vdir.toString)
         .groupBy(col("epoch_day"), st)
         .agg(count(lit(1)), max("activated_at_epoch"),
           count(when(col("payload_cid").isNull && st.isin(St.NotQueried, St.Unresolved), 1)),
-          count(when(col("payload_cid").isNotNull && col("submitted_at").isNull, 1)))
+          count(when(openSubmit, 1)),
+          max(when(openSubmit, col("term_start_epoch") + col("term_min"))))
         .collect()
         .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getInt(3), r.getLong(4),
-          r.getLong(5)))
+          r.getLong(5), if (r.isNullAt(6)) None else Some(r.getInt(6))))
     val ownMax = if (groups.isEmpty) None else Some(groups.map(_._4).max)
     val tableMax = (ownMax.toSeq ++ parentMax.toSeq).reduceOption(_ max _)
     val json = Mapper.createObjectNode()
@@ -291,14 +314,16 @@ final class DealStateStore(spark: SparkSession, root: String) {
     val dayRows = json.putObject("dayRows")
     val dayStates = json.putObject("dayStates")
     val openResolve = json.putObject("openResolve")
-    val openSubmit = json.putObject("openSubmit")
+    val openSubmitRows = json.putObject("openSubmit")
+    val submitUntil = json.putObject("submitUntil")
     groups.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (d, gs) =>
       val k = d.toString
       dayRows.put(k, gs.map(_._3).sum)
       val byState = dayStates.putObject(k)
       gs.sortBy(_._2).foreach(g => byState.put(g._2, g._3))
       openResolve.put(k, gs.map(_._5).sum)
-      openSubmit.put(k, gs.map(_._6).sum)
+      openSubmitRows.put(k, gs.map(_._6).sum)
+      gs.flatMap(_._7).maxOption.foreach(u => submitUntil.put(k, u))
     }
     val out = fs.create(new Path(vdir, "_META"), true)
     try out.write(Mapper.writeValueAsBytes(json)) finally out.close()
@@ -332,7 +357,12 @@ final class DealStateStore(spark: SparkSession, root: String) {
           }.toMap
         case _ => Map.empty
       }
-      Some(Meta(field("maxEpoch"), field("rescanFloor"), field("rescanCeil"), days))
+      val submitUntil: Map[Int, Int] = Option(node.get("submitUntil")).fold(Map.empty[Int, Int]) {
+        n =>
+          import scala.jdk.CollectionConverters._
+          n.properties().asScala.map(e => e.getKey.toInt -> e.getValue.asInt).toMap
+      }
+      Some(Meta(field("maxEpoch"), field("rescanFloor"), field("rescanCeil"), days, submitUntil))
     }
   }
 
@@ -442,8 +472,11 @@ object DealStateStore {
   final case class DayStats(
       rows: Long, byState: Map[String, Long], openResolve: Long, openSubmit: Long)
 
+  /** `submitUntil`: per written day, the latest open-submit term end
+    * epoch (absent: no open-submit row, or an older layout). */
   private final case class Meta(
-      maxEpoch: Option[Int], floor: Option[Int], ceil: Option[Int], days: Map[Int, DayStats])
+      maxEpoch: Option[Int], floor: Option[Int], ceil: Option[Int], days: Map[Int, DayStats],
+      submitUntil: Map[Int, Int])
 
   /** The schema of a version directory read with its partition column. */
   private val WrittenSchema = ActiveDeal.schema.add("epoch_day", IntegerType)

@@ -1,74 +1,78 @@
 package graft.streaming
 
+import graft.functions.VectorExpressions
 import graft.ops.SimilaritySearch
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.LongAccumulator
 
-/** STREAMING ANN index maintenance — the batch build/search split
+/** The LSH codec: each vector is stored once per hash table, keyed by
+  * its (tbl, bucket) — all tables' keys from one fused expression. The
+  * model is the HYPERPLANE FAMILY itself (`dim/planes/seed/tables`),
+  * derived from config, never fit: keys from a drifted family agree only
+  * by chance, so a mismatched writer dies loudly. */
+private[streaming] object LshCodec extends VectorCodec(
+    subdir = "annvecs", marker = "_ANN", kind = "ann", configNames = "dim/planes/seed/tables",
+    codeCols = Seq(StructField("tbl", IntegerType, nullable = false),
+      StructField("bucket", IntegerType, nullable = false)),
+    keyCols = Seq("tbl", "bucket"), driftName = None,
+    oneRowPerId = false, exactRerank = false) {
+
+  override def fromConfig(cfg: Seq[Long]): Option[Marker] = Some(Marker(cfg))
+  def fit(rows: DataFrame, cfg: Seq[Long]): Marker = Marker(cfg)
+  override def rowsPerVector(m: Marker): Int = math.max(1, m.config(3).toInt)
+  def drift(spark: SparkSession, m: Marker): Column = lit(0.0) // never read: no drift signal
+
+  private def family(m: Marker): (Int, Int, Seq[Float]) = {
+    val Seq(dim, planes, seed, tables) = m.config
+    (dim.toInt, planes.toInt,
+      SimilaritySearch.tablePlanesFlat(dim.toInt, planes.toInt, seed, tables.toInt))
+  }
+
+  def encode(rows: DataFrame, m: Marker): DataFrame = {
+    val (dim, planes, flat) = family(m)
+    rows.select(col("neighbor_id"), col("cvec"), col("ver"),
+        posexplode(VectorExpressions.hyperplaneKeys(col("cvec"), flat, planes, dim))
+          .as(Seq("tbl", "bucket")))
+      .select(schema.fieldNames.toSeq.map(col): _*)
+  }
+
+  /** One-bit multi-probe per table: each query's own bucket plus its
+    * `planes` one-bit neighbors. The keys come from the WRITER'S keying
+    * expression evaluated driver-side (HyperplaneKeys.nullSafeEval, the
+    * arithmetic its codegen compiles) — no plan, no job. */
+  def probe(m: Marker, qs: Array[(Long, Array[Float])], nprobe: Int,
+      touches: Option[LongAccumulator]): Probe = {
+    val (dim, planes, flat) = family(m)
+    val hk = VectorExpressions.HyperplaneKeys(
+      org.apache.spark.sql.catalyst.expressions.Literal.create(null, ArrayType(FloatType)),
+      flat, planes, dim)
+    cosineProbe(qs, qs.flatMap { case (qid, v) =>
+      hk.nullSafeEval(new org.apache.spark.sql.catalyst.util.GenericArrayData(v))
+        .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toIntArray
+        .iterator.zipWithIndex.flatMap { case (bucket, tbl) =>
+          (bucket +: (0 until planes).map(b => bucket ^ (1 << b)))
+            .map(bk => (qid, tbl.toLong * (1L << 32) + bk))
+        }
+    })
+  }
+}
+
+/** STREAMING ANN index maintenance — the batch LSH build/search split
   * ([[SimilaritySearch.lshBuild]]/[[SimilaritySearch.lshSearch]]) made
-  * DURABLE and INCREMENTAL on the same store discipline as every
-  * [[DedupStream]] family: per micro-batch, each vector's LSH bucket
-  * keys (all tables, one fused expression) are appended as a
-  * batch-tag-keyed commit under `annvecs/batch=<tag>/ab=<k>`, and a
-  * search probes ONLY the store partitions its query buckets hash
-  * into — O(queries · tables · probes) partitions read, never the
-  * corpus.
-  *
-  * Contracts, shared with the dedup stores:
-  *   - commits are tag-keyed overwrites → foreachBatch replay is
-  *     idempotent; `_MANIFEST`/`_FOLDED` give crash-safe compaction
-  *     ([[compactStore]] — annvecs-specific because L0 commits need
-  *     the partition column re-derived from row content) with no
-  *     resurrection after a replay-behind-compaction;
-  *   - `_PARTS` pins the partition count; an `_ANN` marker pins the
-  *     HYPERPLANE FAMILY (dim/planes/seed/tables) — bucket keys from a
-  *     drifted family agree only by chance, so a mismatched searcher
-  *     or writer dies loudly instead of silently missing neighbors;
-  *   - ids are append-only (re-indexing an id re-writes the same keyed
-  *     rows; the search-side per-pair dedup absorbs the duplicates).
-  *
-  * Scale shape: an upsert writes O(|batch| · tables) rows into ≤
-  * storeParts files; the index never rebuilds. At 100 TB the corpus
-  * side of ANN is exactly this store — bucketed, pruned, compacted —
-  * while queries stay the bounded side ([[searchStore]] enforces the
-  * same maxQueries bound as the batch operators).
+  * DURABLE and INCREMENTAL on the [[VectorStore]] lifecycle: per
+  * micro-batch, each vector's bucket keys (all tables) are appended as a
+  * tag-keyed commit under `annvecs/batch=<tag>`, and a search probes ONLY
+  * the `ab=` partitions its query buckets hash into — O(queries · tables
+  * · probes) partitions read, never the corpus. The `_ANN` marker pins
+  * the hyperplane family; candidate generation, scoring and ranking are
+  * identical to [[SimilaritySearch.lshSearch]].
   *
   * reference analog: none (engine-side training-data surface); the
   * bucketed-LSH-store idea is the standard sharded-ANN-index pattern
   * restated on parquet commits. */
-object AnnStream {
-
-  private[streaming] val vecSchema: StructType = StructType(Seq(
-    StructField("neighbor_id", LongType, nullable = false),
-    StructField("tbl", IntegerType, nullable = false),
-    StructField("bucket", IntegerType, nullable = false),
-    StructField("cvec", ArrayType(FloatType, containsNull = true), nullable = true),
-    StructField("ver", LongType, nullable = false)))
-
-  /** The store's partition int for a (tbl, bucket) key — one long so
-    * both writer and searcher derive it from the same xxhash64. */
-  private def abCol(parts: Column): Column =
-    pmod(xxhash64(col("tbl").cast("long") * lit(1L << 32) + col("bucket")), parts)
-      .cast("int")
-
-  /** Validate-or-claim the `_ANN` hyperplane-family marker. */
-  private def ensureAnnMeta(
-      spark: SparkSession, storeDir: String,
-      dim: Int, planes: Int, seed: Long, tables: Int): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(dir, "_ANN")
-    val want = s"$dim/$planes/$seed/$tables"
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val txt = try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
-      require(txt == want,
-        s"ann store $storeDir was keyed with dim/planes/seed/tables=$txt; " +
-          s"this config is $want — rebuild the store or match the writing config")
-    } else DedupStream.writeNameFile(spark, dir, "_ANN", Set(want))
-  }
+object AnnStream extends VectorStore(LshCodec) {
 
   /** Fold one micro-batch of `(idCol, vecCol)` rows into the store.
     * Returns the batch's (tbl, bucket) occupancy — the hot-bucket
@@ -79,86 +83,11 @@ object AnnStream {
       batchTag: String = java.util.UUID.randomUUID().toString,
       storeParts: Int = 64,
       l0Bound: Int = 1 << 16,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = batch.sparkSession
-    DedupStream.ensureStoreMeta(spark, storeDir, storeParts, family = 0)
-    ensureAnnMeta(spark, storeDir, dim, planes, seed, tables)
-    // manifest-gated from birth: claiming the manifest BEFORE the first
-    // commit means a concurrent reader never sees a half-written dir
-    // through the manifest-less listing fallback — visibility is the
-    // manifest for the store's whole life, not just post-compaction.
-    // (Adopt _SUCCESS-complete dirs if the file is somehow absent on a
-    // non-empty store — same recovery as compactStore.)
-    val root = new org.apache.hadoop.fs.Path(s"$storeDir/annvecs")
-    StoreCommits.ensureManifestClaimed(spark, root)
-    val parts = lit(storeParts.toLong)
-    val planesFlat = SimilaritySearch.tablePlanesFlat(dim, planes, seed, tables)
-    // ONE source scan AND ONE job per upsert (optimization round 18):
-    // the batch count rides the keyed write as an observed metric
-    // instead of a separate persist + count() materialization pass —
-    // the count only ROUTES the commit layout, so it can be read after
-    // the write and the rare bulk batch re-laid out from the commit's
-    // own columnar files (a local re-layout, the price the old shape
-    // paid as the extra cached pass). Tick-path L0 commits are now
-    // written at the SOURCE's parallelism (a handful of part files per
-    // commit instead of exactly one — readStore treats the subdir-less
-    // commit as an always-read leaf either way, and compaction folds
-    // them back into the hash layout).
-    val b = batch
-      .select(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("cvec"))
-    val commitDir = s"$storeDir/annvecs/batch=$batchTag"
-    // one monotonic version per upsert commit (burned BEFORE the commit
-    // is visible — see StoreCommits.nextVersion): the per-id election
-    // that makes re-upsert mean replace, not accrete
-    val ver = StoreCommits.nextVersion(spark, storeDir)
-    val obs = org.apache.spark.sql.Observation()
-    val keyed = b.observe(obs, count(lit(1)).as("n"))
-      .select(col("neighbor_id"), col("cvec"),
-        posexplode(graft.functions.VectorExpressions.hyperplaneKeys(
-          col("cvec"), planesFlat, planes, dim)).as(Seq("tbl", "bucket")))
-      .select(col("neighbor_id"), col("tbl"), col("bucket"), col("cvec"),
-        lit(ver).as("ver"))
-    // L0 commits, the foldLabels idiom (measured 2.2× cheaper at tick
-    // scale there): a tick-sized batch writes a flat unpartitioned
-    // commit instead of a shuffled ≤ storeParts dynamic-partition
-    // write; [[compactStore]] folds accumulated L0s back into the
-    // hash-partitioned layout, so the pruned search path degrades by
-    // at most the commits since the last compaction.
-    val vecBound = l0Bound / math.max(1, tables)
-    if (vecBound <= 0)
-      keyed
-        .withColumn("ab", abCol(parts))
-        .repartition(col("ab")).write.partitionBy("ab")
-        .mode("overwrite").parquet(commitDir)
-    else {
-      keyed.write.mode("overwrite").parquet(commitDir)
-      val nVecs = obs.get("n").asInstanceOf[Long]
-      if (nVecs > vecBound)
-        StoreCommits.relayout(spark, commitDir, vecSchema,
-          _.withColumn("ab", abCol(parts)))
-    }
-    DedupStream.publishCommit(spark,
-      new org.apache.hadoop.fs.Path(s"$storeDir/annvecs"), s"batch=$batchTag")
-    // the occupancy monitor reads back the just-written commit — the
-    // rows are already on disk, so the lazy consumer never re-touches
-    // the (now-unpersisted) batch or its source files
-    // schema supplied: a bare read pays an eager file-listing +
-    // footer-read job per tick just to re-learn the schema we wrote
-    spark.read.schema(vecSchema).parquet(commitDir)
-      .groupBy("tbl", "bucket").agg(count(lit(1)).as("members"))
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    upsert(batch, storeDir, Seq[Long](dim, planes, seed, tables), batchTag,
+      storeParts, l0Bound, idCol, vecCol)
 
-  /** Streaming entry, the [[DedupStream.startClusters]] shape: vector
-    * parquet files land in `vecsPath`, every micro-batch upserts into
-    * the store (deterministic `queryId-batchId` tags → replay-
-    * idempotent), and every `compactEvery` batches the accumulated
-    * commits (L0 singles included) fold back into the partitioned
-    * layout. [[searchStore]] serves queries against the same store
-    * CONCURRENTLY (single WRITER contract; readers are safe any time:
-    * visibility is the manifest, and [[compactStore]] keeps the
-    * generation it replaces on disk until the NEXT compaction, so a
-    * reader whose leaf list was captured against the prior manifest
-    * finishes its lazy read instead of hitting a deleted file). */
+  /** Streaming entry ([[VectorStore.stream]]). */
   def start(
       spark: SparkSession,
       vecsPath: String,
@@ -170,231 +99,28 @@ object AnnStream {
       storeParts: Int = 64,
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.ProcessingTime("10 seconds"),
-      compactEvery: Int = 64): org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.readStream.schema(vecsSchema).parquet(vecsPath)
-      .writeStream
-      .queryName("ann-maintenance")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val qid = Option(batch.sparkSession.sparkContext
-            .getLocalProperty("sql.streaming.queryId")).getOrElse("q")
-        upsertStep(batch, storeDir, dim, planes, seed, tables,
-          batchTag = s"$qid-$batchId", storeParts = storeParts)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          compactStore(spark, storeDir)
+      compactEvery: Int = 64): org.apache.spark.sql.streaming.StreamingQuery =
+    stream(spark, vecsPath, vecsSchema, storeDir, checkpoint, trigger, compactEvery) {
+      (batch, tag) =>
+        upsertStep(batch, storeDir, dim, planes, seed, tables, batchTag = tag,
+          storeParts = storeParts)
         ()
-      }
-      .start()
-  }
+    }
 
-  /** Offline maintenance: fold the accumulated annvecs commits —
-    * BOTH layouts (hash-partitioned and L0 single-file) — into one
-    * hash-partitioned commit, re-deriving `ab` from row content
-    * (which is why [[DedupStream.compact]] does NOT handle this
-    * sub-store: its generic fold restores the partition column via
-    * directory discovery and cannot see inside an L0 leaf). Same
-    * crash-safety as the other compactions: manifest adopted before
-    * anything is written, `_FOLDED` extended before the swap, one
-    * atomic manifest replace, unlisted dirs GC'd. SINGLE-WRITER
-    * contract: run between upserts. */
+  /** Fold the accumulated commits into one hash-partitioned commit
+    * ([[VectorStore.compact]]; an id keeps its latest version's rows,
+    * one per table). */
   def compactStore(spark: SparkSession, storeDir: String,
-      gcGraceMs: Long = StoreCommits.defaultGcGraceMs): Unit = {
-    // pending deletes force a fold even on a single-commit store (the
-    // drop must happen); the applied set is captured BEFORE the fold so
-    // retireTombstones retires exactly what the filter read
-    val applied = StoreCommits.tombstoneCommits(spark, storeDir)
-    // sorted within partitions: tight (tbl, bucket) row-group stats,
-    // so a probe's pushed equality filters skip row groups inside
-    // the compacted partition files
-    StoreCommits.foldAndSwap(
-      spark, storeDir, "annvecs", vecSchema,
-      p => abCol(lit(p)), Seq("tbl", "bucket"),
-      extraWork = applied.nonEmpty,
-      // latest-per-id election (round 17): the fold keeps each id's
-      // max-version rows only — one version per live id afterwards
-      // (tables rows for a multi-table family), the documented
-      // latest-wins contract, zero space cost per update across folds
-      transform = all =>
-        (StoreCommits.electLatest(
-          StoreCommits.minusTombstones(all, spark, storeDir, "neighbor_id"),
-          "neighbor_id"),
-          s"batch=compact-${java.util.UUID.randomUUID()}", None),
-      afterSwap = () => StoreCommits.retireTombstones(
-        spark, storeDir, applied, gcGraceMs = gcGraceMs),
-      gcGraceMs = gcGraceMs)
-  }
+      gcGraceMs: Long = StoreCommits.defaultGcGraceMs): Unit =
+    compact(spark, storeDir, refit = false, gcGraceMs)
 
-  /** Upsert-shaped DELETE: tombstone `ids` out of the store —
-    * [[searchStore]] stops returning them immediately, the next
-    * [[compactStore]] drops their rows physically and retires the
-    * tombstones. See [[StoreCommits.tombstoneStep]] for the full
-    * mask-until-compaction contract (single-writer, like every store
-    * write). */
-  def deleteStep(
-      ids: DataFrame, storeDir: String,
-      batchTag: String = java.util.UUID.randomUUID().toString,
-      idCol: String = "vec_id"): Long =
-    StoreCommits.tombstoneStep(ids, storeDir, idCol, batchTag)
-
-  /** Top-k cosine search against the accumulated store with one-bit
-    * multi-probe per table — identical candidate generation, scoring
-    * and ranking to [[SimilaritySearch.lshSearch]], with the corpus
-    * side replaced by a PRUNED store read (only the probe buckets'
-    * `ab=` partitions of each visible commit are opened).
-    *
-    * Scale shape (round 15): scoring is BUCKET-INDEXED and MAP-SIDE —
-    * a broadcast Map[(tbl, bucket) → probing queries] (each query's
-    * vector shared by reference across its probe entries; nq×dim×4 B
-    * ≤ ~300 MB at the 100k×768 bound, far under Spark's broadcast
-    * limit) feeds one tight mapPartitions pass that deserializes each
-    * stored vector ONCE and scores it against only its own bucket's
-    * queries ([[StoreCommits.cosineSeq]] — bit-identical to the
-    * previous Dedup.cosine pass). Only 24-byte
-    * `(query_id, neighbor_id, cos)` triples cross a shuffle. The r14
-    * shape shuffled the stored vector per CANDIDATE (twice); see the
-    * BENCH_NOTES round-15 search-scale A/B for measured walls. Probe
-    * keys stay expression-derived (hyperplaneKeys — the exact writer
-    * keying), collected as bounded int triples.
-    *
-    * UPSERT CONTRACT (round 17, shared with the three sibling stores):
-    * LATEST-WINS, always. Every upsert commit carries a monotonic
-    * version; search drops superseded rows GLOBALLY before scoring
-    * ([[StoreCommits.minusSuperseded]] — a stale row in a probed
-    * bucket is masked even when the newer version hashed into buckets
-    * this query never opens), and [[compactStore]] keeps only each
-    * id's latest version physically. A re-upserted id is therefore
-    * served from its NEW vector the moment the upsert commits: it
-    * ranks wherever the new vector's buckets land (ANN pruning applies
-    * to the new version like any other row), and the old vector can
-    * never outrank it because its rows are masked. The mask costs one
-    * bounded join sized by upserts-since-compaction (the tombstone
-    * bound); a freshly-compacted store pays nothing. */
+  /** Top-k cosine search with one-bit multi-probe per table
+    * ([[VectorStore.search]]). */
   def searchStore(
       spark: SparkSession, storeDir: String, queries: DataFrame, k: Int,
       maxQueries: Int = 100000,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      // FILTERED search (round 17): a predicate over the store rows
-      // applied to the pruned scan before scoring -- PRE-filtering,
-      // exact top-k over the qualifying subset; see
-      // IvfSqStream.searchStore for the full rationale
-      candidateFilter: Option[Column] = None): DataFrame = {
-    // the searcher derives its keying from the STORE's marker — a
-    // caller cannot probe with a drifted family
-    val dir = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(dir, "_ANN")
-    require(fs.exists(marker), s"not an ann store (no _ANN marker): $storeDir")
-    val in = fs.open(marker)
-    val txt = try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
-    val Array(dim, planes, seed, tables) = txt.split('/').map(_.toLong)
-    // ONE bounded collect doubles as the maxQueries check and the
-    // map-side scoring broadcast
-    val qRows = queries
-      .select(col(idCol).cast("long"), col(vecCol))
-      .limit(maxQueries + 1).collect()
-    require(qRows.length <= maxQueries,
-      s"searchStore got more than $maxQueries query rows — the query side " +
-        "must stay the bounded side; swap sides or raise maxQueries deliberately")
-    import spark.implicits._
-    val vecOf = qRows.map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toMap
-    val planesFlat = SimilaritySearch.tablePlanesFlat(
-      dim.toInt, planes.toInt, seed, tables.toInt)
-    // probe keys from the SAME collected snapshot (a nondeterministic
-    // query source — an upstream sample/limit — must not yield probe
-    // ids absent from vecOf, which a second scan of `queries` could),
-    // evaluated DRIVER-side through the WRITER'S OWN keying expression
-    // (HyperplaneKeys.nullSafeEval — the arithmetic its codegen
-    // compiles): the round-16 shape round-tripped the snapshot through
-    // a local relation + posexplode/explode plan and a SECOND collect
-    // job per search for nq·tables·(planes+1) ints the driver already
-    // held (optimization round 17). One-bit multi-probe masks are the
-    // same `key ^ (1 << b)` ints.
-    val hk = graft.functions.VectorExpressions.HyperplaneKeys(
-      org.apache.spark.sql.catalyst.expressions.Literal.create(
-        null, org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType)),
-      planesFlat, planes.toInt, dim.toInt)
-    val probeRows: Array[(Long, Int, Int)] = qRows.flatMap { r =>
-      val keys = hk.nullSafeEval(
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(vecOf(r.getLong(0))))
-        .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toIntArray
-      val qid = r.getLong(0)
-      keys.iterator.zipWithIndex.flatMap { case (key, tbl) =>
-        Iterator.single((qid, tbl, key)) ++
-          (0 until planes.toInt).iterator.map(b => (qid, tbl, key ^ (1 << b)))
-      }
-    }
-    // bounded by construction: ≤ storeParts distinct partition ints
-    val partsN = StoreCommits.storePartsOf(fs, dir).toLong
-    val wanted = probeRows.map { case (_, t, b) =>
-      math.floorMod(org.apache.spark.sql.catalyst.expressions.XXH64
-        .hashLong(t.toLong * (1L << 32) + b, 42L), partsN).toInt
-    }.toSet
-    // tombstoned ids and SUPERSEDED versions (a later re-upsert of the
-    // same id — the global mask, see the contract above) never reach
-    // scoring. ONE commit-set resolution feeds scan + mask (round-18):
-    // both observe the same generation.
-    val annRoot = new org.apache.hadoop.fs.Path(s"$storeDir/annvecs")
-    val commits = DedupStream.visibleCommits(fs, annRoot)
-    val scan = DedupStream.readStoreFrom(
-      spark, commits, vecSchema,
-      excludeTag = " none ", partCol = "ab", wanted = wanted, fs0 = fs)
-    // scan parallelism probed on the BARE scan (no exchange → no AQE
-    // stage materialization; see StoreCommits.rebalanceBy)
-    val scanParts = scan.rdd.getNumPartitions
-    val stored0 = StoreCommits.minusSuperseded(
-      StoreCommits.minusTombstones(scan, spark, storeDir, "neighbor_id"),
-      spark, storeDir, "annvecs", "neighbor_id", commits = Some(commits))
-    // pre-filter: scoring reads only the filtered relation
-    val stored = candidateFilter.fold(stored0)(stored0.filter)
-    // BUCKET-INDEXED map-side scoring (the IvfPqStream ADC shape):
-    // broadcast Map[(tbl«32|bucket) → probing queries] with each
-    // query's vector shared by reference across its probe entries;
-    // one tight mapPartitions pass deserializes each stored vector
-    // ONCE and scores only its own bucket's queries (cosineSeq is
-    // bit-identical to the previous Dedup.cosine pass). Rejected
-    // shapes, both measured at nq = 10k against a 160k store: the r14
-    // per-candidate vector shuffle (1316 s), a map-side cosine UDF on
-    // the join output (280 s — per-PAIR array conversion +
-    // single-task scan). The per-(query, neighbor) dedup (multi-table
-    // × multi-probe × re-indexed-commit duplicates score identically,
-    // so max() is the dedup) shuffles 24-byte rows.
-    val byKey: Map[Long, Array[(Long, Array[Float])]] =
-      probeRows.groupBy { case (_, t, b) => t.toLong * (1L << 32) + b }
-        .map { case (k, arr) =>
-          k -> arr.map { case (qid, _, _) => (qid, vecOf(qid)) }
-        }
-    val qBc = spark.sparkContext.broadcast(byKey)
-    // per-query bounded top-k fold inside the scoring loop, second-level
-    // fold, and ONE bounded ranking window — the shared exchange-bound
-    // tail ([[StoreCommits.scoreAndRank]]): multi-table × multi-probe
-    // duplicates dedup INSIDE the bounded structure, no per-pair tuple
-    // ever allocates, and only ≤ nq·k survivors per partition reach
-    // the exchange
-    StoreCommits.scoreAndRank(
-      StoreCommits.rebalanceBy(
-          stored.select(col("neighbor_id"), col("tbl"), col("bucket"), col("cvec")),
-          scanParts)
-        .as[(Long, Int, Int, Array[Float])],
-      k, "cos") { (it, acc) =>
-      val qc = qBc.value
-      val none = Array.empty[(Long, Array[Float])]
-      it.foreach { case (nid, tbl, bucket, cvec) =>
-        val entries = qc.getOrElse(tbl.toLong * (1L << 32) + bucket, none)
-        var i = 0
-        while (i < entries.length) {
-          val qid = entries(i)._1
-          if (qid != nid)
-            acc.insert(qid, nid, StoreCommits.cosineSeq(entries(i)._2, cvec))
-          i += 1
-        }
-      }
-    }
-  }
-
-  /** The store's live vectors as a corpus relation — see
-    * [[StoreCommits.liveVectors]]. */
-  def liveVectors(spark: SparkSession, storeDir: String): org.apache.spark.sql.DataFrame =
-    StoreCommits.liveVectors(spark, storeDir, "annvecs", vecSchema)
+      candidateFilter: Option[Column] = None): DataFrame =
+    search(spark, storeDir, queries, k, nprobe = 0, rerank = 0, maxQueries, idCol, vecCol,
+      touches = None, candidateFilter)
 }

@@ -1,169 +1,46 @@
 package graft.streaming
 
-import graft.ops.{Dedup, SimilaritySearch}
+import graft.ops.SimilaritySearch
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.LongAccumulator
 
-/** STREAMING IVF-PQ index maintenance — the COMPRESSED tier
-  * ([[SimilaritySearch.ivfPqBuild]]/[[SimilaritySearch.ivfPqSearch]]:
-  * coarse inverted lists + residual product-quantization codes + ADC +
-  * exact re-rank, the layout a memory-bound 100 TB deployment actually
-  * serves from) made durable and incremental on the
-  * [[AnnStream]]/[[IvfStream]] store discipline. The `_IVFPQ` marker
-  * pins BOTH data-fit quantizers (coarse centroids and the m per-
-  * subspace codebooks — codeword ORDER is load-bearing because stored
-  * codes index into it, so the marker preserves file order); the first
-  * upsert fits them from a bounded unit-normalized sample and pins,
-  * every later upsert assigns + residual-encodes under the pinned
-  * models as a tag-keyed commit.
-  *
-  * Search improves on the batch operator's shape: where
-  * [[SimilaritySearch.ivfPqSearch]] scans the WHOLE code relation and
-  * filters probed cells per row, the store search opens ONLY the
-  * probed cells' `ab=` partitions (the code columns are pruned at the
-  * parquet scan — the ADC pass never reads the stored vectors), then
-  * re-ranks the shortlist exactly against vectors fetched from those
-  * same partitions. Queries stay the bounded side (maxQueries, the
-  * module contract).
-  *
-  * Store contracts shared with the siblings: tag-keyed overwrite
-  * commits, manifest-gated visibility from the FIRST commit,
-  * `_MANIFEST`/`_FOLDED` compaction with one-generation GC grace,
-  * `_PARTS` pinning, single writer / readers-any-time, and
-  * refit-as-compaction via the two-phase `_IVFPQ.pending` promote
-  * (the [[IvfStream]] crash-window discipline: new models take effect
-  * exactly when the manifest points at the re-encoded commit).
-  *
-  * reference analog: none (engine-side training-data surface); the
-  * design restates the standard IVF-PQ serving layout (inverted lists
-  * + ADC) on parquet commits. */
-object IvfPqStream {
+/** The IVF-PQ codec: coarse cells plus `m` product-quantization codes
+  * of the unit vector's residual, one per subspace. The `_IVFPQ` marker
+  * pins `dim/nlist/m/seed`, the `coarse` centroids and the per-subspace
+  * codebooks `cb0`…`cb<m-1>` — codeword ORDER is load-bearing, stored
+  * codes index into it (a degenerate sample can fit fewer than 16
+  * codewords, hence labeled rows). The drift value is a row's
+  * reconstruction error (`mean_code_err`). */
+private[streaming] object PqCodec extends VectorCodec(
+    subdir = "pqvecs", marker = "_IVFPQ", kind = "ivf-pq", configNames = "dim/nlist/m/seed",
+    codeCols = Seq(VectorCodec.cell, StructField("codes", BinaryType, nullable = true)),
+    keyCols = Seq("cell"), driftName = Some("mean_code_err"),
+    oneRowPerId = true, exactRerank = true) {
 
-  private[streaming] val vecSchema: StructType = StructType(Seq(
-    StructField("neighbor_id", LongType, nullable = false),
-    StructField("cell", IntegerType, nullable = false),
-    StructField("codes", BinaryType, nullable = true),
-    StructField("cvec", ArrayType(FloatType, containsNull = true), nullable = true),
-    StructField("ver", LongType, nullable = false)))
+  private def codebook(m: Marker): Array[Array[Array[Double]]] =
+    Array.tabulate(m.config(2).toInt)(j => m.rowsOf(s"cb$j"))
 
-  private def abCol(parts: Column): Column =
-    pmod(xxhash64(col("cell").cast("long")), parts).cast("int")
-
-  private def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Pinned dual quantizer. Rendered as labeled lines so the
-    * variable-count codebooks (degenerate data can fit < 16 codewords)
-    * parse unambiguously and codeword order round-trips. */
-  private[streaming] final case class PqMeta(
-      dim: Int, nlist: Int, m: Int, seed: Long,
-      coarse: Array[Array[Double]],
-      codebook: Array[Array[Array[Double]]],
-      target: Option[String],
-      baseline: Option[Double] = None,
-      occ: Option[Array[Double]] = None) {
-    def render: String = {
-      val head = s"$dim/$nlist/$m/$seed" + target.fold("")(t => s"/$t")
-      val cs = coarse.map(c => "coarse " + c.mkString(","))
-      val cb = codebook.zipWithIndex.flatMap { case (words, j) =>
-        words.map(wd => s"cb$j " + wd.mkString(","))
-      }
-      ((head +: (cs ++ cb)) ++ baseline.map(b => s"baseline $b")
-        ++ occ.map(o => "occupancy " + o.mkString(","))).mkString("\n")
-    }
-  }
-
-  private def parseMeta(text: String): PqMeta = {
-    val lines = text.split('\n').map(_.trim).filter(_.nonEmpty)
-    val h = lines.head.split('/')
-    val m = h(2).toInt
-    val coarse = lines.tail.filter(_.startsWith("coarse "))
-      .map(_.stripPrefix("coarse ").split(',').map(java.lang.Double.parseDouble))
-    val cb = Array.tabulate(m) { j =>
-      lines.tail.filter(_.startsWith(s"cb$j "))
-        .map(_.stripPrefix(s"cb$j ").split(',').map(java.lang.Double.parseDouble))
-    }
-    PqMeta(h(0).toInt, h(1).toInt, m, h(3).toLong, coarse, cb,
-      if (h.length > 4) Some(h(4)) else None,
-      lines.tail.find(_.startsWith("baseline "))
-        .map(s => java.lang.Double.parseDouble(s.stripPrefix("baseline "))),
-      lines.tail.find(_.startsWith("occupancy "))
-        .map(_.stripPrefix("occupancy ").split(',')
-          .map(java.lang.Double.parseDouble)))
-  }
-
-  /** The effective dual quantizer for the current visible state — the
-    * crash-healing two-phase read ([[StoreCommits.effectivePinned]]):
-    * a pending whose target IS visible is the post-swap truth (writers
-    * finish the promotion); a pending whose target is not visible is a
-    * dead letter. */
-  private def effectiveMeta(
-      spark: SparkSession, storeDir: String, promote: Boolean): Option[PqMeta] =
-    StoreCommits.effectivePinned[PqMeta](
-      spark, storeDir, "pqvecs", "_IVFPQ",
-      parseMeta, _.render, _.target, _.copy(target = None), promote)
-
-  /** The pinned (effective) coarse centroids — monitoring / complexity
-    * probes (the [[IvfStream.loadCentroids]] accessor for this tier). */
-  def loadCoarse(spark: SparkSession, storeDir: String): Array[Array[Double]] =
-    effectiveMeta(spark, storeDir, promote = false)
-      .getOrElse(throw new IllegalArgumentException(
-        s"not an ivf-pq store (no _IVFPQ marker): $storeDir")).coarse
-
-  private[streaming] def unitOf(v: Seq[Float]): Array[Double] = {
-    var s = 0.0
-    v.foreach(x => s += x.toDouble * x)
-    val inv = if (s == 0) 0.0 else 1.0 / math.sqrt(s)
-    Array.tabulate(v.length)(i => v(i) * inv)
-  }
-
-  private def nearestCell(cs: Array[Array[Double]], v: Array[Double]): Int = {
-    var best = 0; var bd = Double.MaxValue; var ci = 0
-    while (ci < cs.length) {
-      var d = 0.0; var t = 0
-      while (t < v.length) { val df = v(t) - cs(ci)(t); d += df * df; t += 1 }
-      if (d < bd) { bd = d; best = ci }
-      ci += 1
-    }
-    best
-  }
-
-  /** Fit BOTH quantizers from a bounded deterministic unit-normalized
-    * sample (the [[SimilaritySearch.ivfPqBuild]] recipe verbatim, so
-    * the pinned models match what the batch operator would have fit). */
-  private def fitMeta(
-      rows: DataFrame, dim: Int, nlist: Int, m: Int, seed: Long): PqMeta = {
-    val sub = dim / m
-    val sample: Array[Array[Double]] = rows
-      .orderBy(xxhash64(col("neighbor_id")).asc, col("neighbor_id").asc)
-      .limit(20000).select("cvec")
-      .collect().map(r => unitOf(r.getSeq[Float](0)))
+  /** Both quantizers from the bounded unit-normalized sample (the
+    * [[SimilaritySearch.ivfPqBuild]] recipe). Baseline: the sample's
+    * mean code-reconstruction error under the just-fitted models. */
+  def fit(rows: DataFrame, cfg: Seq[Long]): Marker = {
+    val Seq(dim, nlist, mL, seed) = cfg
+    val m = mL.toInt
+    val sub = dim.toInt / m
+    val sample = VectorCodec.sampleOf(rows).map(VectorCodec.unitOf)
     require(sample.nonEmpty, "ivf-pq store: first upsert must carry vectors")
-    val coarse = SimilaritySearch.localKMeans(sample, nlist, iters = 12, seed = seed)
-    // fit-time cell OCCUPANCY baseline (round 17) — the anchor for the
-    // occupancy-drift signal (StoreCommits.occupancyTv)
-    val cellCounts = new Array[Long](coarse.length)
-    val residuals = sample.map { v =>
-      val ci = nearestCell(coarse, v)
-      cellCounts(ci) += 1
-      val cc = coarse(ci)
-      Array.tabulate(dim)(t => v(t) - cc(t))
-    }
-    val codebook: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
+    val (coarse, residuals, occ) = VectorCodec.fitCells(sample, nlist.toInt, iters = 12, seed)
+    val cb = Array.tabulate(m) { j =>
       SimilaritySearch.localKMeans(
         residuals.map(r => java.util.Arrays.copyOfRange(r, j * sub, (j + 1) * sub)),
         16, iters = 12, seed = seed + 1 + j)
     }
-    // fit-time drift BASELINE: the sample's mean code-reconstruction
-    // error under the just-fitted models — what the tick monitor's
-    // mean_code_err is compared against by [[maybeRefitOnDrift]]
-    var accErr = 0.0
-    residuals.foreach { res =>
+    val err = residuals.map { res =>
       var d = 0.0; var j = 0
       while (j < m) {
-        val words = codebook(j)
+        val words = cb(j)
         var bestD = Double.MaxValue; var ci = 0
         while (ci < words.length) {
           var e = 0.0; var t = 0
@@ -173,40 +50,27 @@ object IvfPqStream {
         }
         d += bestD; j += 1
       }
-      accErr += math.sqrt(d)
+      math.sqrt(d)
     }
-    PqMeta(dim, nlist, m, seed, coarse, codebook, None,
-      Some(if (residuals.isEmpty) 0.0 else accErr / residuals.length),
-      Some(cellCounts.map(_.toDouble / sample.length)))
+    Marker(cfg, None, coarse.toSeq.map("coarse" -> _) ++
+      cb.toSeq.zipWithIndex.flatMap { case (words, j) => words.map(s"cb$j" -> _) },
+      Some(err.sum / residuals.length), Some(occ))
   }
 
-  private def requireConfig(mt: PqMeta, dim: Int, nlist: Int, m: Int,
-      seed: Long, storeDir: String): Unit =
-    require(mt.dim == dim && mt.nlist == nlist && mt.m == m && mt.seed == seed,
-      s"ivf-pq store $storeDir was pinned with dim/nlist/m/seed=" +
-        s"${mt.dim}/${mt.nlist}/${mt.m}/${mt.seed}; this config is " +
-        s"$dim/$nlist/$m/$seed — rebuild the store or match the writing config")
-
-  /** Assign + residual-encode rows under pinned models: one pass,
-    * emits (neighbor_id, cell, codes, raw cvec, ver) — the version
-    * column rides through (upserts stamp it before encoding; a refit
-    * re-encodes already-elected rows and preserves theirs). */
-  private def encodeRows(
-      rows: DataFrame, mt: PqMeta): DataFrame = {
+  /** Assign + residual-encode in one pass; versions ride through. */
+  def encode(rows: DataFrame, mk: Marker): DataFrame = {
     val spark = rows.sparkSession
     import spark.implicits._
-    val sub = mt.dim / mt.m
-    val m = mt.m
-    val coarseBc = spark.sparkContext.broadcast(mt.coarse)
-    val cbBc = spark.sparkContext.broadcast(mt.codebook)
+    val m = mk.config(2).toInt
+    val sub = mk.config(0).toInt / m
+    val bc = spark.sparkContext.broadcast((mk.rowsOf("coarse"), codebook(mk)))
     rows.select(col("neighbor_id"), col("cvec"), col("ver"))
       .as[(Long, Seq[Float], Long)]
       .mapPartitions { it =>
-        val cs = coarseBc.value
-        val cb = cbBc.value
+        val (cs, cb) = bc.value
         it.map { case (id, vf, ver) =>
-          val v = unitOf(vf)
-          val cell = nearestCell(cs, v)
+          val v = VectorCodec.unitOf(vf)
+          val cell = VectorCodec.nearest(cs, v)
           val cc = cs(cell)
           val codes = Array.tabulate(m) { j =>
             var best = 0; var bestD = Double.MaxValue
@@ -227,107 +91,12 @@ object IvfPqStream {
       }.toDF("neighbor_id", "cell", "codes", "cvec", "ver")
   }
 
-  /** Fold one micro-batch into the store: fit-and-pin on first
-    * contact, assign + residual-encode under the pinned models, write
-    * as a tag-keyed commit (L0 single file for tick-sized batches).
-    * Returns the per-cell `(cell, members, mean_code_err)` of the
-    * written commit — the DRIFT MONITOR for the compressed tier:
-    * mean_code_err is the L2 distance between each unit vector and its
-    * quantized reconstruction (centroid + decoded residual codewords);
-    * a rising mean means the pinned models no longer fit the data and
-    * a `compactStore(refit = true)` is due. */
-  def upsertStep(
-      batch: DataFrame, storeDir: String, dim: Int,
-      nlist: Int = 16, m: Int = 8, seed: Long = 37L,
-      batchTag: String = java.util.UUID.randomUUID().toString,
-      storeParts: Int = 64,
-      l0Bound: Int = 1 << 16,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    require(dim % m == 0, "m must divide dim")
-    val spark = batch.sparkSession
-    DedupStream.ensureStoreMeta(spark, storeDir, storeParts, family = 0)
-    val root = new org.apache.hadoop.fs.Path(s"$storeDir/pqvecs")
-    // manifest-gated from birth: StoreCommits.ensureManifestClaimed
-    StoreCommits.ensureManifestClaimed(spark, root)
-    val commitDir = s"$storeDir/pqvecs/batch=$batchTag"
-    // one monotonic version per upsert commit (burned before visibility
-    // — StoreCommits.nextVersion): the per-id latest-wins election
-    val ver = StoreCommits.nextVersion(spark, storeDir)
-    val wrote = effectiveMeta(spark, storeDir, promote = true) match {
-      case Some(mt) =>
-        // PINNED store — the steady tick path: ONE source scan and ONE
-        // job (optimization round 18, the IvfStream shape): the batch
-        // count rides the encoded write as an observed metric instead
-        // of a separate persist + count() pass; layout routing and the
-        // empty-tick bail read it AFTER the write
-        requireConfig(mt, dim, nlist, m, seed, storeDir)
-        val obs = org.apache.spark.sql.Observation()
-        val keyed = encodeRows(
-          batch.select(col(idCol).cast("long").as("neighbor_id"),
-              col(vecCol).as("cvec"))
-            .observe(obs, count(lit(1)).as("n"))
-            .withColumn("ver", lit(ver)), mt)
-        if (l0Bound <= 0) {
-          keyed.withColumn("ab", abCol(lit(storeParts.toLong)))
-            .repartition(col("ab")).write.partitionBy("ab")
-            .mode("overwrite").parquet(commitDir)
-        } else
-          keyed.write.mode("overwrite").parquet(commitDir)
-        val nVecs = obs.get("n").asInstanceOf[Long]
-        if (nVecs == 0L) {
-          fs(spark, new org.apache.hadoop.fs.Path(commitDir))
-            .delete(new org.apache.hadoop.fs.Path(commitDir), true)
-          false
-        } else {
-          if (l0Bound > 0 && nVecs > l0Bound)
-            StoreCommits.relayout(spark, commitDir, vecSchema,
-              _.withColumn("ab", abCol(lit(storeParts.toLong))))
-          true
-        }
-      case None =>
-        // FIRST CONTACT — fit-and-pin needs the batch twice (quantizer
-        // sample + encode), so this one-time path keeps the
-        // persist + count materialization
-        val b = batch
-          .select(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("cvec"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val nVecs = b.count()
-          if (nVecs == 0L) false else {
-            val x = fitMeta(b, dim, nlist, m, seed)
-            StoreCommits.writeTextFile(spark,
-              new org.apache.hadoop.fs.Path(storeDir), "_IVFPQ", x.render)
-            val keyed = encodeRows(b.withColumn("ver", lit(ver)), x)
-            if (nVecs <= l0Bound)
-              keyed.coalesce(1).write.mode("overwrite").parquet(commitDir)
-            else
-              keyed.withColumn("ab", abCol(lit(storeParts.toLong)))
-                .repartition(col("ab")).write.partitionBy("ab")
-                .mode("overwrite").parquet(commitDir)
-            true
-          }
-        } finally { b.unpersist(blocking = false); () }
-    }
-    if (!wrote)
-      // EMPTY micro-batch (a replay edge can deliver one first): no
-      // commit, no fit — an unpinned store stays unpinned until the
-      // first non-empty tick instead of crashing the quantizer sample
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("cell", IntegerType, nullable = false),
-          StructField("members", LongType, nullable = false),
-          StructField("mean_code_err", DoubleType, nullable = true))))
-    DedupStream.publishCommit(spark, root, s"batch=$batchTag")
-    // drift monitor off the just-written commit (on-disk rows): the
-    // reconstruction error of each stored code under the pins
-    val mtPinned = effectiveMeta(spark, storeDir, promote = false).get
-    val coarseBc = spark.sparkContext.broadcast(mtPinned.coarse)
-    val cbBc = spark.sparkContext.broadcast(mtPinned.codebook)
-    val sub = dim / m
+  def drift(spark: SparkSession, mk: Marker): Column = {
+    val sub = mk.config(0).toInt / mk.config(2).toInt
+    val bc = spark.sparkContext.broadcast((mk.rowsOf("coarse"), codebook(mk)))
     val codeErr = udf { (cell: Int, codes: Array[Byte], v: Seq[Float]) =>
-      val cs = coarseBc.value; val cb = cbBc.value
-      val u = unitOf(v); val cc = cs(cell)
+      val (cs, cb) = bc.value
+      val u = VectorCodec.unitOf(v); val cc = cs(cell)
       var d = 0.0; var j = 0
       while (j < codes.length) {
         val wd = cb(j)(codes(j) & 0xff)
@@ -340,56 +109,87 @@ object IvfPqStream {
       }
       math.sqrt(d)
     }
-    spark.read.schema(vecSchema).parquet(commitDir)
-      .groupBy("cell").agg(count(lit(1)).as("members"),
-        avg(codeErr(col("cell"), col("codes"), col("cvec"))).as("mean_code_err"))
+    codeErr(col("cell"), col("codes"), col("cvec"))
   }
 
-  /** Threshold-triggered drift remediation — the consumer of the
-    * [[upsertStep]] monitor (the [[IvfStream.maybeRefitOnDrift]] shape
-    * for the compressed tier): compare the tick's member-weighted mean
-    * code-reconstruction error against `factor ×` the PINNED fit-time
-    * baseline and fire `compactStore(refit = true)` when exceeded.
-    * Returns true iff a refit fired; no-ops when `factor <= 0`, on an
-    * empty tick, or on a pre-baseline marker. The refit re-pins models
-    * AND baseline; `cooldownCommits` bounds the refit rate while a
-    * persistent shift's mixture converges — the
-    * [[IvfStream.maybeRefitOnDrift]] rationale. */
-  def maybeRefitOnDrift(
-      spark: SparkSession, storeDir: String, monitor: DataFrame,
-      factor: Double, cooldownCommits: Int = 8,
-      occTvMax: Double = 0.35): Boolean = {
-    if (factor <= 0 && occTvMax <= 0) return false
-    // ONE bounded collect (nlist rows) feeds both signals: the error
-    // ratio AND the round-17 occupancy-TV OR-trigger — the signal that
-    // sees regime shifts the reconstruction-error monitor is blind to
-    // on weak-structure corpora (sf1 rehearsal: ×3 scale+offset reads
-    // error ratio ~1.1 here but occupancy TV ~0.9)
-    val rows = monitor
-      .select(col("cell"), col("members"), col("mean_code_err")).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
-    val n = rows.iterator.map(_._2).sum
-    if (n == 0L) return false
-    val meta = effectiveMeta(spark, storeDir, promote = false)
-    val tickMean = rows.iterator.map(t => t._2 * t._3).sum / n
-    val errDrifted = factor > 0 &&
-      meta.flatMap(_.baseline).exists(b => tickMean > factor * b)
-    val occDrifted = occTvMax > 0 && meta.flatMap(_.occ).exists(o =>
-      StoreCommits.occupancyTv(rows.map(t => (t._1, t._2)).toSeq, o)
-        .exists(_ > occTvMax))
-    if (!errDrifted && !occDrifted) return false
-    if (StoreCommits.visibleCommitCount(spark,
-        s"$storeDir/pqvecs") < cooldownCommits) return false
-    compactStore(spark, storeDir, refit = true)
-    true
+  override def scoreCols: Seq[Column] = Seq(col("neighbor_id"), col("cell"), col("codes"))
+
+  /** ADC through the cell-indexed, dim-independent per-query lookup
+    * tables of [[SimilaritySearch.adcByCell]] (a stored row visits only
+    * the queries probing its cell); its keys are the probed cells.
+    * `touches` counts exactly those per-row query visits. */
+  def probe(mk: Marker, qs: Array[(Long, Array[Float])], nprobe: Int,
+      touches: Option[LongAccumulator]): Probe = {
+    val m = mk.config(2).toInt
+    val byCell = SimilaritySearch.adcByCell(qs.map { case (q, v) => (q, VectorCodec.unitOf(v)) },
+      mk.rowsOf("coarse"), codebook(mk), nprobe)
+    Probe(byCell.keySet.map(_.toLong), { (scan, cap) =>
+      val spark = scan.sparkSession
+      import spark.implicits._
+      val qBc = spark.sparkContext.broadcast(byCell)
+      StoreCommits.scoreAndRank(scan.as[(Long, Int, Array[Byte])], cap, "adc") { (it, acc) =>
+        val qc = qBc.value
+        val none = Array.empty[(Long, Double, Array[Array[Double]])]
+        it.foreach { case (nid, cell, codes) =>
+          val entries = qc.getOrElse(cell, none)
+          touches.foreach(_.add(entries.length))
+          var i = 0
+          while (i < entries.length) {
+            val (qid, cellDot, table) = entries(i)
+            if (qid != nid) {
+              var s = cellDot; var j = 0
+              while (j < m) { s += table(j)(codes(j) & 0xff); j += 1 }
+              acc.insert(qid, nid, s)
+            }
+            i += 1
+          }
+        }
+      }
+    })
+  }
+}
+
+/** STREAMING IVF-PQ index maintenance — the COMPRESSED tier
+  * ([[SimilaritySearch.ivfPqBuild]]/[[SimilaritySearch.ivfPqSearch]]:
+  * coarse inverted lists + residual product-quantization codes + ADC +
+  * exact re-rank, the layout a memory-bound 100 TB deployment serves
+  * from) made durable and incremental on the [[VectorStore]] lifecycle.
+  * Where the batch operator scans the WHOLE code relation and filters
+  * probed cells per row, the store search opens ONLY the probed cells'
+  * `ab=` partitions with the code columns pruned at the parquet scan
+  * (the ADC pass never reads the stored vectors), then re-ranks the
+  * shortlist exactly against vectors from those same partitions.
+  *
+  * reference analog: none (engine-side training-data surface); the
+  * design restates the standard IVF-PQ serving layout (inverted lists
+  * + ADC) on parquet commits. */
+object IvfPqStream extends RefitStore(PqCodec) {
+
+  /** The pinned (effective) coarse centroids — monitoring / complexity
+    * probes (the [[IvfStream.loadCentroids]] accessor for this tier). */
+  def loadCoarse(spark: SparkSession, storeDir: String): Array[Array[Double]] =
+    pinned(spark, storeDir).rowsOf("coarse")
+
+  /** Fold one micro-batch into the store ([[VectorStore.upsert]]).
+    * Returns the per-cell `(cell, members, mean_code_err)` of the written
+    * commit — the DRIFT MONITOR for the compressed tier: the L2 distance
+    * between each unit vector and its quantized reconstruction
+    * (centroid + decoded residual codewords). */
+  def upsertStep(
+      batch: DataFrame, storeDir: String, dim: Int,
+      nlist: Int = 16, m: Int = 8, seed: Long = 37L,
+      batchTag: String = java.util.UUID.randomUUID().toString,
+      storeParts: Int = 64,
+      l0Bound: Int = 1 << 16,
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    require(dim % m == 0, "m must divide dim")
+    upsert(batch, storeDir, Seq[Long](dim, nlist, m, seed), batchTag, storeParts, l0Bound,
+      idCol, vecCol)
   }
 
-  /** Streaming entry, the [[AnnStream.start]]/[[IvfStream.start]]
-    * shape: vector parquet files land in `vecsPath`, each micro-batch
-    * upserts (deterministic tags → replay-idempotent), every
-    * `compactEvery` batches the commits fold back into the partitioned
-    * layout. Pre-pin the models by copying an `_IVFPQ` marker into the
-    * store dir, or let the first batch fit. */
+  /** Streaming entry ([[RefitStore.refittingStream]]). Pre-pin the
+    * models by copying an `_IVFPQ` marker into the store dir, or let the
+    * first batch fit. */
   def start(
       spark: SparkSession,
       vecsPath: String,
@@ -402,249 +202,29 @@ object IvfPqStream {
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.ProcessingTime("10 seconds"),
       compactEvery: Int = 64,
-      // default 1.5 — the [[IvfStream.start]] rationale: the round-16
-      // DriftRehearsal puts stationary mean-code-err ratios at ≤ ~1.1
-      // and a joint-distribution shift at ≥ ~2×; 1.5 clears the noise
-      // band and fires ONCE on a persistent shift (refit re-pins the
-      // baseline). 0 disables.
+      // default 1.5 — the [[IvfStream.start]] rationale (stationary
+      // mean-code-err ratios ≤ ~1.1, a joint shift ≥ ~2×). 0 disables.
       refitDriftFactor: Double = 1.5,
-      // the [[IvfStream.start]] refit-rate bound
       refitCooldownCommits: Int = 8,
-      // occupancy-TV OR-trigger (round 17): fires on cell-histogram
-      // shifts the code-error ratio misses (sf1 rehearsal: stationary
-      // ≤ ~0.1, shifted ~0.9). 0 disables.
-      refitOccupancyTv: Double = 0.35): org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.readStream.schema(vecsSchema).parquet(vecsPath)
-      .writeStream
-      .queryName("ivfpq-maintenance")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val qid = Option(batch.sparkSession.sparkContext
-            .getLocalProperty("sql.streaming.queryId")).getOrElse("q")
-        val monitor = upsertStep(batch, storeDir, dim, nlist, m, seed,
-          batchTag = s"$qid-$batchId", storeParts = storeParts)
-        maybeRefitOnDrift(spark, storeDir, monitor, refitDriftFactor,
-          refitCooldownCommits, refitOccupancyTv)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          compactStore(spark, storeDir)
-        ()
-      }
-      .start()
-  }
+      // occupancy-TV OR-trigger (sf1 rehearsal: stationary ≤ ~0.1,
+      // shifted ~0.9 where the error ratio reads ~1.1). 0 disables.
+      refitOccupancyTv: Double = 0.35): org.apache.spark.sql.streaming.StreamingQuery =
+    refittingStream(spark, vecsPath, vecsSchema, storeDir, checkpoint, trigger, compactEvery,
+      refitDriftFactor, refitCooldownCommits, refitOccupancyTv) { (batch, tag) =>
+      upsertStep(batch, storeDir, dim, nlist, m, seed, batchTag = tag, storeParts = storeParts)
+    }
 
-  /** Fold commits into one hash-partitioned commit; with
-    * `refit = true`, the drift remediation: refit BOTH quantizers on a
-    * bounded whole-store sample, re-encode every vector, and swap via
-    * the two-phase `_IVFPQ.pending` promote. Same one-generation GC
-    * grace and crash windows as [[IvfStream.compactStore]].
-    * SINGLE-WRITER contract. */
-  def compactStore(
-      spark: SparkSession, storeDir: String, refit: Boolean = false,
-      gcGraceMs: Long = StoreCommits.defaultGcGraceMs): Unit = {
-    // pending deletes force a fold (tombstoned rows must drop) and a
-    // refit fits on the SURVIVORS — the filter runs first
-    val applied = StoreCommits.tombstoneCommits(spark, storeDir)
-    StoreCommits.foldAndSwap(
-      spark, storeDir, "pqvecs", vecSchema,
-      p => abCol(lit(p)), Seq("cell"),
-      extraWork = refit || applied.nonEmpty,
-      transform = { all0 =>
-        // latest-per-id election (round 17): exactly one version per
-        // live id survives the fold (latest-wins made physical; the
-        // row-per-update space leak closed); a refit re-encodes the
-        // elected rows with their versions preserved
-        val all = StoreCommits.electLatestOne(
-          StoreCommits.minusTombstones(all0, spark, storeDir, "neighbor_id"),
-          "neighbor_id")
-        val mt = effectiveMeta(spark, storeDir, promote = true)
-          .getOrElse(throw new IllegalArgumentException(
-            s"not an ivf-pq store (no _IVFPQ marker): $storeDir"))
-        if (refit) {
-          val m2 = fitMeta(all, mt.dim, mt.nlist, mt.m, mt.seed)
-          val target = s"batch=refit-${java.util.UUID.randomUUID()}"
-          (encodeRows(all, m2), target,
-            Some("_IVFPQ.pending" -> m2.copy(target = Some(target)).render))
-        } else (all, s"batch=compact-${java.util.UUID.randomUUID()}", None)
-      },
-      // finish the promotion staged above, then retire applied deletes
-      afterSwap = () => {
-        effectiveMeta(spark, storeDir, promote = true)
-        StoreCommits.retireTombstones(
-          spark, storeDir, applied, gcGraceMs = gcGraceMs)
-      },
-      gcGraceMs = gcGraceMs,
-      // electLatestOne fold: stamp the one-row-per-id marker the
-      // compacted fast paths require (round-18 ADVICE)
-      oneRowPerId = true)
-  }
-
-  /** Upsert-shaped DELETE: tombstone `ids` out of the store — see
-    * [[AnnStream.deleteStep]] / [[StoreCommits.tombstoneStep]] for the
-    * mask-until-compaction contract. */
-  def deleteStep(
-      ids: DataFrame, storeDir: String,
-      batchTag: String = java.util.UUID.randomUUID().toString,
-      idCol: String = "vec_id"): Long =
-    StoreCommits.tombstoneStep(ids, storeDir, idCol, batchTag)
-
-  /** Top-k search: probed-cell ADC shortlist + exact cosine re-rank,
-    * with BOTH stages pruned to the probed cells' `ab=` partitions —
-    * the ADC pass reads only (id, cell, codes) columns (the stored
-    * vectors never cross that scan), the re-rank fetches vectors by id
-    * from the same pruned partitions. Candidate generation and scoring
-    * are identical to [[SimilaritySearch.ivfPqSearch]], including its
-    * CELL-INDEXED broadcast ([[SimilaritySearch.adcByCell]]): a stored
-    * row iterates only the queries probing its cell, and the broadcast
-    * carries dim-independent LUTs, never raw query vectors. `touches`,
-    * when supplied, counts exactly those per-row query visits — the
+  /** Top-k search: probed-cell ADC shortlist of `max(rerank, k)` + exact
+    * cosine re-rank ([[VectorStore.search]]). Candidate generation and
+    * scoring are identical to [[SimilaritySearch.ivfPqSearch]].
+    * `touches`, when supplied, counts the per-row query visits — the
     * complexity probe the specs assert against. */
   def searchStore(
       spark: SparkSession, storeDir: String, queries: DataFrame, k: Int,
       nprobe: Int = 4, rerank: Int = 32, maxQueries: Int = 100000,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      touches: Option[org.apache.spark.util.LongAccumulator] = None,
-      // FILTERED search (round 17): a predicate over the store rows
-      // applied to the pruned scan before scoring and the re-rank --
-      // PRE-filtering, exact top-k over the qualifying subset; see
-      // IvfSqStream.searchStore for the full rationale
-      candidateFilter: Option[Column] = None): DataFrame = {
-    import spark.implicits._
-    val dir = new org.apache.hadoop.fs.Path(storeDir)
-    require(fs(spark, dir).exists(new org.apache.hadoop.fs.Path(dir, "_IVFPQ")),
-      s"not an ivf-pq store (no _IVFPQ marker): $storeDir")
-    val parts = StoreCommits.storePartsOf(fs(spark, dir), dir)
-    // ONE bounded collect serves the maxQueries check AND the
-    // broadcast state (the AnnStream/IvfStream shape — the separate
-    // limit-count pre-pass was a second scan of the query source)
-    val qRows = queries
-      .select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qv"))
-      .limit(maxQueries + 1).collect()
-    require(qRows.length <= maxQueries,
-      s"searchStore got more than $maxQueries query rows — the query side " +
-        "must stay the bounded side; swap sides or raise maxQueries deliberately")
-    val qs = qRows.map(r => (r.getLong(0), unitOf(r.getSeq[Float](1))))
-    // CONSISTENT SNAPSHOT bracket (the IvfStream.searchStore idiom):
-    // the dual quantizer and the commit list are separate files; the
-    // stored codes only decode against the models that ENCODED them,
-    // so both reads must land in one generation — re-read the
-    // effective models after the (eager) leaf listing, retry on drift.
-    var mt = effectiveMeta(spark, storeDir, promote = false)
-      .getOrElse(throw new IllegalArgumentException(
-        s"not an ivf-pq store (no _IVFPQ marker): $storeDir"))
-    var stored: DataFrame = null
-    var probedOf: Map[Long, Set[Int]] = Map.empty
-    // ONE commit-set resolution per search (round-18 ADVICE): the scan,
-    // the supersede mask, and the compacted fast path below must all
-    // observe the SAME generation — a fold landing between separate
-    // manifest reads could flip the fast path on while `stored` still
-    // holds a delta snapshot with per-id duplicates
-    var commits: Seq[org.apache.hadoop.fs.FileStatus] = Nil
-    val fsv = fs(spark, dir)
-    val pqRoot = new org.apache.hadoop.fs.Path(s"$storeDir/pqvecs")
-    var attempt = 0
-    var consistent = false
-    while (!consistent) {
-      val dimL = mt.dim
-      val coarse = mt.coarse
-      probedOf = qs.map { case (qid, qv) =>
-        qid -> coarse.indices.sortBy { ci =>
-          var d = 0.0; var t = 0
-          while (t < dimL) { val df = qv(t) - coarse(ci)(t); d += df * df; t += 1 }
-          d
-        }.take(nprobe).toSet
-      }.toMap
-      val wanted = probedOf.values.flatten.toSet.map((c: Int) =>
-        math.floorMod(org.apache.spark.sql.catalyst.expressions.XXH64
-          .hashLong(c.toLong, 42L), parts.toLong).toInt)
-      commits = DedupStream.visibleCommits(fsv, pqRoot)
-      stored = DedupStream.readStoreFrom(
-        spark, commits, vecSchema,
-        excludeTag = " none ", partCol = "ab", wanted = wanted, fs0 = fsv)
-      val after = effectiveMeta(spark, storeDir, promote = false).get
-      if (after.render == mt.render) consistent = true
-      else {
-        mt = after
-        attempt += 1
-        require(attempt < 8, s"ivf-pq store $storeDir models kept moving " +
-          "during search planning — is a writer refitting in a loop?")
-      }
-    }
-    // scan parallelism probed on the BARE scan, before the masks (no
-    // exchange → no AQE stage materialization; StoreCommits.rebalanceBy)
-    val scanParts = stored.rdd.getNumPartitions
-    // tombstoned ids and superseded versions never reach the ADC pass
-    // NOR the re-rank (both stages derive from this relation; the
-    // supersede mask is global — the AnnStream.searchStore contract)
-    stored = StoreCommits.minusSuperseded(
-      StoreCommits.minusTombstones(stored, spark, storeDir, "neighbor_id"),
-      spark, storeDir, "pqvecs", "neighbor_id", commits = Some(commits))
-    // pre-filter: ADC pass and re-rank both read the filtered relation
-    stored = candidateFilter.fold(stored)(stored.filter)
-    val m = mt.m
-    // cell-indexed, dim-independent broadcast LUTs (the batch
-    // operator's shape — SimilaritySearch.adcByCell); probe selection
-    // inside matches the probedOf loop above, same mt generation
-    val qBc = spark.sparkContext.broadcast(
-      SimilaritySearch.adcByCell(qs, mt.coarse, mt.codebook, nprobe))
-    // ADC over codes only — column pruning keeps cvec out of this scan;
-    // rebalance unfolds the small-file single-task packing (codes are
-    // ~(12+m) B/row, so the repartition ships single-digit MB). The
-    // fold + bounded-window tail is the shared
-    // [[StoreCommits.scoreAndRank]]: no per-pair tuple, only shortlist
-    // survivors reach the exchange.
-    val shortlist = StoreCommits.scoreAndRank(
-      StoreCommits.rebalanceBy(
-          stored.select(col("neighbor_id"), col("cell"), col("codes")),
-          scanParts)
-        .as[(Long, Int, Array[Byte])],
-      math.max(rerank, k), "adc") { (it, acc) =>
-      val qc = qBc.value
-      val none = Array.empty[(Long, Double, Array[Array[Double]])]
-      it.foreach { case (nid, cell, codes) =>
-        val entries = qc.getOrElse(cell, none)
-        touches.foreach(_.add(entries.length))
-        var i = 0
-        while (i < entries.length) {
-          val (qid, cellDot, table) = entries(i)
-          if (qid != nid) {
-            var s = cellDot; var j = 0
-            while (j < m) { s += table(j)(codes(j) & 0xff); j += 1 }
-            acc.insert(qid, nid, s)
-          }
-          i += 1
-        }
-      }
-    }.select("query_id", "neighbor_id")
-    // exact re-rank (shared tail — StoreCommits.exactRerank): vectors
-    // come from the SAME pruned partitions (a shortlist member's cell
-    // is probed by construction), one DETERMINISTIC latest vector per
-    // id (StoreCommits.latestVecs — max over (ver, cvec), replacing
-    // the nondeterministic first() the round-16 verdict flagged).
-    // Queries come from the ALREADY-COLLECTED bounded snapshot as a
-    // local relation (optimization round 18): re-deriving them from the
-    // caller's DataFrame re-planned and re-scanned the query source per
-    // search — and, under a nondeterministic source, could even serve
-    // the re-rank different rows than the probes
-    val qRaw = spark.createDataFrame(
-      qRows.toSeq.map(r => (r.getLong(0), r.getSeq[Float](1))))
-      .toDF("query_id", "qvec")
-    // compacted-only fast path (optimization round 17; gated on the
-    // SAME adopted commit set + the electLatestOne marker since round
-    // 18): the fold already elected one row per live id, so the
-    // election is the identity — the re-rank reads the pruned
-    // projection directly
-    val vecs =
-      if (StoreCommits.compactedOnly(fsv, commits))
-        stored.select(col("neighbor_id"), col("cvec"))
-      else StoreCommits.latestVecs(
-        stored.select(col("neighbor_id"), col("ver"), col("cvec")))
-    StoreCommits.exactRerank(shortlist, vecs, qRaw, k)
-  }
-
-  /** The store's live vectors as a corpus relation — see
-    * [[StoreCommits.liveVectors]]. */
-  def liveVectors(spark: SparkSession, storeDir: String): org.apache.spark.sql.DataFrame =
-    StoreCommits.liveVectors(spark, storeDir, "pqvecs", vecSchema,
-      multiRowPerId = false)
+      touches: Option[LongAccumulator] = None,
+      candidateFilter: Option[Column] = None): DataFrame =
+    search(spark, storeDir, queries, k, nprobe, rerank, maxQueries, idCol, vecCol,
+      touches, candidateFilter)
 }

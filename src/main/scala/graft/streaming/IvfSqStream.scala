@@ -1,318 +1,90 @@
 package graft.streaming
 
-import graft.ops.{Dedup, SimilaritySearch}
+import graft.ops.SimilaritySearch
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.LongAccumulator
 
-/** STREAMING IVF-SQ8 index maintenance — the SCALAR-QUANTIZED tier
-  * ([[SimilaritySearch.ivfSqBuild]]/[[SimilaritySearch.ivfSqSearch]]:
-  * coarse inverted lists + one-byte-per-dimension trained-range
-  * residual codes + exact re-rank; 4× smaller than raw float32 at
-  * near-exact recall — the memory rung between [[IvfStream]]'s flat
-  * vectors and [[IvfPqStream]]'s m-byte codes) made durable and
-  * incremental on the shared store discipline. The `_IVFSQ` marker
-  * pins the data-fit model (coarse centroids + the per-dimension
-  * residual bounds vmin/vstep — stored codes only decode against the
-  * bounds that encoded them, so the marker is load-bearing the same
-  * way IVF-PQ's codebook order is); the first upsert fits from a
-  * bounded unit-normalized sample and pins, every later upsert
-  * assigns + scalar-encodes under the pinned model as a tag-keyed
-  * commit.
-  *
-  * Search opens ONLY the probed cells' `ab=` partitions with the code
-  * columns pruned at the parquet scan, scores through the per-query
-  * linear-coefficient broadcast ([[SimilaritySearch.sqByCell]]:
-  * `base + Σ code(d)·s1(d)`, one multiply-add per dimension, no
-  * decode buffer), folds bounded per-query shortlists in place, and
-  * exact-re-ranks from vectors in the same pruned partitions.
-  *
-  * Store contracts shared with the siblings: tag-keyed overwrite
-  * commits, manifest-gated visibility from the FIRST commit,
-  * `_MANIFEST`/`_FOLDED` compaction with one-generation GC grace,
-  * `_PARTS` pinning, tombstone deletes, drift-triggered refit with
-  * the cooldown bound, single writer / readers-any-time, and
-  * refit-as-compaction via the two-phase `_IVFSQ.pending` promote.
-  *
-  * reference analog: none (engine-side training-data surface); the
-  * design restates the standard IVF-SQ serving layout on parquet
-  * commits. */
-object IvfSqStream {
+/** The IVF-SQ8 codec: coarse cells plus one byte per dimension of the
+  * unit vector's residual, quantized over per-dimension trained bounds.
+  * The `_IVFSQ` marker pins `dim/nlist/seed`, the `coarse` centroids and
+  * the `vmin`/`vstep` bound rows — stored codes decode only against the
+  * bounds that encoded them. The drift value is a row's reconstruction
+  * error (`mean_code_err`). */
+private[streaming] object SqCodec extends VectorCodec(
+    subdir = "sqvecs", marker = "_IVFSQ", kind = "ivf-sq", configNames = "dim/nlist/seed",
+    codeCols = Seq(VectorCodec.cell, StructField("code", BinaryType, nullable = true)),
+    keyCols = Seq("cell"), driftName = Some("mean_code_err"),
+    oneRowPerId = true, exactRerank = true) {
 
-  private[streaming] val vecSchema: StructType = StructType(Seq(
-    StructField("neighbor_id", LongType, nullable = false),
-    StructField("cell", IntegerType, nullable = false),
-    StructField("code", BinaryType, nullable = true),
-    StructField("cvec", ArrayType(FloatType, containsNull = true), nullable = true),
-    StructField("ver", LongType, nullable = false)))
-
-  private def abCol(parts: Column): Column =
-    pmod(xxhash64(col("cell").cast("long")), parts).cast("int")
-
-  private def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Pinned scalar-quantizer model: coarse centroids + per-dimension
-    * residual bounds. Labeled lines (the [[IvfPqStream.PqMeta]]
-    * rendering discipline) so the matrix and the two bound rows parse
-    * unambiguously and double values round-trip bit-exactly through
-    * the decimal text (Double.toString is shortest-round-trip). */
-  private[streaming] final case class SqMeta(
-      dim: Int, nlist: Int, seed: Long,
-      coarse: Array[Array[Double]],
-      vmin: Array[Double],
-      vstep: Array[Double],
-      target: Option[String],
-      baseline: Option[Double] = None,
-      occ: Option[Array[Double]] = None) {
-    def render: String = {
-      val head = s"$dim/$nlist/$seed" + target.fold("")(t => s"/$t")
-      val cs = coarse.map(c => "coarse " + c.mkString(","))
-      val bounds = Seq("vmin " + vmin.mkString(","),
-        "vstep " + vstep.mkString(","))
-      ((head +: (cs ++ bounds)) ++ baseline.map(b => s"baseline $b")
-        ++ occ.map(o => "occupancy " + o.mkString(","))).mkString("\n")
+  /** One residual coordinate → its 8-bit code: round + clamp
+    * ([[SimilaritySearch.ivfSqBuild]]'s arithmetic). */
+  private def q8(x: Double, mn: Double, st: Double): Int =
+    if (st == 0.0) 0
+    else {
+      val raw = math.round((x - mn) / st).toInt
+      if (raw < 0) 0 else if (raw > 255) 255 else raw
     }
-  }
 
-  private def parseMeta(text: String): SqMeta = {
-    val lines = text.split('\n').map(_.trim).filter(_.nonEmpty)
-    val h = lines.head.split('/')
-    def vecOf(prefix: String): Array[Double] =
-      lines.tail.find(_.startsWith(prefix + " ")).get
-        .stripPrefix(prefix + " ").split(',').map(java.lang.Double.parseDouble)
-    SqMeta(h(0).toInt, h(1).toInt, h(2).toLong,
-      lines.tail.filter(_.startsWith("coarse "))
-        .map(_.stripPrefix("coarse ").split(',').map(java.lang.Double.parseDouble)),
-      vecOf("vmin"), vecOf("vstep"),
-      if (h.length > 3) Some(h(3)) else None,
-      lines.tail.find(_.startsWith("baseline "))
-        .map(s => java.lang.Double.parseDouble(s.stripPrefix("baseline "))),
-      lines.tail.find(_.startsWith("occupancy "))
-        .map(_.stripPrefix("occupancy ").split(',')
-          .map(java.lang.Double.parseDouble)))
-  }
-
-  private def effectiveMeta(
-      spark: SparkSession, storeDir: String, promote: Boolean): Option[SqMeta] =
-    StoreCommits.effectivePinned[SqMeta](
-      spark, storeDir, "sqvecs", "_IVFSQ",
-      parseMeta, _.render, _.target, _.copy(target = None), promote)
-
-  /** The pinned (effective) coarse centroids — monitoring / complexity
-    * probes. */
-  def loadCoarse(spark: SparkSession, storeDir: String): Array[Array[Double]] =
-    effectiveMeta(spark, storeDir, promote = false)
-      .getOrElse(throw new IllegalArgumentException(
-        s"not an ivf-sq store (no _IVFSQ marker): $storeDir")).coarse
-
-  private def nearestCell(cs: Array[Array[Double]], v: Array[Double]): Int = {
-    var best = 0; var bd = Double.MaxValue; var ci = 0
-    while (ci < cs.length) {
-      var d = 0.0; var t = 0
-      while (t < v.length) { val df = v(t) - cs(ci)(t); d += df * df; t += 1 }
-      if (d < bd) { bd = d; best = ci }
-      ci += 1
-    }
-    best
-  }
-
-  /** Fit the model from a bounded deterministic unit-normalized sample
-    * (the [[SimilaritySearch.ivfSqBuild]] recipe verbatim, so the
-    * pinned model matches what the batch operator would have fit):
-    * coarse centroids, then per-dimension min/max of the sample's
-    * residuals → 255-step bounds. Baseline = the sample's mean
-    * reconstruction error under the just-fitted model (the tick
-    * monitor's comparison anchor). */
-  private def fitMeta(
-      rows: DataFrame, dim: Int, nlist: Int, seed: Long): SqMeta = {
-    val sample: Array[Array[Double]] = rows
-      .orderBy(xxhash64(col("neighbor_id")).asc, col("neighbor_id").asc)
-      .limit(20000).select("cvec")
-      .collect().map(r => IvfPqStream.unitOf(r.getSeq[Float](0)))
+  /** The [[SimilaritySearch.ivfSqBuild]] recipe on the bounded
+    * unit-normalized sample: coarse centroids, then the per-dimension
+    * residual min/max → 255-step bounds. Baseline: the sample's mean
+    * reconstruction error under the just-fitted model. */
+  def fit(rows: DataFrame, cfg: Seq[Long]): Marker = {
+    val dim = cfg(0).toInt
+    val sample = VectorCodec.sampleOf(rows).map(VectorCodec.unitOf)
     require(sample.nonEmpty, "ivf-sq store: first upsert must carry vectors")
-    val coarse = SimilaritySearch.localKMeans(sample, nlist, iters = 12, seed = seed)
+    val (coarse, residuals, occ) =
+      VectorCodec.fitCells(sample, cfg(1).toInt, iters = 12, seed = cfg(2))
     val vmin = Array.fill(dim)(Double.MaxValue)
     val vmax = Array.fill(dim)(Double.MinValue)
-    // fit-time cell OCCUPANCY baseline (round 17): the sample's
-    // assignment histogram, the anchor the occupancy-drift signal
-    // compares tick histograms against (StoreCommits.occupancyTv)
-    val cellCounts = new Array[Long](coarse.length)
-    val residuals = sample.map { v =>
-      val ci = nearestCell(coarse, v)
-      cellCounts(ci) += 1
-      val cc = coarse(ci)
-      val r = Array.tabulate(dim)(t => v(t) - cc(t))
+    residuals.foreach { r =>
       var t = 0
       while (t < dim) {
         if (r(t) < vmin(t)) vmin(t) = r(t)
         if (r(t) > vmax(t)) vmax(t) = r(t)
         t += 1
       }
-      r
     }
     val vstep = Array.tabulate(dim)(t => (vmax(t) - vmin(t)) / 255.0)
-    var accErr = 0.0
-    residuals.foreach { r =>
+    val err = residuals.map { r =>
       var d = 0.0; var t = 0
       while (t < dim) {
-        val q =
-          if (vstep(t) == 0.0) 0
-          else {
-            val raw = math.round((r(t) - vmin(t)) / vstep(t)).toInt
-            if (raw < 0) 0 else if (raw > 255) 255 else raw
-          }
-        val diff = (vmin(t) + q * vstep(t)) - r(t)
+        val diff = (vmin(t) + q8(r(t), vmin(t), vstep(t)) * vstep(t)) - r(t)
         d += diff * diff; t += 1
       }
-      accErr += math.sqrt(d)
+      math.sqrt(d)
     }
-    SqMeta(dim, nlist, seed, coarse, vmin, vstep, None,
-      Some(if (residuals.isEmpty) 0.0 else accErr / residuals.length),
-      Some(cellCounts.map(_.toDouble / sample.length)))
+    Marker(cfg, None, coarse.toSeq.map("coarse" -> _) ++ Seq("vmin" -> vmin, "vstep" -> vstep),
+      Some(err.sum / residuals.length), Some(occ))
   }
 
-  private def requireConfig(mt: SqMeta, dim: Int, nlist: Int,
-      seed: Long, storeDir: String): Unit =
-    require(mt.dim == dim && mt.nlist == nlist && mt.seed == seed,
-      s"ivf-sq store $storeDir was pinned with dim/nlist/seed=" +
-        s"${mt.dim}/${mt.nlist}/${mt.seed}; this config is " +
-        s"$dim/$nlist/$seed — rebuild the store or match the writing config")
-
-  /** Assign + scalar-encode rows under the pinned model: one pass,
-    * emits (neighbor_id, cell, code, raw cvec, ver) — versions ride
-    * through (upserts stamp before encoding, refits preserve the
-    * elected rows'). Encode arithmetic is
-    * [[SimilaritySearch.ivfSqBuild]]'s verbatim (round + clamp). */
-  private def encodeRows(rows: DataFrame, mt: SqMeta): DataFrame = {
+  /** Assign + scalar-encode in one pass; versions ride through. */
+  def encode(rows: DataFrame, m: Marker): DataFrame = {
     val spark = rows.sparkSession
     import spark.implicits._
-    val coarseBc = spark.sparkContext.broadcast(mt.coarse)
-    val minBc = spark.sparkContext.broadcast(mt.vmin)
-    val stepBc = spark.sparkContext.broadcast(mt.vstep)
+    val bc = spark.sparkContext.broadcast(
+      (m.rowsOf("coarse"), m.rowsOf("vmin").head, m.rowsOf("vstep").head))
     rows.select(col("neighbor_id"), col("cvec"), col("ver"))
       .as[(Long, Seq[Float], Long)]
       .mapPartitions { it =>
-        val cs = coarseBc.value
-        val mn = minBc.value
-        val st = stepBc.value
+        val (cs, mn, st) = bc.value
         it.map { case (id, vf, ver) =>
-          val v = IvfPqStream.unitOf(vf)
-          val cell = nearestCell(cs, v)
+          val v = VectorCodec.unitOf(vf)
+          val cell = VectorCodec.nearest(cs, v)
           val cc = cs(cell)
-          val code = new Array[Byte](mn.length)
-          var t = 0
-          while (t < mn.length) {
-            val q =
-              if (st(t) == 0.0) 0
-              else {
-                val raw = math.round((v(t) - cc(t) - mn(t)) / st(t)).toInt
-                if (raw < 0) 0 else if (raw > 255) 255 else raw
-              }
-            code(t) = q.toByte
-            t += 1
-          }
-          (id, cell, code, vf, ver)
+          (id, cell, Array.tabulate(mn.length)(t => q8(v(t) - cc(t), mn(t), st(t)).toByte), vf, ver)
         }
       }.toDF("neighbor_id", "cell", "code", "cvec", "ver")
   }
 
-  /** Fold one micro-batch into the store: fit-and-pin on first
-    * contact, assign + scalar-encode under the pinned model, write as
-    * a tag-keyed commit (L0 single file for tick-sized batches).
-    * Returns the per-cell `(cell, members, mean_code_err)` of the
-    * written commit — the drift monitor (L2 distance between each unit
-    * vector and its quantized reconstruction); consumed by
-    * [[maybeRefitOnDrift]]. */
-  def upsertStep(
-      batch: DataFrame, storeDir: String, dim: Int,
-      nlist: Int = 16, seed: Long = 41L,
-      batchTag: String = java.util.UUID.randomUUID().toString,
-      storeParts: Int = 64,
-      l0Bound: Int = 1 << 16,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = batch.sparkSession
-    DedupStream.ensureStoreMeta(spark, storeDir, storeParts, family = 0)
-    val root = new org.apache.hadoop.fs.Path(s"$storeDir/sqvecs")
-    StoreCommits.ensureManifestClaimed(spark, root)
-    val commitDir = s"$storeDir/sqvecs/batch=$batchTag"
-    // one monotonic version per upsert commit (burned before visibility
-    // — StoreCommits.nextVersion): the per-id latest-wins election
-    val ver = StoreCommits.nextVersion(spark, storeDir)
-    val wrote = effectiveMeta(spark, storeDir, promote = true) match {
-      case Some(mt) =>
-        // PINNED store — the steady tick path: ONE source scan and ONE
-        // job (optimization round 18, the IvfStream shape): the batch
-        // count rides the encoded write as an observed metric instead
-        // of a separate persist + count() pass; layout routing and the
-        // empty-tick bail read it AFTER the write
-        requireConfig(mt, dim, nlist, seed, storeDir)
-        val obs = org.apache.spark.sql.Observation()
-        val keyed = encodeRows(
-          batch.select(col(idCol).cast("long").as("neighbor_id"),
-              col(vecCol).as("cvec"))
-            .observe(obs, count(lit(1)).as("n"))
-            .withColumn("ver", lit(ver)), mt)
-        if (l0Bound <= 0) {
-          keyed.withColumn("ab", abCol(lit(storeParts.toLong)))
-            .repartition(col("ab")).write.partitionBy("ab")
-            .mode("overwrite").parquet(commitDir)
-        } else
-          keyed.write.mode("overwrite").parquet(commitDir)
-        val nVecs = obs.get("n").asInstanceOf[Long]
-        if (nVecs == 0L) {
-          fs(spark, new org.apache.hadoop.fs.Path(commitDir))
-            .delete(new org.apache.hadoop.fs.Path(commitDir), true)
-          false
-        } else {
-          if (l0Bound > 0 && nVecs > l0Bound)
-            StoreCommits.relayout(spark, commitDir, vecSchema,
-              _.withColumn("ab", abCol(lit(storeParts.toLong))))
-          true
-        }
-      case None =>
-        // FIRST CONTACT — fit-and-pin needs the batch twice (bounds
-        // sample + encode), so this one-time path keeps the
-        // persist + count materialization
-        val b = batch
-          .select(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("cvec"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val nVecs = b.count()
-          if (nVecs == 0L) false else {
-            val x = fitMeta(b, dim, nlist, seed)
-            StoreCommits.writeTextFile(spark,
-              new org.apache.hadoop.fs.Path(storeDir), "_IVFSQ", x.render)
-            val keyed = encodeRows(b.withColumn("ver", lit(ver)), x)
-            if (nVecs <= l0Bound)
-              keyed.coalesce(1).write.mode("overwrite").parquet(commitDir)
-            else
-              keyed.withColumn("ab", abCol(lit(storeParts.toLong)))
-                .repartition(col("ab")).write.partitionBy("ab")
-                .mode("overwrite").parquet(commitDir)
-            true
-          }
-        } finally { b.unpersist(blocking = false); () }
-    }
-    if (!wrote)
-      // EMPTY micro-batch: no commit, no fit — an unpinned store stays
-      // unpinned until the first non-empty tick (the sibling contract)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("cell", IntegerType, nullable = false),
-          StructField("members", LongType, nullable = false),
-          StructField("mean_code_err", DoubleType, nullable = true))))
-    DedupStream.publishCommit(spark, root, s"batch=$batchTag")
-    // drift monitor off the just-written commit (on-disk rows)
-    val mtPinned = effectiveMeta(spark, storeDir, promote = false).get
-    val coarseBc = spark.sparkContext.broadcast(mtPinned.coarse)
-    val minBc = spark.sparkContext.broadcast(mtPinned.vmin)
-    val stepBc = spark.sparkContext.broadcast(mtPinned.vstep)
+  def drift(spark: SparkSession, m: Marker): Column = {
+    val bc = spark.sparkContext.broadcast(
+      (m.rowsOf("coarse"), m.rowsOf("vmin").head, m.rowsOf("vstep").head))
     val codeErr = udf { (cell: Int, code: Array[Byte], v: Seq[Float]) =>
-      val cs = coarseBc.value; val mn = minBc.value; val st = stepBc.value
-      val u = IvfPqStream.unitOf(v); val cc = cs(cell)
+      val (cs, mn, st) = bc.value
+      val u = VectorCodec.unitOf(v); val cc = cs(cell)
       var d = 0.0; var t = 0
       while (t < mn.length) {
         val diff = (cc(t) + mn(t) + (code(t) & 0xff) * st(t)) - u(t)
@@ -320,53 +92,81 @@ object IvfSqStream {
       }
       math.sqrt(d)
     }
-    spark.read.schema(vecSchema).parquet(commitDir)
-      .groupBy("cell").agg(count(lit(1)).as("members"),
-        avg(codeErr(col("cell"), col("code"), col("cvec"))).as("mean_code_err"))
+    codeErr(col("cell"), col("code"), col("cvec"))
   }
 
-  /** Threshold-triggered drift remediation — the
-    * [[IvfPqStream.maybeRefitOnDrift]] contract for this tier, now a
-    * TWO-SIGNAL OR (round 17): member-weighted tick mean vs `factor ×`
-    * the pinned error baseline, OR cell-occupancy total-variation vs
-    * `occTvMax` ([[StoreCommits.occupancyTv]]). The occupancy signal
-    * exists because THIS tier's error monitor is provably blind on
-    * weak-structure corpora (round-16 rehearsal: a ×3 scale+offset
-    * shift reads ratio ~1.00 — min/max clamping absorbs it), while the
-    * same shift re-routes every vector's cell assignment. Fires
-    * `compactStore(refit = true)` once per shift with the
-    * `cooldownCommits` rate bound; no-ops on empty ticks, disabled
-    * signals (`factor ≤ 0` / `occTvMax ≤ 0`), or pre-baseline
-    * markers. */
-  def maybeRefitOnDrift(
-      spark: SparkSession, storeDir: String, monitor: DataFrame,
-      factor: Double, cooldownCommits: Int = 8,
-      occTvMax: Double = 0.35): Boolean = {
-    if (factor <= 0 && occTvMax <= 0) return false
-    // ONE bounded collect (nlist rows) feeds both signals
-    val rows = monitor
-      .select(col("cell"), col("members"), col("mean_code_err")).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
-    val n = rows.iterator.map(_._2).sum
-    if (n == 0L) return false
-    val meta = effectiveMeta(spark, storeDir, promote = false)
-    val tickMean = rows.iterator.map(t => t._2 * t._3).sum / n
-    val errDrifted = factor > 0 &&
-      meta.flatMap(_.baseline).exists(b => tickMean > factor * b)
-    val occDrifted = occTvMax > 0 && meta.flatMap(_.occ).exists(o =>
-      StoreCommits.occupancyTv(rows.map(t => (t._1, t._2)).toSeq, o)
-        .exists(_ > occTvMax))
-    if (!errDrifted && !occDrifted) return false
-    if (StoreCommits.visibleCommitCount(spark,
-        s"$storeDir/sqvecs") < cooldownCommits) return false
-    compactStore(spark, storeDir, refit = true)
-    true
-  }
+  override def scoreCols: Seq[Column] = Seq(col("neighbor_id"), col("cell"), col("code"))
 
-  /** Streaming entry, the sibling [[IvfPqStream.start]] shape: vector
-    * parquet files land in `vecsPath`, each micro-batch upserts
-    * (deterministic tags → replay-idempotent), drift auto-refit at the
-    * shared default, periodic compaction. */
+  /** The cell-indexed per-query linear coefficients of
+    * [[SimilaritySearch.sqByCell]] (`base + Σ code(d)·s1(d)`, one
+    * multiply-add per dimension, no decode buffer); its keys are the
+    * probed cells. `touches` counts per-row query visits. */
+  def probe(m: Marker, qs: Array[(Long, Array[Float])], nprobe: Int,
+      touches: Option[LongAccumulator]): Probe = {
+    val byCell = SimilaritySearch.sqByCell(qs.map { case (q, v) => (q, VectorCodec.unitOf(v)) },
+      m.rowsOf("coarse"), m.rowsOf("vmin").head, m.rowsOf("vstep").head, nprobe)
+    Probe(byCell.keySet.map(_.toLong), { (scan, cap) =>
+      val spark = scan.sparkSession
+      import spark.implicits._
+      val qBc = spark.sparkContext.broadcast(byCell)
+      StoreCommits.scoreAndRank(scan.as[(Long, Int, Array[Byte])], cap, "adc") { (it, acc) =>
+        val qc = qBc.value
+        val none = Array.empty[(Long, Double, Array[Double])]
+        it.foreach { case (nid, cell, code) =>
+          val entries = qc.getOrElse(cell, none)
+          touches.foreach(_.add(entries.length))
+          var i = 0
+          while (i < entries.length) {
+            val (qid, base, s1) = entries(i)
+            if (qid != nid) {
+              var s = base; var t = 0
+              while (t < s1.length) { s += (code(t) & 0xff) * s1(t); t += 1 }
+              acc.insert(qid, nid, s)
+            }
+            i += 1
+          }
+        }
+      }
+    })
+  }
+}
+
+/** STREAMING IVF-SQ8 index maintenance — the SCALAR-QUANTIZED tier
+  * ([[SimilaritySearch.ivfSqBuild]]/[[SimilaritySearch.ivfSqSearch]]:
+  * coarse inverted lists + one-byte-per-dimension residual codes + exact
+  * re-rank; 4× smaller than raw float32 at near-exact recall — the
+  * memory rung between [[IvfStream]]'s flat vectors and
+  * [[IvfPqStream]]'s m-byte codes) made durable and incremental on the
+  * [[VectorStore]] lifecycle. Search opens only the probed cells' `ab=`
+  * partitions, scores the code column (the stored vectors never cross
+  * that scan) into a bounded shortlist, and re-ranks it exactly from
+  * vectors in the same pruned partitions.
+  *
+  * reference analog: none (engine-side training-data surface); the
+  * design restates the standard IVF-SQ serving layout on parquet
+  * commits. */
+object IvfSqStream extends RefitStore(SqCodec) {
+
+  /** The pinned (effective) coarse centroids — monitoring / complexity
+    * probes. */
+  def loadCoarse(spark: SparkSession, storeDir: String): Array[Array[Double]] =
+    pinned(spark, storeDir).rowsOf("coarse")
+
+  /** Fold one micro-batch into the store ([[VectorStore.upsert]]).
+    * Returns the per-cell `(cell, members, mean_code_err)` of the written
+    * commit — the drift monitor (L2 distance between each unit vector and
+    * its quantized reconstruction). */
+  def upsertStep(
+      batch: DataFrame, storeDir: String, dim: Int,
+      nlist: Int = 16, seed: Long = 41L,
+      batchTag: String = java.util.UUID.randomUUID().toString,
+      storeParts: Int = 64,
+      l0Bound: Int = 1 << 16,
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    upsert(batch, storeDir, Seq[Long](dim, nlist, seed), batchTag, storeParts, l0Bound,
+      idCol, vecCol)
+
+  /** Streaming entry ([[RefitStore.refittingStream]]). */
   def start(
       spark: SparkSession,
       vecsPath: String,
@@ -380,240 +180,30 @@ object IvfSqStream {
         org.apache.spark.sql.streaming.Trigger.ProcessingTime("10 seconds"),
       compactEvery: Int = 64,
       // default 2.0, NOT the siblings' 1.5: min/max-bound quantization
-      // CLAMPS held-out residual tails, so on a weakly-structured
-      // corpus the stationary held-out band sits higher than the
-      // codebook tiers' (sf1 DriftRehearsal: stationary ratios
-      // 1.35-1.84 where IVF reads ~1.08 and IVF-PQ ~1.13) — 1.5 is
-      // INSIDE this tier's noise band. 2.0 clears it; a genuine
-      // family shift on structured data still fires far above it
-      // (the IvfSqStreamSpec prototype shift). 0 disables.
+      // CLAMPS held-out residual tails, so on a weakly-structured corpus
+      // the stationary band sits higher (sf1 DriftRehearsal: ratios
+      // 1.35-1.84 where IVF reads ~1.08) — 1.5 is inside this tier's
+      // noise band. 0 disables.
       refitDriftFactor: Double = 2.0,
       refitCooldownCommits: Int = 8,
-      // occupancy-TV OR-trigger (round 17) — the signal that DOES see
-      // the shifts the clamped error monitor is blind to. sf1
-      // rehearsal: stationary ticks ≤ ~0.1, the ×3 scale+offset shift
-      // (error ratio ~1.0 on this tier) reads ~0.9. 0 disables.
-      refitOccupancyTv: Double = 0.35): org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.readStream.schema(vecsSchema).parquet(vecsPath)
-      .writeStream
-      .queryName("ivfsq-maintenance")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val qid = Option(batch.sparkSession.sparkContext
-            .getLocalProperty("sql.streaming.queryId")).getOrElse("q")
-        val monitor = upsertStep(batch, storeDir, dim, nlist, seed,
-          batchTag = s"$qid-$batchId", storeParts = storeParts)
-        maybeRefitOnDrift(spark, storeDir, monitor, refitDriftFactor,
-          refitCooldownCommits, refitOccupancyTv)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          compactStore(spark, storeDir)
-        ()
-      }
-      .start()
-  }
+      // occupancy-TV OR-trigger — the signal that DOES see the shifts the
+      // clamped error monitor is blind to (×3 scale+offset: error ratio
+      // ~1.0, TV ~0.9). 0 disables.
+      refitOccupancyTv: Double = 0.35): org.apache.spark.sql.streaming.StreamingQuery =
+    refittingStream(spark, vecsPath, vecsSchema, storeDir, checkpoint, trigger, compactEvery,
+      refitDriftFactor, refitCooldownCommits, refitOccupancyTv) { (batch, tag) =>
+      upsertStep(batch, storeDir, dim, nlist, seed, batchTag = tag, storeParts = storeParts)
+    }
 
-  /** Fold commits into one hash-partitioned commit; with
-    * `refit = true`, the drift remediation: refit the model on a
-    * bounded whole-store sample, re-encode every vector, and swap via
-    * the two-phase `_IVFSQ.pending` promote. Same one-generation GC
-    * grace, tombstone drop + retirement, and crash windows as the
-    * siblings. SINGLE-WRITER contract. */
-  def compactStore(
-      spark: SparkSession, storeDir: String, refit: Boolean = false,
-      gcGraceMs: Long = StoreCommits.defaultGcGraceMs): Unit = {
-    val applied = StoreCommits.tombstoneCommits(spark, storeDir)
-    StoreCommits.foldAndSwap(
-      spark, storeDir, "sqvecs", vecSchema,
-      p => abCol(lit(p)), Seq("cell"),
-      extraWork = refit || applied.nonEmpty,
-      transform = { all0 =>
-        // latest-per-id election (round 17): exactly one version per
-        // live id survives the fold (latest-wins made physical); a
-        // refit re-encodes the elected rows, versions preserved
-        val all = StoreCommits.electLatestOne(
-          StoreCommits.minusTombstones(all0, spark, storeDir, "neighbor_id"),
-          "neighbor_id")
-        val mt = effectiveMeta(spark, storeDir, promote = true)
-          .getOrElse(throw new IllegalArgumentException(
-            s"not an ivf-sq store (no _IVFSQ marker): $storeDir"))
-        if (refit) {
-          val m2 = fitMeta(all, mt.dim, mt.nlist, mt.seed)
-          val target = s"batch=refit-${java.util.UUID.randomUUID()}"
-          (encodeRows(all, m2), target,
-            Some("_IVFSQ.pending" -> m2.copy(target = Some(target)).render))
-        } else (all, s"batch=compact-${java.util.UUID.randomUUID()}", None)
-      },
-      afterSwap = () => {
-        effectiveMeta(spark, storeDir, promote = true)
-        StoreCommits.retireTombstones(
-          spark, storeDir, applied, gcGraceMs = gcGraceMs)
-      },
-      gcGraceMs = gcGraceMs,
-      // electLatestOne fold: stamp the one-row-per-id marker the
-      // compacted fast paths require (round-18 ADVICE)
-      oneRowPerId = true)
-  }
-
-  /** Upsert-shaped DELETE: tombstone `ids` out of the store — the
-    * shared mask-until-compaction contract
-    * ([[StoreCommits.tombstoneStep]]). */
-  def deleteStep(
-      ids: DataFrame, storeDir: String,
-      batchTag: String = java.util.UUID.randomUUID().toString,
-      idCol: String = "vec_id"): Long =
-    StoreCommits.tombstoneStep(ids, storeDir, idCol, batchTag)
-
-  /** Top-k search: probed-cell scalar-quantized shortlist + exact
-    * cosine re-rank, both stages pruned to the probed cells' `ab=`
-    * partitions — the scoring scan reads only (id, cell, code)
-    * columns; the re-rank fetches vectors from the same pruned
-    * partitions. Scoring arithmetic is
-    * [[SimilaritySearch.ivfSqSearch]]'s verbatim (the cell-indexed
-    * [[SimilaritySearch.sqByCell]] coefficient broadcast), bounded by
-    * [[StoreCommits.TopKMap]] + [[StoreCommits.rankSurvivors]];
-    * upsert contract: LATEST-WINS, always — superseded versions are
-    * masked globally before scoring and dropped at compaction (the
-    * [[AnnStream.searchStore]] contract). Consistent-snapshot
-    * bracket: the model
-    * and the commit list must land in one generation — re-read after
-    * the leaf listing, retry on drift. */
+  /** Top-k search: probed-cell scalar-quantized shortlist of
+    * `max(rerank, k)` + exact cosine re-rank ([[VectorStore.search]]).
+    * `touches`, when supplied, counts the per-row query visits. */
   def searchStore(
       spark: SparkSession, storeDir: String, queries: DataFrame, k: Int,
       nprobe: Int = 4, rerank: Int = 32, maxQueries: Int = 100000,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      touches: Option[org.apache.spark.util.LongAccumulator] = None,
-      // FILTERED search (round 17): a predicate over the store rows
-      // (typically `neighbor_id`) applied to the pruned scan BEFORE
-      // scoring and the re-rank — PRE-filtering, so top-k is exact
-      // over the qualifying subset (post-filtering a fixed shortlist
-      // silently loses recall under selective filters). Batch tiers
-      // need no such knob — their corpus is a DataFrame the caller
-      // filters before the build; a durable store's index is already
-      // built, so the filter must ride the search. Catalyst pushes a
-      // plain column predicate into the parquet scan.
-      candidateFilter: Option[Column] = None): DataFrame = {
-    import spark.implicits._
-    val dir = new org.apache.hadoop.fs.Path(storeDir)
-    require(fs(spark, dir).exists(new org.apache.hadoop.fs.Path(dir, "_IVFSQ")),
-      s"not an ivf-sq store (no _IVFSQ marker): $storeDir")
-    val parts = StoreCommits.storePartsOf(fs(spark, dir), dir)
-    // ONE bounded collect serves the maxQueries check AND the
-    // broadcast state (the AnnStream/IvfStream shape)
-    val qRows = queries
-      .select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qv"))
-      .limit(maxQueries + 1).collect()
-    require(qRows.length <= maxQueries,
-      s"searchStore got more than $maxQueries query rows — the query side " +
-        "must stay the bounded side; swap sides or raise maxQueries deliberately")
-    val qs = qRows.map(r => (r.getLong(0), IvfPqStream.unitOf(r.getSeq[Float](1))))
-    var mt = effectiveMeta(spark, storeDir, promote = false)
-      .getOrElse(throw new IllegalArgumentException(
-        s"not an ivf-sq store (no _IVFSQ marker): $storeDir"))
-    var stored: DataFrame = null
-    // ONE commit-set resolution per search (round-18 ADVICE): scan,
-    // supersede mask, and the compacted fast path must all observe the
-    // SAME generation — see IvfPqStream.searchStore
-    var commits: Seq[org.apache.hadoop.fs.FileStatus] = Nil
-    val fsv = fs(spark, dir)
-    val sqRoot = new org.apache.hadoop.fs.Path(s"$storeDir/sqvecs")
-    var attempt = 0
-    var consistent = false
-    while (!consistent) {
-      val dimL = mt.dim
-      val coarse = mt.coarse
-      val probed = qs.flatMap { case (_, qv) =>
-        coarse.indices.sortBy { ci =>
-          var d = 0.0; var t = 0
-          while (t < dimL) { val df = qv(t) - coarse(ci)(t); d += df * df; t += 1 }
-          d
-        }.take(nprobe)
-      }.toSet
-      val wanted = probed.map((c: Int) =>
-        math.floorMod(org.apache.spark.sql.catalyst.expressions.XXH64
-          .hashLong(c.toLong, 42L), parts.toLong).toInt)
-      commits = DedupStream.visibleCommits(fsv, sqRoot)
-      stored = DedupStream.readStoreFrom(
-        spark, commits, vecSchema,
-        excludeTag = " none ", partCol = "ab", wanted = wanted, fs0 = fsv)
-      val after = effectiveMeta(spark, storeDir, promote = false).get
-      if (after.render == mt.render) consistent = true
-      else {
-        mt = after
-        attempt += 1
-        require(attempt < 8, s"ivf-sq store $storeDir models kept moving " +
-          "during search planning — is a writer refitting in a loop?")
-      }
-    }
-    // scan parallelism probed on the BARE scan, before the masks (no
-    // exchange → no AQE stage materialization; StoreCommits.rebalanceBy)
-    val scanParts = stored.rdd.getNumPartitions
-    // tombstoned ids and superseded versions never reach scoring nor
-    // the re-rank (the supersede mask is global — the
-    // AnnStream.searchStore contract)
-    stored = StoreCommits.minusSuperseded(
-      StoreCommits.minusTombstones(stored, spark, storeDir, "neighbor_id"),
-      spark, storeDir, "sqvecs", "neighbor_id", commits = Some(commits))
-    // pre-filter: both the scoring pass and the re-rank read from the
-    // filtered relation, so the answer is exact top-k over qualifiers
-    stored = candidateFilter.fold(stored)(stored.filter)
-    // cell-indexed per-query linear coefficients (the batch operator's
-    // broadcast shape — dim-scaled like raw query vectors, shared by
-    // reference across a query's nprobe entries)
-    val qBc = spark.sparkContext.broadcast(
-      SimilaritySearch.sqByCell(qs, mt.coarse, mt.vmin, mt.vstep, nprobe))
-    val cap = math.max(rerank, k)
-    // fold + bounded-window tail: the shared StoreCommits.scoreAndRank
-    val shortlist = StoreCommits.scoreAndRank(
-      StoreCommits.rebalanceBy(
-          stored.select(col("neighbor_id"), col("cell"), col("code")),
-          scanParts)
-        .as[(Long, Int, Array[Byte])],
-      cap, "adc") { (it, acc) =>
-      val qc = qBc.value
-      val none = Array.empty[(Long, Double, Array[Double])]
-      it.foreach { case (nid, cell, code) =>
-        val entries = qc.getOrElse(cell, none)
-        touches.foreach(_.add(entries.length))
-        var i = 0
-        while (i < entries.length) {
-          val (qid, base, s1) = entries(i)
-          if (qid != nid) {
-            var s = base; var t = 0
-            while (t < s1.length) { s += (code(t) & 0xff) * s1(t); t += 1 }
-            acc.insert(qid, nid, s)
-          }
-          i += 1
-        }
-      }
-    }.select("query_id", "neighbor_id")
-    // exact re-rank (shared StoreCommits.exactRerank) from one
-    // DETERMINISTIC latest vector per id (StoreCommits.latestVecs —
-    // replacing the nondeterministic first() the round-16 verdict
-    // flagged); vectors come from the same pruned partitions. Queries
-    // come from the ALREADY-COLLECTED bounded snapshot as a local
-    // relation (round 18 — the IvfPqStream rationale): no re-scan of
-    // the query source per search, and the re-rank provably sees the
-    // same query rows the probes derived from
-    val qRaw = spark.createDataFrame(
-      qRows.toSeq.map(r => (r.getLong(0), r.getSeq[Float](1))))
-      .toDF("query_id", "qvec")
-    // compacted-only fast path (optimization round 17; gated on the
-    // SAME adopted commit set + the electLatestOne marker since round
-    // 18): the fold already elected one row per live id, so the
-    // election is the identity — the re-rank reads the pruned
-    // projection directly
-    val vecs =
-      if (StoreCommits.compactedOnly(fsv, commits))
-        stored.select(col("neighbor_id"), col("cvec"))
-      else StoreCommits.latestVecs(
-        stored.select(col("neighbor_id"), col("ver"), col("cvec")))
-    StoreCommits.exactRerank(shortlist, vecs, qRaw, k)
-  }
-
-  /** The store's live vectors as a corpus relation — see
-    * [[StoreCommits.liveVectors]]. */
-  def liveVectors(spark: SparkSession, storeDir: String): org.apache.spark.sql.DataFrame =
-    StoreCommits.liveVectors(spark, storeDir, "sqvecs", vecSchema,
-      multiRowPerId = false)
+      touches: Option[LongAccumulator] = None,
+      candidateFilter: Option[Column] = None): DataFrame =
+    search(spark, storeDir, queries, k, nprobe, rerank, maxQueries, idCol, vecCol,
+      touches, candidateFilter)
 }

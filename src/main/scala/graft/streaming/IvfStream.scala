@@ -2,142 +2,79 @@ package graft.streaming
 
 import graft.ops.SimilaritySearch
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.LongAccumulator
+
+/** The IVF codec: flat vectors assigned to the nearest of `nlist`
+  * data-fit centroids. The `_IVF` marker pins `dim/nlist/seed` and the
+  * centroid VALUES (unlabeled rows); the drift value is a row's distance
+  * to its centroid (`mean_dist`). */
+private[streaming] object IvfCodec extends VectorCodec(
+    subdir = "ivfvecs", marker = "_IVF", kind = "ivf", configNames = "dim/nlist/seed",
+    codeCols = Seq(VectorCodec.cell), keyCols = Seq("cell"), driftName = Some("mean_dist"),
+    oneRowPerId = true, exactRerank = false) {
+
+  def pin(cfg: Seq[Long], centroids: Array[Array[Double]],
+      target: Option[String] = None): Marker =
+    Marker(cfg, target, centroids.toSeq.map("" -> _))
+
+  /** Centroids from the bounded sample, plus the drift anchors: the
+    * sample's mean distance-to-nearest-centroid and its cell occupancy. */
+  def fit(rows: DataFrame, cfg: Seq[Long]): Marker = {
+    val sample = VectorCodec.sampleOf(rows).map(_.toArray.map(_.toDouble))
+    val (cs, residuals, occ) =
+      VectorCodec.fitCells(sample, cfg(1).toInt, iters = 10, seed = cfg(2))
+    val dist = residuals.map(r => math.sqrt(r.foldLeft(0.0)((d, x) => d + x * x)))
+    pin(cfg, cs).copy(baseline = Some(dist.sum / sample.length), occ = Some(occ))
+  }
+
+  def encode(rows: DataFrame, m: Marker): DataFrame = {
+    val bc = rows.sparkSession.sparkContext.broadcast(m.rowsOf(""))
+    val assignCell = udf { (v: Seq[Float]) => SimilaritySearch.nearestCellsOf(bc.value, v, 1).head }
+    rows.select(col("neighbor_id"), assignCell(col("cvec")).as("cell"), col("cvec"), col("ver"))
+  }
+
+  def drift(spark: SparkSession, m: Marker): Column = {
+    val bc = spark.sparkContext.broadcast(m.rowsOf(""))
+    val distTo = udf { (cell: Int, v: Seq[Float]) =>
+      val c = bc.value(cell)
+      var d = 0.0; var j = 0
+      while (j < c.length) { val t = c(j) - v(j); d += t * t; j += 1 }
+      math.sqrt(d)
+    }
+    distTo(col("cell"), col("cvec"))
+  }
+
+  /** Each query probes its `nprobe` nearest pinned cells. */
+  def probe(m: Marker, qs: Array[(Long, Array[Float])], nprobe: Int,
+      touches: Option[LongAccumulator]): Probe = {
+    val cs = m.rowsOf("")
+    cosineProbe(qs, qs.flatMap { case (qid, v) =>
+      SimilaritySearch.nearestCellsOf(cs, v.toSeq, nprobe).map(c => (qid, c.toLong))
+    })
+  }
+}
 
 /** STREAMING IVF index maintenance — the coarse-quantizer ANN tier
   * ([[SimilaritySearch.ivfBuild]]/[[SimilaritySearch.ivfSearch]]) made
-  * DURABLE and INCREMENTAL on the [[AnnStream]]/[[DedupStream]] store
-  * discipline. The compressed tiers are the ones a 100 TB deployment
-  * actually serves from, and build-once quantizers force a full-corpus
-  * re-pass to admit new vectors; this store instead PINS the fitted
-  * centroids (the `_IVF` marker — the [[AnnStream]] `_ANN` idiom, with
-  * the centroid VALUES persisted because they are data-fit, not
-  * seed-derived) and each micro-batch assigns its vectors to the
-  * pinned cells as a tag-keyed commit. A search prunes to the nprobe
-  * cell partitions its queries hash to — O(queries · nprobe)
-  * partitions read, never the corpus.
+  * DURABLE and INCREMENTAL on the [[VectorStore]] lifecycle. Build-once
+  * quantizers force a full-corpus re-pass to admit new vectors; this
+  * store PINS the fitted centroids in `_IVF` and each micro-batch assigns
+  * its vectors to the pinned cells as a tag-keyed commit. A search
+  * prunes to the `ab=` partitions of its queries' nprobe cells —
+  * O(queries · nprobe) partitions read, never the corpus.
   *
-  * Contracts, shared with the sibling stores: tag-keyed overwrite
-  * commits (replay-idempotent), manifest-gated visibility from the
-  * FIRST commit, `_MANIFEST`/`_FOLDED` crash-safe compaction with
-  * one-generation GC grace, `_PARTS` partition pinning, single writer /
-  * readers-any-time.
-  *
-  * Centroid drift is MANAGED, not ignored: [[upsertStep]] returns the
-  * batch's per-cell occupancy and mean distance-to-centroid (the drift
-  * monitor — a rising mean means the pinned quantizer no longer fits
-  * the data), and [[compactStore]] with `refit = true` is the
-  * remediation: refit on a bounded sample of the WHOLE store, reassign
-  * every vector, swap atomically. Refit is crash-safe via an
-  * `_IVF.pending` two-phase promote: the new centroids only take
-  * effect once the manifest points at the reassigned commit, and
-  * either side of a mid-swap crash leaves a store whose visible rows
-  * and effective centroids agree (see [[effectiveMeta]]).
+  * Centroid drift is MANAGED: [[upsertStep]] returns the batch's
+  * per-cell occupancy and mean distance-to-centroid, and
+  * [[maybeRefitOnDrift]] / `compactStore(refit = true)` refit on a
+  * bounded sample of the whole store, reassign every vector and swap
+  * both atomically (the two-phase `_IVF.pending` promote).
   *
   * reference analog: none (engine-side training-data surface); the
   * design restates the standard IVF sharded-serving layout on parquet
   * commits. */
-object IvfStream {
-
-  private[streaming] val vecSchema: StructType = StructType(Seq(
-    StructField("neighbor_id", LongType, nullable = false),
-    StructField("cell", IntegerType, nullable = false),
-    StructField("cvec", ArrayType(FloatType, containsNull = true), nullable = true),
-    StructField("ver", LongType, nullable = false)))
-
-  /** The store's partition int for a cell — same xxhash64 derivation
-    * on writer and searcher. */
-  private def abCol(parts: Column): Column =
-    pmod(xxhash64(col("cell").cast("long")), parts).cast("int")
-
-  private def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** The pinned quantizer: config header + fitted centroids. For the
-    * PENDING form (mid-refit), `target` names the reassigned commit the
-    * centroids belong to. Double.toString/parseDouble round-trips
-    * exactly, so a reloaded quantizer assigns bit-identically. */
-  private[streaming] final case class IvfMeta(
-      dim: Int, nlist: Int, seed: Long,
-      centroids: Array[Array[Double]], target: Option[String],
-      baseline: Option[Double] = None,
-      occ: Option[Array[Double]] = None) {
-    def render: String = {
-      val head = s"$dim/$nlist/$seed" + target.fold("")(t => s"/$t")
-      ((head +: centroids.map(_.mkString(","))) ++
-        baseline.map(b => s"baseline $b") ++
-        occ.map(o => "occupancy " + o.mkString(","))).mkString("\n")
-    }
-  }
-
-  private def parseMeta(text: String): IvfMeta = {
-    val lines = text.split('\n').map(_.trim).filter(_.nonEmpty)
-    val h = lines.head.split('/')
-    // `baseline <x>` / `occupancy <x,…>` are labeled trailing lines
-    // (absent on pre-drift markers — those stores simply never
-    // auto-refit on the missing signal)
-    IvfMeta(h(0).toInt, h(1).toInt, h(2).toLong,
-      lines.tail.filterNot(s =>
-          s.startsWith("baseline ") || s.startsWith("occupancy "))
-        .map(_.split(',').map(java.lang.Double.parseDouble)),
-      if (h.length > 3) Some(h(3)) else None,
-      lines.tail.find(_.startsWith("baseline "))
-        .map(s => java.lang.Double.parseDouble(s.stripPrefix("baseline "))),
-      lines.tail.find(_.startsWith("occupancy "))
-        .map(_.stripPrefix("occupancy ").split(',')
-          .map(java.lang.Double.parseDouble)))
-  }
-
-  /** The EFFECTIVE quantizer for the store's current visible state —
-    * the crash-healing two-phase read ([[StoreCommits.effectivePinned]]). */
-  private def effectiveMeta(
-      spark: SparkSession, storeDir: String,
-      promote: Boolean): Option[IvfMeta] =
-    StoreCommits.effectivePinned[IvfMeta](
-      spark, storeDir, "ivfvecs", "_IVF",
-      parseMeta, _.render, _.target, _.copy(target = None), promote)
-
-  private def requireConfig(m: IvfMeta, dim: Int, nlist: Int, seed: Long,
-      storeDir: String): Unit =
-    require(m.dim == dim && m.nlist == nlist && m.seed == seed,
-      s"ivf store $storeDir was pinned with dim/nlist/seed=" +
-        s"${m.dim}/${m.nlist}/${m.seed}; this config is $dim/$nlist/$seed — " +
-        "rebuild the store or match the writing config")
-
-  /** Deterministic bounded fit sample (the [[SimilaritySearch]] idiom:
-    * smallest-xxhash64 order, partitioning-independent). Returns the
-    * fitted centroids AND the fit-time drift BASELINE: the sample's
-    * mean distance-to-nearest-centroid, the number the tick monitor's
-    * mean_dist is compared against by [[maybeRefitOnDrift]]. */
-  private def fitCentroids(
-      rows: DataFrame, nlist: Int, seed: Long)
-      : (Array[Array[Double]], Double, Array[Double]) = {
-    val sample = rows
-      .orderBy(xxhash64(col("neighbor_id")).asc, col("neighbor_id").asc)
-      .limit(20000).select("cvec")
-      .collect().map(_.getSeq[Float](0).toArray.map(_.toDouble))
-    val cs = SimilaritySearch.localKMeans(sample, nlist, iters = 10, seed = seed)
-    var acc = 0.0
-    // fit-time cell OCCUPANCY baseline (round 17) — the anchor for the
-    // occupancy-drift signal (StoreCommits.occupancyTv)
-    val cellCounts = new Array[Long](cs.length)
-    sample.foreach { v =>
-      var bd = Double.MaxValue; var best = 0; var ci = 0
-      while (ci < cs.length) {
-        var d = 0.0; var t = 0
-        while (t < v.length) { val df = v(t) - cs(ci)(t); d += df * df; t += 1 }
-        if (d < bd) { bd = d; best = ci }
-        ci += 1
-      }
-      cellCounts(best) += 1
-      acc += math.sqrt(bd)
-    }
-    (cs, if (sample.isEmpty) 0.0 else acc / sample.length,
-      if (sample.isEmpty) Array.empty[Double]
-      else cellCounts.map(_.toDouble / sample.length))
-  }
+object IvfStream extends RefitStore(IvfCodec) {
 
   /** Pre-pin a quantizer (e.g. to build a second store that must
     * answer identically, or to carry a batch-fit model into the
@@ -147,198 +84,34 @@ object IvfStream {
       dim: Int, nlist: Int, seed: Long,
       centroids: Array[Array[Double]]): Unit = {
     val dir = new org.apache.hadoop.fs.Path(storeDir)
-    val f = fs(spark, dir)
+    val f = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(!f.exists(new org.apache.hadoop.fs.Path(dir, "_IVF")),
       s"ivf store $storeDir already has a pinned quantizer")
     f.mkdirs(dir)
     StoreCommits.writeTextFile(spark, dir, "_IVF",
-      IvfMeta(dim, nlist, seed, centroids, None).render)
+      IvfCodec.pin(Seq[Long](dim, nlist, seed), centroids).render)
   }
 
   /** The pinned (effective) centroids — monitoring / equality probes. */
   def loadCentroids(spark: SparkSession, storeDir: String): Array[Array[Double]] =
-    effectiveMeta(spark, storeDir, promote = false)
-      .getOrElse(throw new IllegalArgumentException(
-        s"not an ivf store (no _IVF marker): $storeDir")).centroids
+    pinned(spark, storeDir).rowsOf("")
 
-  /** Fold one micro-batch of `(idCol, vecCol)` rows into the store.
-    * The FIRST upsert on an unpinned store fits the quantizer from the
-    * batch's bounded deterministic sample and pins it; every later
-    * upsert assigns to the pinned cells. Returns the batch's per-cell
+  /** Fold one micro-batch of `(idCol, vecCol)` rows into the store
+    * ([[VectorStore.upsert]]). Returns the batch's per-cell
     * `(cell, members, mean_dist)` — the DRIFT MONITOR: mean
     * distance-to-centroid rising tick over tick means the pinned
-    * quantizer has drifted off the data and a
-    * `compactStore(refit = true)` is due. */
+    * quantizer has drifted off the data. */
   def upsertStep(
       batch: DataFrame, storeDir: String, dim: Int,
       nlist: Int = 16, seed: Long = 13L,
       batchTag: String = java.util.UUID.randomUUID().toString,
       storeParts: Int = 64,
       l0Bound: Int = 1 << 16,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = batch.sparkSession
-    DedupStream.ensureStoreMeta(spark, storeDir, storeParts, family = 0)
-    val root = new org.apache.hadoop.fs.Path(s"$storeDir/ivfvecs")
-    // manifest-gated from birth (the AnnStream contract): readers never
-    // see a half-written dir through the listing fallback
-    StoreCommits.ensureManifestClaimed(spark, root)
-    val commitDir = s"$storeDir/ivfvecs/batch=$batchTag"
-    // one monotonic version per upsert commit (burned before visibility
-    // — StoreCommits.nextVersion): the per-id latest-wins election
-    val ver = StoreCommits.nextVersion(spark, storeDir)
-    val centroidsOpt = effectiveMeta(spark, storeDir, promote = true) match {
-      case Some(meta) =>
-        // PINNED store — the steady tick path: ONE source scan and ONE
-        // job (optimization round 18). The batch count rides the keyed
-        // write as an observed metric instead of a separate
-        // persist + count() materialization pass; it only routes the
-        // commit layout (and the empty-tick bail), both of which can be
-        // decided AFTER the write — the rare bulk batch re-lays out
-        // from the commit's own files (StoreCommits.relayout), an empty
-        // batch deletes its unpublished dir.
-        requireConfig(meta, dim, nlist, seed, storeDir)
-        val bc = spark.sparkContext.broadcast(meta.centroids)
-        val assignCell = udf { (v: Seq[Float]) =>
-          SimilaritySearch.nearestCellsOf(bc.value, v, 1).head }
-        val obs = org.apache.spark.sql.Observation()
-        val keyed = batch
-          .select(col(idCol).cast("long").as("neighbor_id"),
-            col(vecCol).as("cvec"))
-          .observe(obs, count(lit(1)).as("n"))
-          .select(col("neighbor_id"),
-            assignCell(col("cvec")).as("cell"), col("cvec"), lit(ver).as("ver"))
-        if (l0Bound <= 0) {
-          keyed.withColumn("ab", abCol(lit(storeParts.toLong)))
-            .repartition(col("ab")).write.partitionBy("ab")
-            .mode("overwrite").parquet(commitDir)
-          if (obs.get("n").asInstanceOf[Long] == 0L) {
-            fs(spark, new org.apache.hadoop.fs.Path(commitDir))
-              .delete(new org.apache.hadoop.fs.Path(commitDir), true)
-            None
-          } else Some(bc)
-        } else {
-          keyed.write.mode("overwrite").parquet(commitDir)
-          val nVecs = obs.get("n").asInstanceOf[Long]
-          if (nVecs == 0L) {
-            fs(spark, new org.apache.hadoop.fs.Path(commitDir))
-              .delete(new org.apache.hadoop.fs.Path(commitDir), true)
-            None
-          } else {
-            if (nVecs > l0Bound)
-              StoreCommits.relayout(spark, commitDir, vecSchema,
-                _.withColumn("ab", abCol(lit(storeParts.toLong))))
-            Some(bc)
-          }
-        }
-      case None =>
-        // FIRST CONTACT — fit-and-pin: the quantizer sample needs the
-        // batch twice (fit + assign), so this one-time path keeps the
-        // persist + count materialization
-        val b = batch
-          .select(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("cvec"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val nVecs = b.count()
-          if (nVecs == 0L) None else {
-            val (cs, base, occ) = fitCentroids(b, nlist, seed)
-            val m = IvfMeta(dim, nlist, seed, cs, None, Some(base), Some(occ))
-            StoreCommits.writeTextFile(
-              spark, new org.apache.hadoop.fs.Path(storeDir), "_IVF", m.render)
-            val bc = spark.sparkContext.broadcast(m.centroids)
-            val assignCell = udf { (v: Seq[Float]) =>
-              SimilaritySearch.nearestCellsOf(bc.value, v, 1).head }
-            val keyed = b.select(col("neighbor_id"),
-              assignCell(col("cvec")).as("cell"), col("cvec"), lit(ver).as("ver"))
-            if (nVecs <= l0Bound)
-              keyed.coalesce(1).write.mode("overwrite").parquet(commitDir)
-            else
-              keyed.withColumn("ab", abCol(lit(storeParts.toLong)))
-                .repartition(col("ab")).write.partitionBy("ab")
-                .mode("overwrite").parquet(commitDir)
-            Some(bc)
-          }
-        } finally { b.unpersist(blocking = false); () }
-    }
-    centroidsOpt match {
-      case None =>
-        // EMPTY micro-batch (a replay edge can deliver one first): no
-        // commit, no fit — an unpinned store stays unpinned until the
-        // first non-empty tick instead of crashing the k-means sample
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            StructField("cell", IntegerType, nullable = false),
-            StructField("members", LongType, nullable = false),
-            StructField("mean_dist", DoubleType, nullable = true))))
-      case Some(centroids) =>
-        DedupStream.publishCommit(spark, root, s"batch=$batchTag")
-        // drift monitor off the just-written commit (on-disk rows — the
-        // lazy consumer never re-touches the unpersisted batch)
-        val distTo = udf { (cell: Int, v: Seq[Float]) =>
-          val c = centroids.value(cell)
-          var d = 0.0; var j = 0
-          while (j < c.length) { val t = c(j) - v(j); d += t * t; j += 1 }
-          math.sqrt(d)
-        }
-        spark.read.schema(vecSchema).parquet(commitDir)
-          .groupBy("cell").agg(count(lit(1)).as("members"),
-            avg(distTo(col("cell"), col("cvec"))).as("mean_dist"))
-    }
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    upsert(batch, storeDir, Seq[Long](dim, nlist, seed), batchTag, storeParts, l0Bound,
+      idCol, vecCol)
 
-  /** Threshold-triggered drift remediation — the consumer of the
-    * [[upsertStep]] monitor: compare the tick's member-weighted mean
-    * distance-to-centroid against `factor ×` the PINNED fit-time
-    * baseline (recorded in the `_IVF` marker at fit/refit time), and
-    * fire `compactStore(refit = true)` when exceeded. Returns true iff
-    * a refit fired. No-ops when `factor <= 0`, on an empty tick, or on
-    * a pre-baseline marker (stores pinned before baselines existed
-    * stay operator-managed). The refit re-pins centroids AND baseline,
-    * so a persistent distribution shift fires ONCE, not every tick. */
-  /** @param cooldownCommits refit-rate bound (round 16): a refit (or
-    *   any compaction) folds the store to ONE visible commit and each
-    *   tick publishes one more, so the visible-commit count IS the
-    *   tick distance from the last fold — no extra state. A refit
-    *   only fires once that distance reaches the cooldown. Rationale:
-    *   the refit re-fits on the WHOLE store, so while a persistent
-    *   new-regime stream is still a minority of the mixture, the
-    *   re-pinned baseline keeps trailing the new ticks and the monitor
-    *   keeps firing — rehearsed at sf1: per-tick refits until the
-    *   mixture turns over. The cooldown bounds that to one full-store
-    *   refit per `cooldownCommits` ticks while convergence happens. */
-  def maybeRefitOnDrift(
-      spark: SparkSession, storeDir: String, monitor: DataFrame,
-      factor: Double, cooldownCommits: Int = 8,
-      occTvMax: Double = 0.35): Boolean = {
-    if (factor <= 0 && occTvMax <= 0) return false
-    // ONE bounded collect (nlist rows) feeds both signals: the error
-    // ratio AND the round-17 occupancy-TV OR-trigger (a regime shift
-    // re-routes cell assignments even when distance-to-centroid stays
-    // in band — the signal family the error monitor misses on
-    // weak-structure corpora)
-    val rows = monitor
-      .select(col("cell"), col("members"), col("mean_dist")).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
-    val n = rows.iterator.map(_._2).sum
-    if (n == 0L) return false
-    val meta = effectiveMeta(spark, storeDir, promote = false)
-    val tickMean = rows.iterator.map(t => t._2 * t._3).sum / n
-    val errDrifted = factor > 0 &&
-      meta.flatMap(_.baseline).exists(b => tickMean > factor * b)
-    val occDrifted = occTvMax > 0 && meta.flatMap(_.occ).exists(o =>
-      StoreCommits.occupancyTv(rows.map(t => (t._1, t._2)).toSeq, o)
-        .exists(_ > occTvMax))
-    if (!errDrifted && !occDrifted) return false
-    if (StoreCommits.visibleCommitCount(spark,
-        s"$storeDir/ivfvecs") < cooldownCommits) return false
-    compactStore(spark, storeDir, refit = true)
-    true
-  }
-
-  /** Streaming entry, the [[AnnStream.start]] shape: vector parquet
-    * files land in `vecsPath`, each micro-batch upserts (deterministic
-    * tags → replay-idempotent), every `compactEvery` batches the
-    * commits fold back into the partitioned layout. Pass a pre-pinned
+  /** Streaming entry ([[RefitStore.refittingStream]]): pass a pre-pinned
     * store (see [[pinCentroids]]) or let the first batch fit. */
   def start(
       spark: SparkSession,
@@ -352,256 +125,27 @@ object IvfStream {
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.ProcessingTime("10 seconds"),
       compactEvery: Int = 64,
-      // default 1.5: the round-16 drifting-stream rehearsal
-      // (DriftRehearsal, sf1) puts stationary-tick ratios at ≤ ~1.1 of
-      // the fit baseline and a genuine joint-distribution shift at
-      // ≥ ~2×, so 1.5 sits above the noise band with margin and below
-      // the signal — stationary streams never refit (ratio ≈ 1), a
-      // persistent shift refits ONCE (the refit re-pins the baseline).
-      // 0 disables. Per-tick cost at factor > 0: one aggregation over
-      // the ≤ nlist-row monitor plus a marker read — tick-invisible.
+      // default 1.5: the drifting-stream rehearsal (DriftRehearsal, sf1)
+      // puts stationary-tick ratios at ≤ ~1.1 of the fit baseline and a
+      // genuine joint-distribution shift at ≥ ~2×. 0 disables.
       refitDriftFactor: Double = 1.5,
-      // at most one full-store refit per this many ticks (see
-      // maybeRefitOnDrift: the commit count is the distance from the
-      // last fold, so no extra state)
+      // at most one full-store refit per this many ticks
       refitCooldownCommits: Int = 8,
-      // occupancy-TV OR-trigger (round 17): fires on cell-histogram
-      // shifts the distance ratio misses (sf1 rehearsal: stationary
-      // ≤ ~0.1, shifted ≥ ~0.9). 0 disables.
-      refitOccupancyTv: Double = 0.35): org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.readStream.schema(vecsSchema).parquet(vecsPath)
-      .writeStream
-      .queryName("ivf-maintenance")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val qid = Option(batch.sparkSession.sparkContext
-            .getLocalProperty("sql.streaming.queryId")).getOrElse("q")
-        val monitor = upsertStep(batch, storeDir, dim, nlist, seed,
-          batchTag = s"$qid-$batchId", storeParts = storeParts)
-        // drift check first (it may refit-compact); the periodic fold
-        // then sees a single-commit store and no-ops
-        maybeRefitOnDrift(spark, storeDir, monitor, refitDriftFactor,
-          refitCooldownCommits, refitOccupancyTv)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          compactStore(spark, storeDir)
-        ()
-      }
-      .start()
-  }
+      // occupancy-TV OR-trigger (sf1 rehearsal: stationary ≤ ~0.1,
+      // shifted ≥ ~0.9). 0 disables.
+      refitOccupancyTv: Double = 0.35): org.apache.spark.sql.streaming.StreamingQuery =
+    refittingStream(spark, vecsPath, vecsSchema, storeDir, checkpoint, trigger, compactEvery,
+      refitDriftFactor, refitCooldownCommits, refitOccupancyTv) { (batch, tag) =>
+      upsertStep(batch, storeDir, dim, nlist, seed, batchTag = tag, storeParts = storeParts)
+    }
 
-  /** Offline maintenance: fold the accumulated commits (both layouts)
-    * into one hash-partitioned commit — and, with `refit = true`, the
-    * DRIFT REMEDIATION: refit the quantizer on a bounded sample of the
-    * whole store, reassign every vector, and atomically swap both.
-    *
-    * Refit two-phase commit: (1) the reassigned data lands as an
-    * invisible `batch=refit-*` dir; (2) the new centroids are staged as
-    * `_IVF.pending` naming that dir; (3) the manifest swap makes the
-    * reassignment visible — THE commit point, after which
-    * [[effectiveMeta]] serves pending's centroids; (4) pending promotes
-    * to `_IVF`. A crash before (3) leaves the old store intact (the
-    * orphan dir and dead-letter pending are GC'd / ignored); a crash
-    * after (3) is healed by any later reader-writer's promotion.
-    * Fold/swap/GC-grace machinery (one-generation grace so in-flight
-    * readers finish): [[StoreCommits.foldAndSwap]].
-    * SINGLE-WRITER contract. */
-  def compactStore(
-      spark: SparkSession, storeDir: String, refit: Boolean = false,
-      gcGraceMs: Long = StoreCommits.defaultGcGraceMs): Unit = {
-    // pending deletes force a fold (tombstoned rows must drop) and a
-    // refit must fit on the SURVIVORS — so the filter runs first
-    val applied = StoreCommits.tombstoneCommits(spark, storeDir)
-    StoreCommits.foldAndSwap(
-      spark, storeDir, "ivfvecs", vecSchema,
-      p => abCol(lit(p)), Seq("cell"),
-      extraWork = refit || applied.nonEmpty,
-      transform = { all0 =>
-        // latest-per-id election (round 17): exactly one version per
-        // live id survives the fold — the latest-wins contract made
-        // physical, and the row-per-update space leak closed
-        val all = StoreCommits.electLatestOne(
-          StoreCommits.minusTombstones(all0, spark, storeDir, "neighbor_id"),
-          "neighbor_id")
-        val meta = effectiveMeta(spark, storeDir, promote = true)
-          .getOrElse(throw new IllegalArgumentException(
-            s"not an ivf store (no _IVF marker): $storeDir"))
-        if (refit) {
-          val (cs2, base2, occ2) = fitCentroids(all, meta.nlist, meta.seed)
-          val m2 = meta.copy(centroids = cs2, baseline = Some(base2),
-            occ = Some(occ2))
-          val bc = spark.sparkContext.broadcast(m2.centroids)
-          val assignCell = udf { (v: Seq[Float]) =>
-            SimilaritySearch.nearestCellsOf(bc.value, v, 1).head }
-          val target = s"batch=refit-${java.util.UUID.randomUUID()}"
-          // versions ride through the refit unchanged: the re-encoded
-          // rows are all latest-per-id, and future deltas outversion
-          // them through the still-monotonic _SEQ
-          (all.select(col("neighbor_id"),
-            assignCell(col("cvec")).as("cell"), col("cvec"), col("ver")),
-            target, Some("_IVF.pending" -> m2.copy(target = Some(target)).render))
-        } else (all, s"batch=compact-${java.util.UUID.randomUUID()}", None)
-      },
-      // finish the promotion staged above, then retire applied deletes
-      afterSwap = () => {
-        effectiveMeta(spark, storeDir, promote = true)
-        StoreCommits.retireTombstones(
-          spark, storeDir, applied, gcGraceMs = gcGraceMs)
-      },
-      gcGraceMs = gcGraceMs,
-      // electLatestOne fold: stamp the one-row-per-id marker the
-      // compacted fast paths require (round-18 ADVICE)
-      oneRowPerId = true)
-  }
-
-  /** Upsert-shaped DELETE: tombstone `ids` out of the store — see
-    * [[AnnStream.deleteStep]] / [[StoreCommits.tombstoneStep]] for the
-    * mask-until-compaction contract. */
-  def deleteStep(
-      ids: DataFrame, storeDir: String,
-      batchTag: String = java.util.UUID.randomUUID().toString,
-      idCol: String = "vec_id"): Long =
-    StoreCommits.tombstoneStep(ids, storeDir, idCol, batchTag)
-
-  /** Top-k cosine search against the accumulated store: each query
-    * probes its `nprobe` nearest pinned cells, and ONLY those cells'
-    * `ab=` partitions of each visible commit are opened.
-    *
-    * Scale shape (round 15): scoring is CELL-INDEXED and MAP-SIDE —
-    * a broadcast Map[cell → probing queries] (vectors shared by
-    * reference; nq×dim×4 B ≤ ~300 MB at the 100k×768 bound) feeds one
-    * tight mapPartitions pass that deserializes each stored vector
-    * ONCE and scores it against only its own cell's queries
-    * ([[StoreCommits.cosineSeq]], bit-identical to the previous
-    * Dedup.cosine pass), so the only shuffled rows are 24-byte
-    * `(query_id, neighbor_id, cos)` triples. The r14 shape shuffled
-    * the stored vector per CANDIDATE (twice); see the BENCH_NOTES
-    * round-15 search-scale A/B for the measured walls.
-    *
-    * Upsert contract: LATEST-WINS, always — superseded versions are
-    * masked globally before scoring and dropped physically at
-    * compaction; see [[AnnStream.searchStore]] for the full
-    * statement. */
+  /** Top-k cosine search: each query probes its `nprobe` nearest pinned
+    * cells ([[VectorStore.search]]). */
   def searchStore(
       spark: SparkSession, storeDir: String, queries: DataFrame, k: Int,
       nprobe: Int = 3, maxQueries: Int = 100000,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      // FILTERED search (round 17): a predicate over the store rows
-      // applied to the pruned scan before scoring -- PRE-filtering,
-      // exact top-k over the qualifying subset; see
-      // IvfSqStream.searchStore for the full rationale
-      candidateFilter: Option[Column] = None): DataFrame = {
-    import spark.implicits._
-    val dir = new org.apache.hadoop.fs.Path(storeDir)
-    require(fs(spark, dir).exists(new org.apache.hadoop.fs.Path(dir, "_IVF")),
-      s"not an ivf store (no _IVF marker): $storeDir")
-    val parts = StoreCommits.storePartsOf(fs(spark, dir), dir)
-    // ONE bounded collect serves the maxQueries check, the driver-side
-    // probe derivation, and the map-side scoring broadcast
-    val qRows = queries
-      .select(col(idCol).cast("long"), col(vecCol))
-      .limit(maxQueries + 1).collect()
-    require(qRows.length <= maxQueries,
-      s"searchStore got more than $maxQueries query rows — the query side " +
-        "must stay the bounded side; swap sides or raise maxQueries deliberately")
-    val qs: Array[(Long, Seq[Float])] =
-      qRows.map(r => (r.getLong(0), r.getSeq[Float](1)))
-    // CONSISTENT SNAPSHOT bracket: the quantizer and the commit list
-    // are two files, and a refit swapping BETWEEN the two reads would
-    // prune new-assignment rows with old centroids (missed neighbors).
-    // readStore lists its leaves eagerly, so re-reading the effective
-    // quantizer AFTER the listing and retrying on drift pins both to
-    // one generation (refits are rare — the loop converges immediately
-    // in practice; bounded so a runaway writer still fails loudly).
-    var meta = effectiveMeta(spark, storeDir, promote = false)
-      .getOrElse(throw new IllegalArgumentException(
-        s"not an ivf store (no _IVF marker): $storeDir"))
-    var stored: DataFrame = null
-    var probePairs: Array[(Long, Int)] = null
-    // ONE commit-set resolution per search (round-18): the scan and the
-    // supersede mask observe the SAME generation
-    var commits: Seq[org.apache.hadoop.fs.FileStatus] = Nil
-    val fsv = fs(spark, dir)
-    val ivfRoot = new org.apache.hadoop.fs.Path(s"$storeDir/ivfvecs")
-    var attempt = 0
-    var consistent = false
-    while (!consistent) {
-      val cs = meta.centroids
-      probePairs = qs.flatMap { case (qid, qv) =>
-        SimilaritySearch.nearestCellsOf(cs, qv, nprobe).map(c => (qid, c))
-      }
-      val wanted = probePairs.map(_._2).toSet.map((c: Int) =>
-        math.floorMod(org.apache.spark.sql.catalyst.expressions.XXH64
-          .hashLong(c.toLong, 42L), parts.toLong).toInt)
-      commits = DedupStream.visibleCommits(fsv, ivfRoot)
-      stored = DedupStream.readStoreFrom(
-        spark, commits, vecSchema,
-        excludeTag = " none ", partCol = "ab", wanted = wanted, fs0 = fsv)
-      val after = effectiveMeta(spark, storeDir, promote = false).get
-      if (after.render == meta.render) consistent = true
-      else {
-        meta = after
-        attempt += 1
-        require(attempt < 8, s"ivf store $storeDir quantizer kept moving " +
-          "during search planning — is a writer refitting in a loop?")
-      }
-    }
-    // scan parallelism probed on the BARE scan, before the masks (no
-    // exchange → no AQE stage materialization; StoreCommits.rebalanceBy)
-    val scanParts = stored.rdd.getNumPartitions
-    // tombstoned ids and superseded versions never reach scoring
-    // (delete masks until compaction; the supersede mask is global —
-    // the AnnStream.searchStore contract)
-    stored = StoreCommits.minusSuperseded(
-      StoreCommits.minusTombstones(stored, spark, storeDir, "neighbor_id"),
-      spark, storeDir, "ivfvecs", "neighbor_id", commits = Some(commits))
-    // pre-filter: scoring reads only the filtered relation
-    stored = candidateFilter.fold(stored)(stored.filter)
-    // CELL-INDEXED scoring (the IvfPqStream ADC shape): broadcast
-    // Map[cell → queries probing it] with each query's vector shared by
-    // reference across its nprobe entries (nq×dim×4 B ≤ ~300 MB at the
-    // 100k×768 bound), then one tight mapPartitions pass — each stored
-    // row deserializes its vector ONCE and scores only its own cell's
-    // queries. The rejected shapes, both measured at nq = 10k against a
-    // 160k store: the r14 join scored AFTER a per-candidate vector
-    // shuffle (~10⁸ vector rows, 541 s); a map-side cosine UDF on the
-    // join output still paid a per-PAIR array conversion (598 s). This
-    // pass scores the same 10⁸ pairs in seconds and ships 24-byte rows.
-    val byCell: Map[Int, Array[(Long, Array[Float])]] = {
-      val vecOf = qs.map { case (id, v) => (id, v.toArray) }.toMap
-      probePairs.groupBy(_._2).map { case (c, arr) =>
-        c -> arr.map { case (qid, _) => (qid, vecOf(qid)) }
-      }
-    }
-    val qBc = spark.sparkContext.broadcast(byCell)
-    // fold to per-query bounded top-k INSIDE the scoring loop, then the
-    // shared exchange-bound tail (StoreCommits.scoreAndRank): no
-    // per-pair tuple, survivors ≤ nq·k rows per partition, one bounded
-    // ranking window
-    StoreCommits.scoreAndRank(
-      StoreCommits.rebalanceBy(
-          stored.select(col("neighbor_id"), col("cell"), col("cvec")),
-          scanParts)
-        .as[(Long, Int, Array[Float])],
-      k, "cos") { (it, acc) =>
-      val qc = qBc.value
-      val none = Array.empty[(Long, Array[Float])]
-      it.foreach { case (nid, cell, cvec) =>
-        val entries = qc.getOrElse(cell, none)
-        var i = 0
-        while (i < entries.length) {
-          val qid = entries(i)._1
-          if (qid != nid)
-            acc.insert(qid, nid, StoreCommits.cosineSeq(entries(i)._2, cvec))
-          i += 1
-        }
-      }
-    }
-  }
-
-  /** The store's live vectors as a corpus relation — see
-    * [[StoreCommits.liveVectors]]. */
-  def liveVectors(spark: SparkSession, storeDir: String): org.apache.spark.sql.DataFrame =
-    StoreCommits.liveVectors(spark, storeDir, "ivfvecs", vecSchema,
-      multiRowPerId = false)
+      candidateFilter: Option[Column] = None): DataFrame =
+    search(spark, storeDir, queries, k, nprobe, rerank = 0, maxQueries, idCol, vecCol,
+      touches = None, candidateFilter)
 }

@@ -4,19 +4,18 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** The commit-store plumbing SHARED by the three ANN stores
-  * ([[AnnStream]], [[IvfStream]], [[IvfPqStream]]): atomic control-file
-  * writes, `_PARTS` reads, manifest claiming, the fold-and-swap
-  * compaction skeleton with one-generation GC grace, and the generic
-  * two-phase pending-marker promote for data-fit models. Each store
-  * keeps only its schema, key derivation, and fit/encode logic — a fix
-  * to the promote/GC machinery lands HERE, once. (The GC grace is
-  * TIME-based since round 17 — see [[gcUnlisted]].)
+/** The commit-store plumbing SHARED by the four ANN stores (the
+  * [[VectorStore]] lifecycle) and the dedup label store: atomic
+  * control-file writes, `_PARTS` reads, manifest claiming, the
+  * fold-and-swap compaction skeleton with time-based GC grace
+  * ([[gcUnlisted]]), and the generic two-phase pending-marker promote
+  * for data-fit models — a fix to the promote/GC machinery lands HERE,
+  * once.
   *
   * The contracts these primitives implement are documented at their
-  * original sites ([[DedupStream]] for manifest/`_FOLDED`/visibility,
-  * [[AnnStream.compactStore]] for the GC grace window,
-  * [[IvfStream.compactStore]] for the refit two-phase commit). */
+  * sites ([[DedupStream]] for manifest/`_FOLDED`/visibility,
+  * [[VectorStore]] for the store lifecycle and the refit two-phase
+  * commit). */
 private[graft] object StoreCommits {
 
   private def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
@@ -187,7 +186,8 @@ private[graft] object StoreCommits {
     val f = fs(spark, dir)
     val root = new org.apache.hadoop.fs.Path(dir, subdir)
     val pendingPath = new org.apache.hadoop.fs.Path(dir, s"$marker.pending")
-    def resolveOnce(): Option[M] = {
+    // (the effective model, whether the store has a visible commit)
+    def resolveOnce(): (Option[M], Boolean) = {
       val pending = readTextFile(f, pendingPath).map(parse)
       val visible = DedupStream.readManifest(f, root).getOrElse(Set.empty)
       pending match {
@@ -196,9 +196,10 @@ private[graft] object StoreCommits {
             writeTextFile(spark, dir, marker, render(clearTarget(m)))
             f.delete(pendingPath, false)
           }
-          Some(clearTarget(m))
+          (Some(clearTarget(m)), true)
         case _ =>
-          readTextFile(f, new org.apache.hadoop.fs.Path(dir, marker)).map(parse)
+          (readTextFile(f, new org.apache.hadoop.fs.Path(dir, marker)).map(parse),
+            visible.nonEmpty)
       }
     }
     // Marker OVERWRITES (a refit re-pin, a concurrent promote) go
@@ -209,14 +210,16 @@ private[graft] object StoreCommits {
     // falling through pending straight into the delete window read
     // "no marker" on a live store). A store that ever HAD a marker
     // only lacks one transiently, so an empty resolution retries
-    // briefly before it is believed; a genuinely unpinned dir pays
-    // ~100 ms once on its error path.
+    // briefly before it is believed. Only a store with a visible commit
+    // can be mid-overwrite (a promotion needs a refit, a refit needs
+    // commits), so a fresh store's first upsert pays no retry.
     var attempt = 0
-    var out = resolveOnce()
-    while (out.isEmpty && attempt < 4) {
+    var (out, committed) = resolveOnce()
+    while (out.isEmpty && committed && attempt < 4) {
       Thread.sleep(25L)
       attempt += 1
-      out = resolveOnce()
+      val (o, c) = resolveOnce()
+      out = o; committed = c
     }
     out
   }

@@ -82,6 +82,8 @@ class DayBoundedStoreSpec extends SparkSpec {
       assert(ResolvePayloadCids.workQueue(forResolve, now, maxDeals).collect().toSeq ==
         ResolvePayloadCids.workQueue(full, now, maxDeals).collect().toSeq)
     assert(sorted(SubmitDeals.eligible(forSubmit, now)) == sorted(SubmitDeals.eligible(full, now)))
+    assert(sorted(SubmitDeals.eligible(store.read(store.submitDays(now)), now)) ==
+      sorted(SubmitDeals.eligible(full, now)))
     val counts = ResolvePayloadCids.countsByState(full).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(store.stateCounts() == counts)
@@ -152,6 +154,29 @@ class DayBoundedStoreSpec extends SparkSpec {
     assert(DealObserverApp.submitTick(spark, cfg, _ => fail("nothing is eligible"), now)
       .submitted == 0)
     assert(store.latestVersion.contains(v))
+  }
+
+  test("submit never reads a day whose open-submit deals all expired unsubmitted") {
+    val root = newDir("expired-submit")
+    val store = new DealStateStore(spark, s"$root/store")
+    // day 5: payload known, never submitted, every term ended before `now`
+    store.write(fourDays()
+      .unionByName(resolvedAs(dayOfDeals(5), "bafyExpired", None).withColumn("term_min", lit(0))))
+    assert(store.openDays(_.openSubmit) == Set(dayOf(1), dayOf(3), dayOf(5)))
+    assert(store.submitDays(now) == Set(dayOf(1), dayOf(3)))
+    assert(store.submitDays(java.sql.Timestamp.valueOf("2024-06-01 00:00:00")).contains(dayOf(5)),
+      "open while a term is still running")
+    assertPrunedMatchesFull(store)
+    // a submit tick that read the expired day would now fail on its files
+    val v = store.latestVersion.get
+    new java.io.File(s"$root/store/v=$v/epoch_day=${dayOf(5)}").listFiles().foreach { f =>
+      if (f.getName.endsWith(".crc")) f.delete()
+      else java.nio.file.Files.write(f.toPath, "not parquet".getBytes("UTF-8"))
+    }
+    val cfg = DealObserverApp.Config(s"$root/events", s"$root/head.json",
+      s"$root/store", s"$root/ckpt")
+    val res = DealObserverApp.submitTick(spark, cfg, rows => (rows.length.toLong, 0L), now)
+    assert(res.postedDays == Set(dayOf(1), dayOf(3)))
   }
 
   test("pruned reads match the full read: counter-less _META, tombstoned day, compacted store") {

@@ -112,6 +112,32 @@ class IvfSqStreamSpec extends SparkSpec {
       "distractor duplicates must not perturb the planted top-5")
   }
 
+  test("empty batch, every store kind: no commit becomes visible, no model pinned, empty monitor") {
+    val corpus = SimilaritySearch.plantedNeighborCorpus(emb).filter(col("vec_id") < 200)
+    val none = corpus.filter(col("vec_id") < -1)
+    val kinds: Seq[(String, String, (DataFrame, String, String) => DataFrame)] = Seq(
+      ("annvecs", "_ANN", (b, d, t) => AnnStream.upsertStep(b, d, dim = 64, batchTag = t)),
+      ("ivfvecs", "_IVF", (b, d, t) => IvfStream.upsertStep(b, d, dim = 64, batchTag = t)),
+      ("pqvecs", "_IVFPQ", (b, d, t) => IvfPqStream.upsertStep(b, d, dim = 64, batchTag = t)),
+      ("sqvecs", "_IVFSQ", (b, d, t) => IvfSqStream.upsertStep(b, d, dim = 64, batchTag = t)))
+    for ((sub, marker, upsert) <- kinds) {
+      val store = java.nio.file.Files.createTempDirectory("empty").toString
+      val root = new org.apache.hadoop.fs.Path(s"$store/$sub")
+      def visible = DedupStream.visibleCommits(
+        root.getFileSystem(spark.sparkContext.hadoopConfiguration), root).map(_.getPath.getName)
+      // on an unpinned store: nothing published, nothing pinned
+      assert(upsert(none, store, "e0").count() == 0, sub)
+      assert(visible.isEmpty, s"$sub: an empty first batch must publish no commit")
+      assert(!new java.io.File(s"$store/$marker").exists(),
+        s"$sub: an empty first batch must not pin a model")
+      // on a pinned store: the visible commit set is unchanged
+      assert(upsert(corpus, store, "b0").count() > 0, sub)
+      assert(upsert(none, store, "e1").count() == 0, sub)
+      assert(visible == Seq("batch=b0"), s"$sub: an empty batch must publish no commit")
+      assert(!new java.io.File(s"$store/$sub/batch=e1").exists(), sub)
+    }
+  }
+
   test("tombstone delete masks immediately, compaction drops exactly the victim and retires") {
     import spark.implicits._
     val corpus = SimilaritySearch.plantedNeighborCorpus(emb)
@@ -123,7 +149,7 @@ class IvfSqStreamSpec extends SparkSpec {
     def neighbors(df: DataFrame): Set[Long] =
       df.select("neighbor_id").collect().map(_.getLong(0)).toSet
     def storedIds: Set[Long] =
-      DedupStream.readStore(spark, s"$store/sqvecs", IvfSqStream.vecSchema,
+      DedupStream.readStore(spark, s"$store/sqvecs", SqCodec.schema,
           excludeTag = " none ", partCol = "ab", wanted = (0 until 64).toSet)
         .select("neighbor_id").distinct().collect().map(_.getLong(0)).toSet
     val beforeSearch = IvfSqStream.searchStore(spark, store, queries, k = 5,

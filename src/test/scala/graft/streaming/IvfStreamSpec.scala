@@ -136,7 +136,7 @@ class IvfStreamSpec extends SparkSpec {
 
     // CRASH BEFORE THE SWAP: a pending file whose target never became
     // visible is a dead letter — readers and writers stay on _IVF
-    val deadMeta = IvfStream.IvfMeta(64, 16, 13L,
+    val deadMeta = IvfCodec.pin(Seq(64L, 16L, 13L),
       good.map(_.map(_ + 100.0)), Some("batch=refit-never-happened"))
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$store/_IVF.pending"),
@@ -159,11 +159,11 @@ class IvfStreamSpec extends SparkSpec {
       .map(_.getName).filter(_.startsWith("batch=refit-")).head
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$store/_IVF.pending"),
-      IvfStream.IvfMeta(64, 16, 13L, refitted, Some(visibleNow))
+      IvfCodec.pin(Seq(64L, 16L, 13L), refitted, Some(visibleNow))
         .render.getBytes("UTF-8"))
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$store/_IVF"),
-      IvfStream.IvfMeta(64, 16, 13L, good, None).render.getBytes("UTF-8"))
+      IvfCodec.pin(Seq(64L, 16L, 13L), good, None).render.getBytes("UTF-8"))
     // a reader already serves the post-swap truth…
     assert(IvfStream.loadCentroids(spark, store).flatMap(_.toSeq)
       .sameElements(refitted.flatMap(_.toSeq)), "post-swap pending is the truth")
@@ -173,6 +173,32 @@ class IvfStreamSpec extends SparkSpec {
       dim = 64, nlist = 16, seed = 13L, batchTag = "x0")
     assert(!new java.io.File(s"$store/_IVF.pending").exists(),
       "a writer must complete the crashed promotion")
+    assert(searchSet(store, queries) == expected)
+  }
+
+  test("search during a promotion's vanished-marker window resolves the post-swap pending") {
+    // a refit promotion replaces _IVF by delete-then-rename; hold that
+    // window open: _IVF absent, _IVF.pending naming the visible refit
+    // commit. The search must resolve the model through the pending file,
+    // not fail on the missing marker.
+    val corpus = SimilaritySearch.plantedNeighborCorpus(emb)
+    val queries = corpus.filter(col("vec_id") < 10)
+    val store = java.nio.file.Files.createTempDirectory("ivfw").toString
+    (0 until 2).foreach { c =>
+      IvfStream.upsertStep(corpus.filter(pmod(col("vec_id"), lit(2)) === c),
+        store, dim = 64, nlist = 16, seed = 13L, batchTag = s"w$c")
+    }
+    IvfStream.compactStore(spark, store, refit = true)
+    val expected = searchSet(store, queries)
+    assert(expected.size == 50)
+    val visibleNow = new java.io.File(s"$store/ivfvecs").listFiles()
+      .map(_.getName).filter(_.startsWith("batch=refit-")).head
+    val marker = java.nio.file.Paths.get(s"$store/_IVF")
+    val promoted = IvfCodec.parse(new String(java.nio.file.Files.readAllBytes(marker), "UTF-8"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$store/_IVF.pending"),
+      promoted.copy(target = Some(visibleNow)).render.getBytes("UTF-8"))
+    java.nio.file.Files.delete(marker)
+    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$store/._IVF.crc"))
     assert(searchSet(store, queries) == expected)
   }
 

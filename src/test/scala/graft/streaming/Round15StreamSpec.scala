@@ -180,7 +180,7 @@ class Round15StreamSpec extends SparkSpec {
     val probedPerCell = new Array[Long](coarse.length)
     queries.select(col("vec_id").cast("long"), col("embedding")).collect()
       .foreach { r =>
-        val qv = IvfPqStream.unitOf(r.getSeq[Float](1))
+        val qv = VectorCodec.unitOf(r.getSeq[Float](1))
         val dists = coarse.map { cc =>
           var d = 0.0; var t = 0
           while (t < qv.length) { val df = qv(t) - cc(t); d += df * df; t += 1 }

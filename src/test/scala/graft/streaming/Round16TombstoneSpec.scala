@@ -53,7 +53,7 @@ class Round16TombstoneSpec extends SparkSpec {
     val masked = AnnStream.searchStore(spark, store, queries, k = 5)
     assert(!neighbors(masked).contains(victim), "deleted id returned pre-compaction")
     // the physical rows are still there (drop is compaction's job)
-    assert(storedIds(store, "annvecs", AnnStream.vecSchema).contains(victim))
+    assert(storedIds(store, "annvecs", LshCodec.schema).contains(victim))
 
     // delete-then-reupsert BEFORE compaction: stays masked (documented)
     up(corpus.filter(col("vec_id") === victim), store, "readd-early")
@@ -62,7 +62,7 @@ class Round16TombstoneSpec extends SparkSpec {
 
     // compaction: physical drop + tombstone retirement
     AnnStream.compactStore(spark, store)
-    assert(!storedIds(store, "annvecs", AnnStream.vecSchema).contains(victim),
+    assert(!storedIds(store, "annvecs", LshCodec.schema).contains(victim),
       "compaction must drop the tombstoned rows")
     assert(StoreCommits.tombstoneCommits(spark, store).isEmpty,
       "applied tombstones must retire")
@@ -101,9 +101,9 @@ class Round16TombstoneSpec extends SparkSpec {
     IvfStream.deleteStep(Seq(v1).toDF("vec_id"), ivf, batchTag = "d0")
     assert(!neighbors(IvfStream.searchStore(spark, ivf, queries, k = 5, nprobe = 8))
       .contains(v1), "IVF deleted id returned pre-compaction")
-    val ivfRowsBefore = storedIds(ivf, "ivfvecs", IvfStream.vecSchema)
+    val ivfRowsBefore = storedIds(ivf, "ivfvecs", IvfCodec.schema)
     IvfStream.compactStore(spark, ivf)
-    val ivfRowsAfter = storedIds(ivf, "ivfvecs", IvfStream.vecSchema)
+    val ivfRowsAfter = storedIds(ivf, "ivfvecs", IvfCodec.schema)
     assert(ivfRowsAfter == ivfRowsBefore - v1,
       "IVF compaction must drop exactly the tombstoned id's rows")
     assert(StoreCommits.tombstoneCommits(spark, ivf).isEmpty)
@@ -122,9 +122,9 @@ class Round16TombstoneSpec extends SparkSpec {
     IvfPqStream.deleteStep(Seq(v2).toDF("vec_id"), pq, batchTag = "d0")
     assert(!neighbors(IvfPqStream.searchStore(spark, pq, queries, k = 5,
       nprobe = 8, rerank = 64)).contains(v2), "IVF-PQ deleted id returned pre-compaction")
-    val pqRowsBefore = storedIds(pq, "pqvecs", IvfPqStream.vecSchema)
+    val pqRowsBefore = storedIds(pq, "pqvecs", PqCodec.schema)
     IvfPqStream.compactStore(spark, pq)
-    assert(storedIds(pq, "pqvecs", IvfPqStream.vecSchema) == pqRowsBefore - v2,
+    assert(storedIds(pq, "pqvecs", PqCodec.schema) == pqRowsBefore - v2,
       "IVF-PQ compaction must drop exactly the tombstoned id's rows")
     assert(StoreCommits.tombstoneCommits(spark, pq).isEmpty)
     assert(!neighbors(IvfPqStream.searchStore(spark, pq, queries, k = 5,

@@ -136,7 +136,7 @@ class Round17VersionSpec extends SparkSpec {
         planes = 6, seed = 7L, tables = 8, batchTag = t); () },
       (s, q) => AnnStream.searchStore(spark, s, q, k = 10),
       s => AnnStream.compactStore(spark, s),
-      "annvecs", AnnStream.vecSchema, rowsPerVersion = 8)
+      "annvecs", LshCodec.schema, rowsPerVersion = 8)
   }
 
   test("IvfStream: changed-vector re-upsert serves v2 pre/post-compaction; one version per id") {
@@ -145,7 +145,7 @@ class Round17VersionSpec extends SparkSpec {
         nlist = 4, seed = 13L, batchTag = t); () },
       (s, q) => IvfStream.searchStore(spark, s, q, k = 10, nprobe = 4),
       s => IvfStream.compactStore(spark, s),
-      "ivfvecs", IvfStream.vecSchema, rowsPerVersion = 1)
+      "ivfvecs", IvfCodec.schema, rowsPerVersion = 1)
   }
 
   test("IvfPqStream: changed-vector re-upsert serves v2 pre/post-compaction; one version per id") {
@@ -155,7 +155,7 @@ class Round17VersionSpec extends SparkSpec {
       (s, q) => IvfPqStream.searchStore(spark, s, q, k = 10,
         nprobe = 4, rerank = 64),
       s => IvfPqStream.compactStore(spark, s),
-      "pqvecs", IvfPqStream.vecSchema, rowsPerVersion = 1)
+      "pqvecs", PqCodec.schema, rowsPerVersion = 1)
   }
 
   test("IvfSqStream: changed-vector re-upsert serves v2 pre/post-compaction; one version per id") {
@@ -165,7 +165,7 @@ class Round17VersionSpec extends SparkSpec {
       (s, q) => IvfSqStream.searchStore(spark, s, q, k = 10,
         nprobe = 4, rerank = 64),
       s => IvfSqStream.compactStore(spark, s),
-      "sqvecs", IvfSqStream.vecSchema, rowsPerVersion = 1)
+      "sqvecs", SqCodec.schema, rowsPerVersion = 1)
   }
 
   test("supersede mask is GLOBAL: stale version masked even when the new one lives in an unprobed cell") {
@@ -204,7 +204,7 @@ class Round17VersionSpec extends SparkSpec {
 
     // post-compaction: physically one row, same answers
     IvfStream.compactStore(spark, store)
-    assert(storeRows(store, "ivfvecs", IvfStream.vecSchema, 7L) == 1L)
+    assert(storeRows(store, "ivfvecs", IvfCodec.schema, 7L) == 1L)
     assert(!rowsOf(IvfStream.searchStore(spark, store,
       df(Seq(1L -> u)), k = 10, nprobe = 1)).exists(_._2 == 7L))
     assert(rowsOf(IvfStream.searchStore(spark, store,

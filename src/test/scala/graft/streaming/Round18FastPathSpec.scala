@@ -74,7 +74,7 @@ class Round18FastPathSpec extends SparkSpec {
       s"expected a fold target, got ${target.getName}")
     fs.delete(new org.apache.hadoop.fs.Path(target, "_ONE_ROW_PER_ID"), false)
     val subs = fs.listStatus(target).filter(_.isDirectory).map(_.getPath.toString)
-    val rows = spark.read.schema(IvfSqStream.vecSchema).parquet(subs.toSeq: _*)
+    val rows = spark.read.schema(SqCodec.schema).parquet(subs.toSeq: _*)
     val doubled = rows.unionByName(rows)
       .withColumn("ab",
         pmod(xxhash64(col("cell").cast("long")), lit(64L)).cast("int"))
