@@ -1412,7 +1412,7 @@ object OpsQueries {
     * with CHANGED vectors — a 0.5/0.5 query/distractor mix whose
     * cosine sits far below the v1 copies' ≥ 0.98. The search runs
     * TWICE, pre-compaction (the [[graft.streaming.StoreCommits
-    * .minusSuperseded]] global mask) and post-compaction (the
+    * .deltaMasked]] global mask) and post-compaction (the
     * [[graft.streaming.StoreCommits.electLatest]] physical fold), and
     * both states are hash-gated against ONE DuckDB brute-force oracle
     * over the LATEST corpus. Under the pre-round-17 max-over-versions

@@ -276,7 +276,7 @@ object DedupStream {
 
   /** [[readStore]] over an ALREADY-RESOLVED commit set — the round-18
     * consistency thread: a search resolves its visible commits ONCE and
-    * feeds the same set to the scan, the supersede mask, and the
+    * feeds the same set to the scan, the read mask, and the
     * compacted fast-path decision, so a fold landing mid-search can
     * never split them across generations. */
   private[streaming] def readStoreFrom(
@@ -1158,10 +1158,10 @@ object DedupStream {
     if (needsFold) {
       val target = s"batch=compact-${java.util.UUID.randomUUID()}"
       val parts = lit(storeMetaParts(spark, storeDir).toLong)
-      val resolved = StoreCommits.minusTombstones(
+      val resolved = StoreCommits.deltaMasked(
         readAllById(spark, storeDir)
           .groupBy("id").agg(min("component").as("component")),
-        spark, storeDir, "id", subdir = LabelTombs)
+        spark, storeDir, "id", tombSubdir = LabelTombs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // sorted within partitions: tight per-row-group id/component
       // min-max stats, so the tick path's pushed isin/equality filters
@@ -1509,13 +1509,14 @@ object DedupStream {
   /** The store's current full labelling — min-wins over every visible
     * byId delta commit (labels are monotone non-increasing, so the
     * minimum IS the latest). Lazy: listing is driver-side, the
-    * resolve is one hash aggregation when a caller forces it. Empty
-    * when no tick has published yet. */
+    * resolve is one hash aggregation when a caller forces it; pending
+    * deletes are collected into the tombstone mask at call time (one
+    * scan job). Empty when no tick has published yet. */
   def latestLabels(spark: SparkSession, storeDir: String): DataFrame =
-    StoreCommits.minusTombstones(
+    StoreCommits.deltaMasked(
       readAllById(spark, storeDir)
         .groupBy("id").agg(min("component").as("component")),
-      spark, storeDir, "id", subdir = LabelTombs)
+      spark, storeDir, "id", tombSubdir = LabelTombs)
 
   private val LabelTombs = "labels/tombstones"
 

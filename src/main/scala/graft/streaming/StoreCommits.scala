@@ -234,21 +234,21 @@ private[graft] object StoreCommits {
   //   - every upsert commit is stamped with one monotonic store-wide
   //     version ([[nextVersion]] — a `_SEQ` control file, single-writer
   //     like every store write);
-  //   - search masks superseded rows GLOBALLY ([[minusSuperseded]]):
-  //     the (id, ver) projection of the delta commits since the last
-  //     fold is aggregated to max-ver-per-id and applied as a bounded
-  //     join — so a stale row in a PROBED partition is dropped even
-  //     when the newer version lives in a partition the query never
-  //     opens (a groupBy-max on the pruned scan alone could not see
-  //     it). Cost is bounded by upserts-since-compaction, exactly the
-  //     tombstone bound, and a freshly-folded store pays nothing (the
-  //     plan is untouched);
+  //   - search masks superseded rows GLOBALLY ([[deltaMasked]]): the
+  //     (id, ver) projection of the delta commits since the last fold
+  //     is reduced to max-ver-per-id, together with the tombstones —
+  //     so a stale row in a PROBED partition is dropped even when the
+  //     newer version lives in a partition the query never opens (a
+  //     groupBy-max on the pruned scan alone could not see it). Cost is
+  //     bounded by upserts-since-compaction, exactly the tombstone
+  //     bound, and a freshly-folded store with no pending delete pays
+  //     nothing (the plan is untouched);
   //   - compaction keeps latest-per-id ([[electLatest]]), which also
   //     closes the row-per-update space leak.
 
   /** Fold-target name test: commits written by [[foldAndSwap]] carry
     * these prefixes (every store's compact/refit target). Everything
-    * else is a DELTA commit — the bounded set [[minusSuperseded]]
+    * else is a DELTA commit — the bounded set [[deltaMasked]]
     * reads. */
   private def isFoldTarget(name: String): Boolean =
     name.startsWith("batch=compact-") || name.startsWith("batch=refit-")
@@ -277,71 +277,94 @@ private[graft] object StoreCommits {
     v
   }
 
-  /** GLOBAL latest-wins search mask: drop store rows superseded by a
-    * later re-upsert of the same id. The mask relation is the max
-    * version per id over the DELTA commits (everything since the last
-    * fold — fold targets carry at most one version per id already and
-    * every later upsert outversions them, so they never need reading).
-    * Broadcast below `broadcastDeltaBytes` of delta files, shuffle join
-    * above it; a store with no delta commits returns the UNTOUCHED
-    * plan. Size discipline is the tombstone one: compaction retires
-    * the deltas, so the mask is bounded by upserts-since-compaction —
-    * size `compactEvery` accordingly at corpus scale. */
-  def minusSuperseded(
-      df: DataFrame, spark: SparkSession, storeDir: String, subdir: String,
-      idCol: String, broadcastDeltaBytes: Long = 1L << 30,
-      // the commit set the caller's scan ADOPTED (round-18 ADVICE:
-      // the mask must be computed against the SAME generation the scan
-      // reads — a fold landing between the scan's listing and a fresh
-      // listing here would hide the deltas while the scan still reads
-      // the pre-fold leaves, serving stale rows unmasked)
-      commits: Option[Seq[org.apache.hadoop.fs.FileStatus]] = None): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(s"$storeDir/$subdir")
-    val f = fs(spark, root)
-    if (!f.exists(root)) return df
-    val deltas = commits.getOrElse(DedupStream.visibleCommits(f, root))
-      .filterNot(s => isFoldTarget(s.getPath.getName))
-    if (deltas.isEmpty) return df
-    // leaf enumeration mirrors readStore (explicit, no partition
-    // discovery) but UNPRUNED — the mask must be global: both layouts
-    // (hash-partitioned ab= subdirs, L0 single files), all partitions
-    val leaves = deltas.flatMap { b =>
-      val subs = f.listStatus(b.getPath).filter(_.isDirectory)
-        .filter(_.getPath.getName.startsWith("ab="))
-      if (subs.isEmpty) Seq(b.getPath.toString)
-      else subs.toSeq.map(_.getPath.toString)
+  /** A collected read mask: `ids` ascending, `keeps(i)` the lowest
+    * version of `ids(i)` that survives (Long.MaxValue: tombstoned). Two
+    * primitive arrays, 16 bytes an id, shipped once per executor. */
+  private final class KeepMask(ids: Array[Long], keeps: Array[Long]) extends Serializable {
+    def survives(id: Long, ver: Long): Boolean = {
+      val i = java.util.Arrays.binarySearch(ids, id)
+      i < 0 || ver >= keeps(i)
     }
-    if (leaves.isEmpty) return df
+  }
+
+  /** THE store read mask, one per read: drop the rows a later upsert
+    * superseded and the rows of tombstoned ids. It maps id → lowest
+    * surviving version — the max version over the DELTA commits of the
+    * adopted set `commits` (fold targets carry at most one version per id
+    * already and every later upsert outversions them), and Long.MaxValue
+    * for every id a visible tombstone under `tombSubdir` names (delete
+    * wins until the compaction that applies it). The delta leaves are
+    * read UNPRUNED — a stale row in a PROBED partition must drop even when
+    * its newer version lives in a partition the query never opens. Both
+    * sides are ONE relation, `(id, ver)` over the delta leaves unioned
+    * with `(id, MaxValue)` over the tombstone leaves:
+    *   - up to `broadcastDeltaBytes` of delta files it is reduced by a
+    *     map-side max per id and collected (one plain-scan job, no
+    *     shuffle), then applied as a filter over a broadcast variable,
+    *     which launches no job (a broadcast join would: Spark collects a
+    *     broadcast side through a job even from a local relation);
+    *   - above it (a bulk-loaded, never-compacted store) it stays
+    *     distributed: max per id, shuffle join.
+    * The size rule reads the FILE LISTING, not a count() job: delta files
+    * carry the vector column, ≥ ~300 B a row at dim 64, while a mask row
+    * is 16 B, so 1 GiB of deltas is ≤ ~64 MB of mask. No delta and no
+    * tombstone: the UNTOUCHED plan. `commits = Nil` is the tombstone-only
+    * mask (compaction, label reads); `df` needs a `ver` column only when
+    * the adopted set has delta commits. Size is bounded by upserts and
+    * deletes since the last compaction, which retires both. */
+  def deltaMasked(
+      df: DataFrame, spark: SparkSession, storeDir: String, idCol: String,
+      commits: Seq[org.apache.hadoop.fs.FileStatus] = Nil,
+      tombSubdir: String = "tombstones",
+      broadcastDeltaBytes: Long = 1L << 30): DataFrame = {
+    val f = fs(spark, new org.apache.hadoop.fs.Path(storeDir))
+    var deltaBytes = 0L
+    // both layouts: hash-partitioned ab= subdirs, L0 single files
+    val deltaLeaves = commits.filterNot(s => isFoldTarget(s.getPath.getName)).flatMap { b =>
+      val kids = f.listStatus(b.getPath)
+      val subs = kids.filter(s => s.isDirectory && s.getPath.getName.startsWith("ab="))
+      deltaBytes += kids.iterator.filter(_.isFile).map(_.getLen).sum +
+        subs.iterator.flatMap(s => f.listStatus(s.getPath)).map(_.getLen).sum
+      if (subs.isEmpty) Seq(b.getPath.toString) else subs.toSeq.map(_.getPath.toString)
+    }
+    val tombLeaves = DedupStream.visibleCommits(f,
+      new org.apache.hadoop.fs.Path(s"$storeDir/$tombSubdir")).map(_.getPath.toString)
+    if (deltaLeaves.isEmpty && tombLeaves.isEmpty) return df
     val verSchema = StructType(Seq(
       org.apache.spark.sql.types.StructField(idCol,
         org.apache.spark.sql.types.LongType, nullable = false),
       org.apache.spark.sql.types.StructField("ver",
         org.apache.spark.sql.types.LongType, nullable = false)))
-    val latest = spark.read.schema(verSchema).parquet(leaves: _*)
-      .groupBy(col(idCol)).agg(max(col("ver")).as("__latest"))
-    // broadcast decision from the FILE LISTING, not a count() job (the
-    // count was a whole extra pass over the deltas per search): delta
-    // file bytes include the vector column, so bytes-per-row is ≥
-    // ~300 B (dim 64 float) while a mask row is 16 B — 1 GiB of delta
-    // files is ≤ ~4M ids ≈ 64 MB broadcast, safely under the 8 GiB
-    // broadcast hard cap at ANY dim. A bulk-loaded never-compacted
-    // store (TBs of deltas) falls through to the shuffle join instead
-    // of OOMing the driver.
-    val deltaBytes = deltas.iterator.flatMap { b =>
-      val st = f.getFileStatus(b.getPath)
-      if (st.isDirectory)
-        f.listStatus(b.getPath).iterator.flatMap { s =>
-          if (s.isDirectory) f.listStatus(s.getPath).iterator.map(_.getLen)
-          else Iterator.single(s.getLen)
-        }
-      else Iterator.single(st.getLen)
-    }.sum
-    val joined =
-      if (deltaBytes <= broadcastDeltaBytes)
-        df.join(broadcast(latest), Seq(idCol), "left")
-      else df.join(latest, Seq(idCol), "left")
-    joined.filter(col("__latest").isNull || col("ver") >= col("__latest"))
-      .drop("__latest")
+    val rel = (Seq(deltaLeaves).filter(_.nonEmpty).map(ls =>
+        spark.read.schema(verSchema).parquet(ls: _*).toDF("id", "ver")) ++
+      Seq(tombLeaves).filter(_.nonEmpty).map(ls =>
+        spark.read.schema(tombSchema).parquet(ls: _*).withColumn("ver", lit(Long.MaxValue))))
+      .reduce(_ union _)
+    if (deltaBytes > broadcastDeltaBytes) {
+      val keep = rel.groupBy(col("id").as(idCol)).agg(max(col("ver")).as("__keep"))
+      return df.join(keep, Seq(idCol), "left")
+        .filter(col("__keep").isNull || col("ver") >= col("__keep")).drop("__keep")
+    }
+    // over the relation's own InternalRows: no typed-Dataset encoders
+    // to derive and analyze per read
+    val partial = rel.queryExecution.toRdd.mapPartitions { it =>
+      val m = scala.collection.mutable.LongMap.empty[Long]
+      it.foreach { r =>
+        val (id, v) = (r.getLong(0), r.getLong(1))
+        if (v > m.getOrElse(id, Long.MinValue)) m(id) = v
+      }
+      m.iterator
+    }.collect()
+    val byId = scala.collection.mutable.LongMap.empty[Long]
+    partial.foreach { case (id, v) => if (v > byId.getOrElse(id, Long.MinValue)) byId(id) = v }
+    val ids = byId.keys.toArray
+    java.util.Arrays.sort(ids)
+    val mask = spark.sparkContext.broadcast(new KeepMask(ids, ids.map(byId(_))))
+    val live = udf(new org.apache.spark.sql.api.java.UDF2[Long, Long, Boolean] {
+      def call(id: Long, ver: Long): Boolean = mask.value.survives(id, ver)
+    }, org.apache.spark.sql.types.BooleanType)
+    // a tombstone-only mask holds only MaxValue entries: any version drops
+    df.filter(live(col(idCol), if (deltaLeaves.isEmpty) lit(0L) else col("ver")))
   }
 
   /** Compaction-side election: keep each id's max-version rows (ALL of
@@ -479,14 +502,14 @@ private[graft] object StoreCommits {
     rebalanceBy(df, df.rdd.getNumPartitions)
 
   /** [[rebalance]] with the partition count SUPPLIED by the caller —
-    * taken from the bare pruned scan, before the tombstone/supersede
-    * masks (optimization round 18): `df.rdd.getNumPartitions` on a
-    * masked relation materializes every exchange under AQE (the
-    * supersede mask's aggregation + broadcast ran as a whole extra job
-    * per search, then re-ran in the real query — exchange reuse does
-    * not span QueryExecutions). The masks are partition-preserving
-    * broadcast joins, so the scan's count IS the masked relation's
-    * count on every bounded-delta store; the one divergence (a
+    * taken from the bare pruned scan, before the read mask
+    * (optimization round 18): `df.rdd.getNumPartitions` on a relation
+    * with an exchange materializes it under AQE (a mask aggregation +
+    * broadcast ran as a whole extra job per search, then re-ran in the
+    * real query — exchange reuse does not span QueryExecutions). The
+    * collected mask is a partition-preserving filter, so the scan's
+    * count IS the masked relation's count on every bounded-delta
+    * store; the one divergence (a
     * shuffle-join mask on TBs of never-compacted deltas) at worst adds
     * one redundant repartition of an already-parallel relation. */
   def rebalanceBy(df: DataFrame, have: Int): DataFrame = {
@@ -689,14 +712,14 @@ private[graft] object StoreCommits {
 
   /** STORE-AS-CORPUS read (round 17): the store's LIVE vectors as a
     * plain (neighbor_id, cvec) relation — exactly one deterministic
-    * row per live id, after the tombstone mask, the supersede mask,
-    * and the [[latestVecs]] election (which also collapses an LSH
+    * row per live id, after the one read mask ([[deltaMasked]]) and
+    * the [[latestVecs]] election (which also collapses an LSH
     * id's per-table rows). This is the read surface a downstream
     * batch job consumes (recluster the serving corpus, join store
     * contents against fresh metadata, export for training) without
     * going through search. Cost: one full-store scan of (id, ver,
     * cvec) — column-pruned, all partitions — plus the delta-bounded
-    * masks; on a freshly-compacted store the masks are free and the
+    * mask; on a freshly-compacted store the mask is free and the
     * election is a single hash aggregation. */
   def liveVectors(
       spark: SparkSession, storeDir: String, subdir: String,
@@ -704,7 +727,7 @@ private[graft] object StoreCommits {
     val dir = new org.apache.hadoop.fs.Path(storeDir)
     val f = fs(spark, dir)
     val parts = storePartsOf(f, dir)
-    // ONE commit-set resolution feeds the scan, the supersede mask, and
+    // ONE commit-set resolution feeds the scan, the read mask, and
     // the fast-path decision — they must all observe the same
     // generation (round-18 ADVICE: a fold landing between two separate
     // manifest reads could flip the fast path on while the scan still
@@ -714,9 +737,7 @@ private[graft] object StoreCommits {
     val all = DedupStream.readStoreFrom(spark, commits, schema,
       excludeTag = " none ", partCol = "ab",
       wanted = (0 until parts).toSet)
-    val masked = minusSuperseded(
-      minusTombstones(all, spark, storeDir, "neighbor_id"),
-      spark, storeDir, subdir, "neighbor_id", commits = Some(commits))
+    val masked = deltaMasked(all, spark, storeDir, "neighbor_id", commits)
     // freshly-compacted fast path (optimization round 17): when every
     // visible commit is a fold target WRITTEN BY [[electLatestOne]]
     // (the in-dir one-row marker — a pre-round-17 electLatest fold
@@ -749,22 +770,28 @@ private[graft] object StoreCommits {
 
   /** The fused tiers' exact re-rank, shared by the IVF-PQ and IVF-SQ
     * stores: join the approximate shortlist to one deterministic
-    * vector per candidate ([[latestVecs]]) and the raw queries, score
-    * exact cosine, rank. `vecs` must be (neighbor_id, cvec) with one
-    * row per id; `queries` must be (query_id, qvec). */
+    * vector per candidate ([[latestVecs]]), score exact cosine against
+    * the query's vector with [[cosineSeq]] (the cosine expression's
+    * arithmetic), rank. `vecs` must be (neighbor_id, cvec) with one row
+    * per id; `queries` is the search's already-collected bounded query
+    * side, shipped as a broadcast variable (a join against it as a
+    * local relation would run one more job to broadcast it). */
   def exactRerank(
-      shortlist: DataFrame, vecs: DataFrame, queries: DataFrame,
+      shortlist: DataFrame, vecs: DataFrame, queries: Array[(Long, Array[Float])],
       k: Int): DataFrame = {
-    val exact = shortlist
-      .join(vecs, Seq("neighbor_id"))
-      .join(queries, Seq("query_id"))
-      .withColumn("cos", graft.ops.Dedup.cosine(col("qvec"), col("cvec")))
+    val spark = shortlist.sparkSession
+    import spark.implicits._
+    val qBc = spark.sparkContext.broadcast(queries.toMap)
     // one deterministic row per (query, neighbor) by construction
-    // (shortlist keyed by the pair; vecs/queries one row per id), so
-    // the shared fold-ranked tail is the exact window it replaces —
-    // one exchange, no sort (optimization round 17)
-    rankSurvivors(
-      exact.select(col("query_id"), col("neighbor_id"), col("cos")), k, "cos")
+    // (shortlist keyed by the pair; vecs one row per id), so the shared
+    // fold-ranked tail is the exact window it replaces — one exchange,
+    // no sort (optimization round 17)
+    val exact = shortlist.join(vecs, Seq("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), col("cvec"))
+      .as[(Long, Long, Array[Float])]
+      .map { case (q, nid, cvec) => (q, nid, cosineSeq(qBc.value(q), cvec)) }
+      .toDF("query_id", "neighbor_id", "cos")
+    rankSurvivors(exact, k, "cos")
   }
 
   // ======== tombstone deletes (round 16) ========
@@ -776,8 +803,8 @@ private[graft] object StoreCommits {
   /** Upsert-shaped DELETE for the commit stores: `ids` land as a
     * tombstone commit under `<storeDir>/<subdir>/batch=<tag>`
     * (single-column distinct longs, one file, manifest-gated like
-    * every commit). Search filters tombstoned ids out
-    * ([[minusTombstones]]); the next compaction physically drops
+    * every commit). Reads filter tombstoned ids out
+    * ([[deltaMasked]]); the next compaction physically drops
     * their rows and then RETIRES the applied tombstones
     * ([[retireTombstones]]), after which the store equals one built
     * from the survivors — the takedown path a 100 TB serving corpus
@@ -797,33 +824,17 @@ private[graft] object StoreCommits {
     val root = new org.apache.hadoop.fs.Path(s"$storeDir/$subdir")
     ensureManifestClaimed(spark, root)
     val commitDir = s"$storeDir/$subdir/batch=$batchTag"
-    // the distinct-id count rides the write as an observed metric
-    // (optimization round 18): the read-back count was a whole extra
-    // job per delete just to re-count rows this write produced
+    // ONE job: the distinct-id count rides the write as an observed
+    // metric, and the ids coalesce to one partition BEFORE the distinct,
+    // whose aggregate then needs no exchange (the commit is one file
+    // either way)
     val obs = org.apache.spark.sql.Observation()
     ids.select(col(idColName).cast("long").as("id"))
-      .filter(col("id").isNotNull).distinct()
+      .filter(col("id").isNotNull).coalesce(1).distinct()
       .observe(obs, count(lit(1)).as("n"))
-      .coalesce(1).write.mode("overwrite").parquet(commitDir)
+      .write.mode("overwrite").parquet(commitDir)
     DedupStream.publishCommit(spark, root, s"batch=$batchTag")
     obs.get("n").asInstanceOf[Long]
-  }
-
-  /** The store's visible tombstoned-id relation (column `id`, LONG;
-    * empty relation when none). Size is bounded by deletes since the
-    * last compaction — the retire step keeps it from accreting. */
-  def tombstones(
-      spark: SparkSession, storeDir: String,
-      subdir: String = "tombstones"): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(s"$storeDir/$subdir")
-    val f = fs(spark, root)
-    val leaves =
-      if (!f.exists(root)) Nil
-      else DedupStream.visibleCommits(f, root).map(_.getPath.toString)
-    if (leaves.nonEmpty)
-      spark.read.schema(tombSchema).parquet(leaves: _*).distinct()
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tombSchema)
   }
 
   /** Names of the visible tombstone commits — captured BEFORE a
@@ -837,19 +848,6 @@ private[graft] object StoreCommits {
     if (!f.exists(root)) Set.empty
     else DedupStream.visibleCommits(f, root).map(_.getPath.getName).toSet
   }
-
-  /** Drop tombstoned ids from a store relation: a broadcast anti-join
-    * on `idCol` when tombstones exist, the UNTOUCHED plan when none —
-    * a store that never saw a delete pays nothing (and its gates stay
-    * plan-identical). */
-  def minusTombstones(
-      df: DataFrame, spark: SparkSession, storeDir: String, idCol: String,
-      subdir: String = "tombstones"): DataFrame =
-    if (tombstoneCommits(spark, storeDir, subdir).isEmpty) df
-    else df.join(
-      broadcast(tombstones(spark, storeDir, subdir)
-        .withColumnRenamed("id", idCol)),
-      Seq(idCol), "left_anti")
 
   /** Retire APPLIED tombstone commits after a compaction's manifest
     * swap: their names extend `_FOLDED` (a replayed delete tag cannot
@@ -883,9 +881,9 @@ private[graft] object StoreCommits {
       DedupStream.visibleCommits(f, root).map(_.getPath.getName).toSet -- applied
     DedupStream.writeManifest(spark, root, remaining)
     // physical deletion deferred by the grace window — an in-flight
-    // reader's minusTombstones still opens these files; the mask it
-    // applies is against the generation it is reading, so the answer
-    // is unchanged
+    // reader's mask (or a distributed one, built lazily) may still open
+    // these files; the mask it applies is against the generation it is
+    // reading, so the answer is unchanged
     gcUnlisted(spark, root, gcGraceMs, stampNow = applied)
   }
 

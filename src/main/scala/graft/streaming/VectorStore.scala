@@ -316,8 +316,7 @@ private[streaming] abstract class VectorStore(c: VectorCodec) {
       spark, storeDir, c.subdir, c.schema, abCol, c.keyCols,
       extraWork = refit || applied.nonEmpty,
       transform = { all0 =>
-        val all = elect(
-          StoreCommits.minusTombstones(all0, spark, storeDir, "neighbor_id"), "neighbor_id")
+        val all = elect(StoreCommits.deltaMasked(all0, spark, storeDir, "neighbor_id"), "neighbor_id")
         // promote a crashed refit's pending BEFORE this fold replaces its target
         val m = pinned(spark, storeDir, promote = true)
         if (refit) {
@@ -368,7 +367,7 @@ private[streaming] abstract class VectorStore(c: VectorCodec) {
     // new-assignment rows with the old model. The leaf listing is eager,
     // so re-reading the model AFTER it and retrying on change pins both
     // to one generation. ONE commit-set resolution feeds the scan, the
-    // supersede mask and the compacted fast path.
+    // read mask and the compacted fast path.
     var probe: Probe = null
     var commits: Seq[org.apache.hadoop.fs.FileStatus] = Nil
     var scan: DataFrame = null
@@ -390,25 +389,23 @@ private[streaming] abstract class VectorStore(c: VectorCodec) {
           "during search planning — is a writer refitting in a loop?")
       }
     }
-    // scan parallelism probed on the BARE scan, before the masks (no
+    // scan parallelism probed on the BARE scan, before the mask (no
     // exchange → no AQE stage materialization; StoreCommits.rebalanceBy)
     val scanParts = scan.rdd.getNumPartitions
-    val masked = StoreCommits.minusSuperseded(
-      StoreCommits.minusTombstones(scan, spark, storeDir, "neighbor_id"),
-      spark, storeDir, c.subdir, "neighbor_id", commits = Some(commits))
+    // ONE mask (supersedes + tombstones) for the scoring scan and the
+    // re-rank's vectors alike, collected once per search
+    val masked = StoreCommits.deltaMasked(scan, spark, storeDir, "neighbor_id", commits)
     val stored = candidateFilter.fold(masked)(masked.filter)
     val ranked = probe.score(
       StoreCommits.rebalanceBy(stored.select(c.scoreCols: _*), scanParts), math.max(rerank, k))
     if (!c.exactRerank) ranked
     else {
-      val qRaw = spark.createDataFrame(
-        qRows.toSeq.map(r => (r.getLong(0), r.getSeq[Float](1)))).toDF("query_id", "qvec")
       // one DETERMINISTIC latest vector per id; a store of only
       // one-row-per-id folds (same adopted commit set) elects nothing
       val vecs =
         if (StoreCommits.compactedOnly(f, commits)) stored.select(col("neighbor_id"), col("cvec"))
         else StoreCommits.latestVecs(stored.select(col("neighbor_id"), col("ver"), col("cvec")))
-      StoreCommits.exactRerank(ranked.select("query_id", "neighbor_id"), vecs, qRaw, k)
+      StoreCommits.exactRerank(ranked.select("query_id", "neighbor_id"), vecs, qs, k)
     }
   }
 

@@ -13,7 +13,16 @@ object TestSpark {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  val fixtures = "/root/repo/src/test/resources/fixtures"
+  /** The golden fixtures of this checkout: the test classpath's copy, or,
+    * when the classpath holds the packaged tests jar (a forked
+    * `Test/runMain`), the source tree under the working directory, which
+    * sbt sets to the project root. Spark reads them by path, so never
+    * from inside a jar. */
+  val fixtures: String = {
+    val url = getClass.getResource("/fixtures/rawActorEvents.json")
+    if (url.getProtocol == "file") new java.io.File(url.toURI).getParent
+    else new java.io.File("src/test/resources/fixtures").getAbsolutePath
+  }
 }
 
 trait SparkSpec extends AnyFunSuite {

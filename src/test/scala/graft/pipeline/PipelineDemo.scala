@@ -17,7 +17,7 @@ object PipelineDemo {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val fx = "/root/repo/src/test/resources/fixtures"
+    val fx = graft.TestSpark.fixtures
     val raw = spark.read.schema(RawActorEvent.schema).json(s"$fx/rawActorEvents.json")
     val peer = spark.read.json(s"$fx/minerPeerIds.json")
     val pay = spark.read.json(s"$fx/payloadCids.json")
