@@ -3,6 +3,7 @@ package graft
 import graft.state.{DealStateStore, ResolvePayloadCids, SubmitDeals}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
+import scala.util.Try
 
 /** The reference backend binary restated: three loops over one state
   * store (reference: backend/bin/deal-observer-backend.js:165-173).
@@ -98,9 +99,13 @@ object DealObserverApp {
       if (queued > 0) {
         val days = queue.select(DealStateStore.dayCol).distinct().collect().map(_.getInt(0))
         writeDays(store, lookup(state, queue), days.toSet)
-        // S12: reference resolve loop telemetry (resolve-payload-cids.js:93-97)
-        new graft.streaming.MetricsSink(spark, cfg.metricsRoot)
-          .record("resolve", store.stateCounts() + ("queued" -> queued), now)
+        // S12: reference resolve loop telemetry (resolve-payload-cids.js:93-97),
+        // plus the store's footprint gauges in the same write
+        val fp = store.footprint()
+        new graft.streaming.MetricsSink(spark, cfg.metricsRoot).record("resolve",
+          store.stateCounts() ++ Map("queued" -> queued,
+            "store_chain_depth" -> fp.chainDepth.toLong, "store_day_files" -> fp.dayFiles,
+            "store_day_bytes" -> fp.dayBytes), now)
       }
     } finally queue.unpersist()
   }
@@ -126,6 +131,23 @@ object DealObserverApp {
     }
     res
   }
+
+  /** One tick of `main`: the named loops in order, each in its own
+    * `Try`. A failing loop prints its error and records `failed = 1`
+    * under its name in `_metrics`, and the tick goes on with the next
+    * loop, as the reference swallows and reports a loop's error
+    * (bin:58-60). Returns the names of the loops that failed. */
+  def runTick(spark: SparkSession, cfg: Config, now: java.sql.Timestamp,
+      loops: Seq[(String, () => Unit)]): Seq[String] =
+    loops.flatMap { case (name, body) =>
+      Try(body()).failed.toOption.map { e =>
+        System.err.println(s"[$name] loop failed: $e")
+        e.printStackTrace()
+        Try(new graft.streaming.MetricsSink(spark, cfg.metricsRoot)
+          .record(name, Map("failed" -> 1L), now))
+        name
+      }
+    }
 
   def main(args: Array[String]): Unit = {
     val cfg = Config(args(0), args(1), args(2), args(3))
@@ -172,17 +194,19 @@ object DealObserverApp {
     var tick = 0
     while (tick < maxTicks) {
       val now = new java.sql.Timestamp(System.currentTimeMillis())
-      val q = observeQuery(spark, cfg, chainHead _, Trigger.AvailableNow())
-      q.awaitTermination()
-      live match {
-        case Some((dir, url)) => resolveTickLive(spark, cfg, dir, url, now)
-        case None => resolveTick(spark, cfg, peer, pay, now)
-      }
-      val sub = submitTick(spark, cfg,
-        rows => { println(s"[submit] POST batch of ${rows.length}"); (rows.length.toLong, 0L) },
-        now)
-      val store = new DealStateStore(spark, cfg.storeRoot)
-      println(s"[tick $tick] state=${store.rowCount()} submitted=${sub.submitted}")
+      var submitted = 0L
+      runTick(spark, cfg, now, Seq(
+        "observe" -> (() =>
+          observeQuery(spark, cfg, chainHead _, Trigger.AvailableNow()).awaitTermination()),
+        "resolve" -> (() => live match {
+          case Some((dir, url)) => resolveTickLive(spark, cfg, dir, url, now)
+          case None => resolveTick(spark, cfg, peer, pay, now)
+        }),
+        "submit" -> (() => submitted = submitTick(spark, cfg,
+          rows => { println(s"[submit] POST batch of ${rows.length}"); (rows.length.toLong, 0L) },
+          now).submitted)))
+      val rows = Try(new DealStateStore(spark, cfg.storeRoot).rowCount()).fold(_ => "?", _.toString)
+      println(s"[tick $tick] state=$rows submitted=$submitted")
       tick += 1
       if (tick < maxTicks) Thread.sleep(cfg.loopIntervalSecs * 1000L)
     }

@@ -38,6 +38,18 @@ import org.apache.spark.sql.types.IntegerType
   * The loops use them to read only the days they can touch
   * (`read(keep)`), and telemetry sums them instead of scanning. A day
   * whose `_META` lacks the counters (older layouts) counts as open.
+  *
+  * Retention: keep what the new latest and the previous latest can read.
+  * `write()` keeps the version directories of both chains whole.
+  * `writeDelta` keeps every version directory and control file of the
+  * chain, and after the pointer flip to N deletes each `epoch_day=*`
+  * directory of a chain version that neither view N nor view N−1
+  * resolves (days superseded by a newer writer or hidden by a newer
+  * `_TOMBSTONES`). So a read taken at N−1 still collects after the
+  * write of N, and the chain's day files are bounded by the live days
+  * plus one parent copy of each day the last write touched, whatever
+  * the chain depth. The sweep covers the whole chain, so garbage a
+  * crash left between flip and sweep goes with the next write.
   */
 final class DealStateStore(spark: SparkSession, root: String) {
   import DealStateStore._
@@ -51,12 +63,7 @@ final class DealStateStore(spark: SparkSession, root: String) {
   val EpochsPerDay: Int = DealStateStore.EpochsPerDay
 
   def latestVersion: Option[Long] =
-    if (!fs.exists(latestPtr)) recoverLatest()
-    else {
-      val in = fs.open(latestPtr)
-      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim.toLong)
-      finally in.close()
-    }
+    if (!fs.exists(latestPtr)) recoverLatest() else Some(readText(latestPtr).trim.toLong)
 
   /** Pointer-loss recovery: a crash between the snapshot write and the
     * pointer flip (or a lost pointer file) must not read as an empty
@@ -78,14 +85,14 @@ final class DealStateStore(spark: SparkSession, root: String) {
     * full snapshots resolve to themselves, delta versions resolve each
     * epoch_day to the newest version that wrote it. */
   def read(keep: Int => Boolean = _ => true): DataFrame = {
-    val paths = resolveChain()._1.collect { case (d, (_, p)) if keep(d) => p }
+    val paths = resolve(walk(latestVersion)).collect { case (d, (_, p)) if keep(d) => p.toString }
     if (paths.isEmpty) emptyState
     else spark.read.schema(ActiveDeal.schema).parquet(paths.toSeq: _*)
   }
 
   /** Every resolved epoch-day with the `_META` of the version that wrote it. */
   private def dayMetas(): Map[Int, Option[Meta]] = {
-    val resolved = resolveChain()._1
+    val resolved = resolve(walk(latestVersion))
     val metas = resolved.values.map(_._1).toSet.map((v: Long) => v -> readMeta(v)).toMap
     resolved.map { case (d, (v, _)) => d -> metas(v) }
   }
@@ -148,7 +155,7 @@ final class DealStateStore(spark: SparkSession, root: String) {
     flipPointer(next)
     // GC: keep the new snapshot and everything reachable from the
     // previous latest (rollback path, incl. its delta parents).
-    val keep = chainVersions(Some(next)) ++ chainVersions(Some(next - 1).filter(_ >= 0))
+    val keep = (walk(Some(next)) ++ walk(Some(next - 1).filter(_ >= 0))).map(_.version).toSet
     val stale = fs.globStatus(new Path(rootPath, "v=*")).map(_.getPath)
       .filter { p => !keep.contains(p.getName.stripPrefix("v=").toLong) }
     stale.foreach(p => fs.delete(p, true))
@@ -165,13 +172,6 @@ final class DealStateStore(spark: SparkSession, root: String) {
       .partitionBy("epoch_day")
       .mode("overwrite")
       .parquet(vdir.toString)
-
-  private def chainVersions(from: Option[Long]): Set[Long] = {
-    var cur = from.filter(v => fs.exists(new Path(rootPath, s"v=$v")))
-    var acc = Set.empty[Long]
-    while (cur.isDefined) { acc += cur.get; cur = parentOf(cur.get) }
-    acc
-  }
 
   private def flipPointer(next: Long): Unit = {
     val out = fs.create(latestPtr, true)
@@ -261,18 +261,17 @@ final class DealStateStore(spark: SparkSession, root: String) {
     writeMeta(vdir, parentMax = parent.flatMap(metaMaxOf), floor = floor,
       ceil = if (floor.isEmpty) None else ceil)
     flipPointer(next)
+    sweep(walk(Some(next)))
     next
   }
 
-  private def tombstonesOf(version: Long): Set[Int] = {
-    val p = new Path(rootPath, s"v=$version/_TOMBSTONES")
-    if (!fs.exists(p)) Set.empty
-    else {
-      val in = fs.open(p)
-      val txt = try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-      txt.split("\n").filter(_.nonEmpty).map(_.trim.toInt).toSet
-    }
+  /** Delete every epoch-day dir of `chain` (newest first, headed by the
+    * version just flipped to) that neither the head's view nor its
+    * parent's view resolves. Version dirs and their control files stay:
+    * the chain walk, pointer recovery and the rescan span read them. */
+  private def sweep(chain: List[Listed]): Unit = {
+    val live = (resolve(chain).values ++ resolve(chain.drop(1)).values).map(_._2).toSet
+    for (l <- chain; (_, p) <- l.days if !live(p)) fs.delete(p, true)
   }
 
   /** Per-version metadata sidecar (`v=N/_META`): the table-level
@@ -334,10 +333,7 @@ final class DealStateStore(spark: SparkSession, root: String) {
     val p = new Path(rootPath, s"v=$version/_META")
     if (!fs.exists(p)) None
     else {
-      val in = fs.open(p)
-      val node =
-        try Mapper.readTree(org.apache.commons.io.IOUtils.toByteArray(in))
-        finally in.close()
+      val node = Mapper.readTree(readText(p))
       def field(name: String): Option[Int] = {
         val f = node.get(name)
         if (f == null || f.isNull) None else Some(f.asInt)
@@ -407,50 +403,62 @@ final class DealStateStore(spark: SparkSession, root: String) {
     }
   }
 
-  private def parentOf(version: Long): Option[Long] = {
-    val p = new Path(rootPath, s"v=$version/_PARENT")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim.toLong)
-      finally in.close()
-    }
+  private def readText(p: Path): String = {
+    val in = fs.open(p)
+    try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
   }
 
-  private def dayDirs(version: Long): Map[Int, String] = {
+  /** One version as one listing of its directory shows it; None when
+    * the directory is gone. */
+  private def listVersion(version: Long): Option[Listed] = {
     val vdir = new Path(rootPath, s"v=$version")
-    fs.globStatus(new Path(vdir, "epoch_day=*")).map { st =>
-      st.getPath.getName.stripPrefix("epoch_day=").toInt -> st.getPath.toString
-    }.toMap
+    val entries =
+      try fs.listStatus(vdir) catch { case _: java.io.FileNotFoundException => return None }
+    val names = entries.map(_.getPath.getName).toSet
+    val days = entries.map(_.getPath).filter(_.getName.startsWith("epoch_day="))
+      .map(p => p.getName.stripPrefix("epoch_day=").toInt -> p).toMap
+    val tombstones =
+      if (!names("_TOMBSTONES")) Set.empty[Int]
+      else readText(new Path(vdir, "_TOMBSTONES")).split("\n").filter(_.nonEmpty)
+        .map(_.trim.toInt).toSet
+    val parent =
+      if (names("_PARENT")) Some(readText(new Path(vdir, "_PARENT")).trim.toLong) else None
+    Some(Listed(version, days, tombstones, parent))
   }
 
-  /** Resolve the chain: for each epoch_day take the NEWEST version that
-    * wrote it; a day tombstoned by a newer version stops resolving in
-    * older ones. Returns the resolved day→(version, path) map and the
-    * chain length. */
-  private def resolveChain(): (Map[Int, (Long, String)], Int) = {
-    var days = Map.empty[Int, (Long, String)]
-    var dead = Set.empty[Int]
-    var cur = latestVersion
-    var depth = 0
-    while (cur.isDefined) {
-      val v = cur.get
-      dayDirs(v).foreach { case (d, p) =>
-        if (!days.contains(d) && !dead.contains(d)) days += d -> (v -> p)
-      }
-      // this version's tombstones hide the day in ALL older versions
-      // (its own day dirs were already considered above, so a later
-      // re-creation of a tombstoned day still wins)
-      dead ++= tombstonesOf(v)
-      cur = parentOf(v)
-      depth += 1
+  /** The chain from `head`, newest first: one listing per version. */
+  private def walk(head: Option[Long]): List[Listed] =
+    head.flatMap(listVersion) match {
+      case Some(l) => l :: walk(l.parent)
+      case None => Nil
     }
-    (days, depth)
+
+  /** Resolve a chain (newest first): each epoch_day goes to the NEWEST
+    * version that wrote it; a day tombstoned by a version stops
+    * resolving in the versions older than it (its own day dirs come
+    * first, so a re-creation of a tombstoned day still wins). */
+  private def resolve(chain: List[Listed]): Map[Int, (Long, Path)] = {
+    var days = Map.empty[Int, (Long, Path)]
+    var dead = Set.empty[Int]
+    chain.foreach { l =>
+      l.days.foreach { case (d, p) =>
+        if (!days.contains(d) && !dead.contains(d)) days += d -> (l.version -> p)
+      }
+      dead ++= l.tombstones
+    }
+    days
   }
 
   /** Length of the current delta chain (1 = full snapshot). */
-  def chainDepth(): Int =
-    if (latestVersion.isEmpty) 0 else resolveChain()._2
+  def chainDepth(): Int = walk(latestVersion).size
+
+  /** The chain's depth, and the part files and bytes of every epoch-day
+    * dir under `v=*`, the chain a compaction replaced included: the
+    * chain walk plus one glob, zero Spark jobs. */
+  def footprint(): Footprint = {
+    val parts = fs.globStatus(new Path(rootPath, "v=*/epoch_day=*/part-*"))
+    Footprint(chainDepth(), parts.length, parts.map(_.getLen).sum)
+  }
 
   /** Fold the delta chain into one full snapshot (run when the chain
     * outgrows the read-amplification budget). */
@@ -471,6 +479,15 @@ object DealStateStore {
   /** One epoch-day's `_META` counters (see the class doc). */
   final case class DayStats(
       rows: Long, byState: Map[String, Long], openResolve: Long, openSubmit: Long)
+
+  /** The store's on-disk gauges: delta-chain depth, and the part files
+    * and bytes under every version's `epoch_day=*` dirs. */
+  final case class Footprint(chainDepth: Int, dayFiles: Long, dayBytes: Long)
+
+  /** One chain version's listing: the epoch-day dirs it wrote, the days
+    * its `_TOMBSTONES` hide in older versions, its `_PARENT`. */
+  private final case class Listed(
+      version: Long, days: Map[Int, Path], tombstones: Set[Int], parent: Option[Long])
 
   /** `submitUntil`: per written day, the latest open-submit term end
     * epoch (absent: no open-submit row, or an older layout). */

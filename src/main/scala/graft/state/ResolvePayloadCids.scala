@@ -104,9 +104,15 @@ object ResolvePayloadCids {
       concurrency: Int = 4,
       retries: Int = 5): DataFrame = {
     val queue = workQueue(state, now, maxDeals)
+    // hash-spread the pairs over every core before the distinct (which
+    // keeps that partitioning, no second exchange): AQE would otherwise
+    // coalesce the distinct's exchange to one partition, and the lookups
+    // would run `concurrency` at a time in a single task
     val pairs = joinPeer(queue, peerIdsPrimary, peerIdsFallback)
       .filter(col("peerId").isNotNull)
       .select(col("peerId"), col("piece_cid").as("pieceCid"))
+      .repartition(state.sparkSession.sparkContext.defaultParallelism,
+        col("peerId"), col("pieceCid"))
       .distinct()
     val remote = graft.sources.PieceIndexer.lookup(pairs, pieceIndexerUrl, concurrency, retries)
     val looked = state.sparkSession.createDataFrame(

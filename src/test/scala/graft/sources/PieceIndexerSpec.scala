@@ -115,4 +115,32 @@ class PieceIndexerSpec extends SparkSpec {
       assert(requests.get() > 0 && requests.get() <= distinctPairs)
     }
   }
+
+  test("live resolve spreads the lookups over every core: concurrency 1 still overlaps requests") {
+    val inFlight = new AtomicInteger(0)
+    val peak = new AtomicInteger(0)
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
+    server.createContext("/sample/", (ex: HttpExchange) => {
+      peak.accumulateAndGet(inFlight.incrementAndGet(), (a, b) => math.max(a, b))
+      Thread.sleep(50) // a slow indexer: overlapping requests must overlap here
+      inFlight.decrementAndGet()
+      respond(ex, 200, """{"error":"PROVIDER_OR_PIECE_NOT_FOUND"}""")
+    })
+    server.start()
+    try {
+      val raw = spark.read.schema(RawActorEvent.schema)
+        .json(s"${TestSpark.fixtures}/rawActorEvents.json")
+      val peerIds = spark.read.json(s"${TestSpark.fixtures}/minerPeerIds.json")
+      val emptyState = spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ActiveDeal.schema)
+      val state = DealIngest.dedupeAgainst(
+        DealIngest.decodeRange(raw, 4622129, 4622138), emptyState)
+      val now = java.sql.Timestamp.valueOf("2025-01-15 00:00:00")
+      val resolved = ResolvePayloadCids.resolveLive(state, peerIds, None,
+        s"http://127.0.0.1:${server.getAddress.getPort}", now, maxDeals = 40, concurrency = 1)
+      assert(resolved.filter(col("payload_retrievability_state") === St.Unresolved).count() > 0)
+      assert(peak.get() > 1, s"peak in-flight requests ${peak.get()}")
+    } finally server.stop(0)
+  }
 }
