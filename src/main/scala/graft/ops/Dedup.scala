@@ -1067,8 +1067,7 @@ object Dedup {
       hotChunkCap: Int = 100000,
       onDrop: (Long, Long) => Unit = null): DataFrame = {
     val (blocks, pack, n) = balancedBlocksProbe(fps, maxDist + 1)
-    simhashPairsWithRelease(fps, maxDist, hotChunkCap, onDrop,
-      blocks, packIn = Some(pack), knownFpCount = Some(n))._1
+    simhashPairsWithRelease(fps, maxDist, hotChunkCap, onDrop, blocks, pack, Some(n))._1
   }
 
   /** [[simhashPairs]] plus an explicit RELEASE HANDLE for the bucketed
@@ -1080,16 +1079,23 @@ object Dedup {
   def simhashPairsWithRelease(fps: DataFrame, maxDist: Int = 3,
       hotChunkCap: Int = 100000,
       onDrop: (Long, Long) => Unit = null,
-      bitBlocks: Seq[Seq[Int]] = contiguousBitBlocks,
-      // pre-probed pair-pack base and fingerprint count (optimization
-      // round 18): [[simhashPairsBalanced]] already paid one bounded
-      // collect over fps for the bit balance — the same row carries
-      // min/max id and count, so callers that have them skip the
-      // separate pairPackBase job, and a count ≤ hotChunkCap proves the
-      // drop-accounting pass has nothing to account (no bucket can
-      // exceed the cap when the whole corpus doesn't)
-      packIn: Option[Option[(Long, org.apache.spark.sql.types.DataType)]] = None,
-      knownFpCount: Option[Long] = None): (DataFrame, () => Unit) = {
+      bitBlocks: Seq[Seq[Int]] = contiguousBitBlocks): (DataFrame, () => Unit) =
+    simhashPairsWithRelease(fps, maxDist, hotChunkCap, onDrop, bitBlocks,
+      pairPackBase(fps), None)
+
+  /** [[simhashPairsWithRelease]] with the pair-pack base and the
+    * fingerprint count PRE-PROBED (optimization round 18):
+    * [[simhashPairsBalanced]] already paid one bounded collect over fps
+    * for the bit balance — the same row carries min/max id and count, so
+    * it skips the separate pairPackBase job (`pack` is by-name: the
+    * public path probes it where the pair join needs it), and a count
+    * ≤ hotChunkCap proves the drop-accounting pass has nothing to
+    * account (no bucket can exceed the cap when the whole corpus
+    * doesn't). */
+  private def simhashPairsWithRelease(fps: DataFrame, maxDist: Int,
+      hotChunkCap: Int, onDrop: (Long, Long) => Unit, bitBlocks: Seq[Seq[Int]],
+      pack: => Option[(Long, org.apache.spark.sql.types.DataType)],
+      knownFpCount: Option[Long]): (DataFrame, () => Unit) = {
     // pigeonhole soundness: k disjoint chunks covering all 64 bits
     // guarantee a shared chunk only for Hamming distance <= k-1 (the
     // default 4 cover maxDist <= 3). Larger distances need more
@@ -1139,7 +1145,7 @@ object Dedup {
     // keys, to keep `filtered`'s persist pipelined into the pair join.
     val cand = distinctPairs(
       a.join(b, Seq("chunk", "key")).filter(col("id1") < col("id2")),
-      packIn.getOrElse(pairPackBase(fps)))
+      pack)
     val f1 = fps.select(col("id").as("id1"), col("simhash").as("fp1"))
     val f2 = fps.select(col("id").as("id2"), col("simhash").as("fp2"))
     val pairs = cand.join(f1, "id1").join(f2, "id2")

@@ -40,16 +40,17 @@ import org.apache.spark.sql.types.IntegerType
   * whose `_META` lacks the counters (older layouts) counts as open.
   *
   * Retention: keep what the new latest and the previous latest can read.
-  * `write()` keeps the version directories of both chains whole.
-  * `writeDelta` keeps every version directory and control file of the
-  * chain, and after the pointer flip to N deletes each `epoch_day=*`
-  * directory of a chain version that neither view N nor view N−1
-  * resolves (days superseded by a newer writer or hidden by a newer
-  * `_TOMBSTONES`). So a read taken at N−1 still collects after the
-  * write of N, and the chain's day files are bounded by the live days
+  * Both writers run one GC step after the pointer flip to N: it deletes
+  * every `v=*` directory outside the chains of view N and view N−1 (the
+  * chain a compaction replaced goes with the next write), then each
+  * `epoch_day=*` directory of those chains that neither view resolves
+  * (days superseded by a newer writer or hidden by a newer
+  * `_TOMBSTONES`). Version directories and their control files on the
+  * two chains stay. So a read taken at N−1 still collects after the
+  * write of N, and the day files on disk are bounded by the live days
   * plus one parent copy of each day the last write touched, whatever
-  * the chain depth. The sweep covers the whole chain, so garbage a
-  * crash left between flip and sweep goes with the next write.
+  * the chain depth. The step covers both whole chains, so garbage a
+  * crash left between flip and GC goes with the next write.
   */
 final class DealStateStore(spark: SparkSession, root: String) {
   import DealStateStore._
@@ -153,12 +154,7 @@ final class DealStateStore(spark: SparkSession, root: String) {
     writeDays(state, vdir)
     writeMeta(vdir, parentMax = None, floor = prevFloor, ceil = prevCeil)
     flipPointer(next)
-    // GC: keep the new snapshot and everything reachable from the
-    // previous latest (rollback path, incl. its delta parents).
-    val keep = (walk(Some(next)) ++ walk(Some(next - 1).filter(_ >= 0))).map(_.version).toSet
-    val stale = fs.globStatus(new Path(rootPath, "v=*")).map(_.getPath)
-      .filter { p => !keep.contains(p.getName.stripPrefix("v=").toLong) }
-    stale.foreach(p => fs.delete(p, true))
+    gc(next)
     next
   }
 
@@ -261,17 +257,29 @@ final class DealStateStore(spark: SparkSession, root: String) {
     writeMeta(vdir, parentMax = parent.flatMap(metaMaxOf), floor = floor,
       ceil = if (floor.isEmpty) None else ceil)
     flipPointer(next)
-    sweep(walk(Some(next)))
+    gc(next)
     next
   }
 
-  /** Delete every epoch-day dir of `chain` (newest first, headed by the
-    * version just flipped to) that neither the head's view nor its
-    * parent's view resolves. Version dirs and their control files stay:
-    * the chain walk, pointer recovery and the rescan span read them. */
-  private def sweep(chain: List[Listed]): Unit = {
-    val live = (resolve(chain).values ++ resolve(chain.drop(1)).values).map(_._2).toSet
-    for (l <- chain; (_, p) <- l.days if !live(p)) fs.delete(p, true)
+  /** The GC step both writers run after the flip to `next`: delete every
+    * `v=*` dir outside the chains of view `next` and view `next − 1`,
+    * then every epoch-day dir of those chains that neither view
+    * resolves. The chains' version dirs and control files stay: the
+    * chain walk, pointer recovery and the rescan span read them. One
+    * root listing beside the chain walk, no Spark job: a delta's parent
+    * view is its own chain's tail, so only a full write walks twice. */
+  private def gc(next: Long): Unit = {
+    val head = walk(Some(next))
+    val prev =
+      if (head.drop(1).headOption.exists(_.version == next - 1)) head.drop(1)
+      else walk(Some(next - 1).filter(_ >= 0))
+    val chains = (head ++ prev).distinctBy(_.version)
+    val keep = chains.map(_.version).toSet
+    fs.globStatus(new Path(rootPath, "v=*")).map(_.getPath)
+      .filterNot(p => keep(p.getName.stripPrefix("v=").toLong))
+      .foreach(fs.delete(_, true))
+    val live = (resolve(head).values ++ resolve(prev).values).map(_._2).toSet
+    for (l <- chains; (_, p) <- l.days if !live(p)) fs.delete(p, true)
   }
 
   /** Per-version metadata sidecar (`v=N/_META`): the table-level
@@ -453,8 +461,9 @@ final class DealStateStore(spark: SparkSession, root: String) {
   def chainDepth(): Int = walk(latestVersion).size
 
   /** The chain's depth, and the part files and bytes of every epoch-day
-    * dir under `v=*`, the chain a compaction replaced included: the
-    * chain walk plus one glob, zero Spark jobs. */
+    * dir under `v=*` (the previous chain a compaction replaced included,
+    * until the next write's GC): the chain walk plus one glob, zero
+    * Spark jobs. */
   def footprint(): Footprint = {
     val parts = fs.globStatus(new Path(rootPath, "v=*/epoch_day=*/part-*"))
     Footprint(chainDepth(), parts.length, parts.map(_.getLen).sum)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.ops.Dedup
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -55,6 +56,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * (backend/bin/deal-observer-backend.js:43-74).
   */
 object DedupStream {
+  import StoreCommits.{NoKeyFamily, ensureStoreMeta, publishCommit, readStore, readStoreFrom}
 
   final case class Config(
       n: Int = 2,
@@ -75,235 +77,11 @@ object DedupStream {
 
   private def IntegerTypeAlias = org.apache.spark.sql.types.IntegerType
 
-  /** Layout/key-family marker, checked BEFORE any store read or write.
-    * Two silent-corruption vectors die here, loudly:
-    *   - `storeParts` drift: pruned reads pick subdirectories by
-    *     `hash mod storeParts` — a store written at 64 parts read at
-    *     256 would silently skip most matching history;
-    *   - key-family drift: signatures from a different shingle-hash
-    *     family (including any pre-marker store) agree with new
-    *     signatures only by chance, so every cross-history near-dup
-    *     would silently read as unique.
-    * First commit writes the marker; every later commit must match. */
-  private val KeyFamily = 2 // word-chained xxhash64 grams (shingleHashes)
-
-  /** Family 0 = "no content-key family claimed yet": the labels
-    * sub-store hashes only ids/components (family-independent), so a
-    * store whose FIRST writer is [[foldLabels]] pins its partition
-    * count without committing to a shingle-key family; the first
-    * content-keyed writer (sketch/span/exact step) then upgrades the
-    * marker in place. Partition-count drift stays fatal either way. */
-  private val NoKeyFamily = 0
-
-  private[streaming] def ensureStoreMeta(
-      spark: SparkSession, root: String, parts: Int,
-      family: Int = KeyFamily): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(root)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(dir, "_PARTS")
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val txt = try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
-      // defensive parse: a truncated or hand-edited marker must surface
-      // the actionable store/config diagnostic, not a bare MatchError
-      val (p, f) = txt.split('/') match {
-        case Array(a, b) if a.nonEmpty && b.nonEmpty &&
-            a.forall(_.isDigit) && b.forall(_.isDigit) =>
-          (a.toInt, b.toInt)
-        case _ => throw new IllegalArgumentException(
-          s"dedup store $root has a malformed _PARTS marker '$txt' " +
-            s"(expected '<parts>/<family>', e.g. '$parts/$family') — " +
-            "rebuild the store or restore the marker to the writing config")
-      }
-      require(p == parts,
-        s"dedup store $root was written with parts/family=$txt; this config is " +
-          s"$parts/$family — rebuild the store or match the writing config")
-      if (family != NoKeyFamily) {
-        if (f == NoKeyFamily) // labels-first store: claim the family
-          writeNameFile(spark, dir, "_PARTS", Set(s"$parts/$family"))
-        else require(f == family,
-          s"dedup store $root was written with parts/family=$txt; this config is " +
-            s"$parts/$family — rebuild the store or match the writing config")
-      }
-    } else {
-      // commits live one level down (buckets/sigs/spans sub-stores)
-      val hasCommits = fs.exists(dir) && fs.listStatus(dir).exists { s =>
-        s.isDirectory && (s.getPath.getName.startsWith("batch=") ||
-          fs.listStatus(s.getPath).exists(c =>
-            c.isDirectory && c.getPath.getName.startsWith("batch=")))
-      }
-      require(!hasCommits,
-        s"dedup store $root has commits but no _PARTS marker, so its partition " +
-          "count and shingle-key family cannot be verified. If it was written " +
-          s"by THIS key family at partition count P, adopt it by writing 'P/$family' " +
-          s"to $root/_PARTS; otherwise rebuild it (signatures from another " +
-          "family agree with new ones only by chance) or pin the old code")
-      fs.mkdirs(dir)
-      // atomic temp+rename (writeNameFile): a crash mid-write must not
-      // leave an empty/partial marker that fails every later tick's
-      // parts/family check until hand-repaired — the marker is either
-      // absent (rewritten next tick) or complete
-      writeNameFile(spark, dir, "_PARTS", Set(s"$parts/$family"))
-    }
-  }
-
-  // --------------------------------------------------- commit visibility
-
-  /** A sub-store root's `_MANIFEST`, when present, lists EXACTLY the
-    * commit dirs readers may see — the atomic commit point for
-    * [[compact]]: compacted data is written under an UNLISTED dir name,
-    * then one atomic manifest swap makes the compacted commit visible
-    * and the replaced commits invisible in the same instant. Without a
-    * manifest (the common, never-compacted store), every `batch=*` dir
-    * is visible. Kept O(commits since the last compaction): the tick
-    * path rewrites it once per commit. */
-  private[streaming] def readManifest(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Option[Set[String]] =
-    readNameFile(fs, new org.apache.hadoop.fs.Path(root, "_MANIFEST"))
-
-  /** The `_FOLDED` ledger: names of commits a compaction ever folded.
-    * A micro-batch replayed from a rolled-back checkpoint AFTER its
-    * commit was compacted away rewrites its data dirs, and
-    * re-publishing them would double its rows beside the compacted
-    * copy — the ledger keeps such rewrites invisible (the replay still
-    * EMITS its pairs; only the store fold is suppressed, which is
-    * exactly right because the compacted commit already holds those
-    * rows). Separate from `_MANIFEST` so the per-tick publish rewrites
-    * only the small visible list; only compaction rewrites the ledger. */
-  private[streaming] def readFolded(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Set[String] =
-    readNameFile(fs, new org.apache.hadoop.fs.Path(root, "_FOLDED")).getOrElse(Set.empty)
-
-  private def readNameFile(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[Set[String]] =
-    readSmallText(fs, p)
-      .map(_.split('\n').map(_.trim).filter(_.nonEmpty).toSet)
-
-  /** Read a small control file, retrying on ChecksumException: the
-    * rename swap is atomic for the DATA file on posix-local and HDFS,
-    * but the local ChecksumFileSystem moves the `.crc` sidecar in a
-    * SECOND step, so a reader racing the swap can momentarily see new
-    * bytes against the old checksum. HDFS/object stores have no
-    * client-side sidecar (the window doesn't exist there); locally the
-    * re-open lands after the sidecar rename. Bounded, so a genuinely
-    * corrupt file still fails loudly. */
-  private[streaming] def readSmallText(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[String] = {
-    var attempt = 0
-    while (true) {
-      if (!fs.exists(p)) return None
-      try {
-        val in = fs.open(p)
-        return Some(
-          try scala.io.Source.fromInputStream(in).mkString finally in.close())
-      } catch {
-        case e: org.apache.hadoop.fs.ChecksumException =>
-          attempt += 1
-          if (attempt >= 20) throw e
-          Thread.sleep(5L * attempt)
-      }
-    }
-    None // unreachable
-  }
-
-  /** Atomic name-file replace: temp file + FileContext rename with
-    * OVERWRITE (atomic on posix-local and HDFS — never a window where
-    * the file is absent or partial). */
-  private[streaming] def writeNameFile(
-      spark: SparkSession, root: org.apache.hadoop.fs.Path,
-      fileName: String, names: Set[String]): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(root, s"_$fileName.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(names.toSeq.sorted.mkString("\n").getBytes("UTF-8")) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(root.toUri, conf)
-    fc.rename(tmp, new org.apache.hadoop.fs.Path(root, fileName),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  private[streaming] def writeManifest(
-      spark: SparkSession, root: org.apache.hadoop.fs.Path, dirs: Set[String]): Unit =
-    writeNameFile(spark, root, "_MANIFEST", dirs)
-
-  /** Visible commit dirs under a sub-store root: manifest-filtered when
-    * a manifest exists, plain `batch=*` listing otherwise. */
-  private[streaming] def visibleCommits(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] = {
-    if (!fs.exists(root)) return Nil
-    val manifest = readManifest(fs, root)
-    fs.listStatus(root).filter(_.isDirectory).toSeq
-      .filter(_.getPath.getName.startsWith("batch="))
-      .filter(s => manifest.forall(_.contains(s.getPath.getName)))
-  }
-
-  /** A commit's name is made reader-visible: no-op for manifest-less
-    * stores (listing is the visibility), idempotent otherwise. A name
-    * the FOLDED ledger records is never resurrected — see
-    * [[readFolded]]. */
-  private[streaming] def publishCommit(
-      spark: SparkSession, root: org.apache.hadoop.fs.Path, name: String): Unit = {
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readManifest(fs, root).foreach { visible =>
-      if (!visible.contains(name) && !readFolded(fs, root).contains(name))
-        writeManifest(spark, root, visible + name)
-    }
-  }
-
-  /** The store's HISTORY view for one batch, PRUNED to the key
-    * partitions the batch can touch: lists every VISIBLE commit
-    * EXCEPT the current batch's own (a replayed batch must not treat
-    * its previous, possibly partial, commit as history), then inside
-    * each commit keeps only the `<partCol>=<k>` subdirectories with
-    * k ∈ `wanted` — the one structural guarantee that a tick's read is
-    * O(batch keys), not O(corpus). Layout compatibility is enforced by
-    * [[ensureStoreMeta]] before this is called. Listing is explicit,
-    * so the read needs no partition discovery and an empty/missing
-    * store stays a clean miss. */
-  private[streaming] def readStore(
-      spark: SparkSession, dir: String, schema: StructType,
-      excludeTag: String, partCol: String, wanted: Set[Int]): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readStoreFrom(spark, visibleCommits(fs, p), schema, excludeTag, partCol,
-      wanted, fs)
-  }
-
-  /** [[readStore]] over an ALREADY-RESOLVED commit set — the round-18
-    * consistency thread: a search resolves its visible commits ONCE and
-    * feeds the same set to the scan, the read mask, and the
-    * compacted fast-path decision, so a fold landing mid-search can
-    * never split them across generations. */
-  private[streaming] def readStoreFrom(
-      spark: SparkSession,
-      commits: Seq[org.apache.hadoop.fs.FileStatus], schema: StructType,
-      excludeTag: String, partCol: String, wanted: Set[Int],
-      fs0: org.apache.hadoop.fs.FileSystem = null): DataFrame = {
-    if (commits.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val fs = Option(fs0).getOrElse(
-      commits.head.getPath.getFileSystem(spark.sparkContext.hadoopConfiguration))
-    val leaves: Seq[String] = commits
-      .filterNot(_.getPath.getName == s"batch=$excludeTag")
-      .flatMap { b =>
-        val subs = fs.listStatus(b.getPath).filter(_.isDirectory)
-          .filter(_.getPath.getName.startsWith(s"$partCol="))
-        if (subs.isEmpty) Seq(b.getPath.toString) // empty commit (no rows → no hash dirs)
-        else subs.toSeq
-          .filter(s => wanted.contains(
-            s.getPath.getName.stripPrefix(s"$partCol=").toInt))
-          .map(_.getPath.toString)
-      }
-    if (leaves.nonEmpty)
-      spark.read.schema(schema).parquet(leaves: _*)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+  /** The `_PARTS` key family of the MinHash sketch, span and substring
+    * stores: word-chained xxhash64 grams ([[Dedup.shingleHashes]]). A
+    * store of another family fails every step loudly
+    * ([[StoreCommits.ensureStoreMeta]]). */
+  private val KeyFamily = 2
 
   /** Fold the accumulated per-batch commits of every sub-store into ONE
     * commit each — the offline maintenance pass for a long-running
@@ -311,103 +89,39 @@ object DedupStream {
     * month of 10 s ticks is ~10⁵ commits of small files; compaction
     * restores O(storeParts) files without changing any answer).
     *
-    * Crash-safe via the manifest, at EVERY point including the first
-    * compaction of a manifest-less store: the current commit set is
-    * ADOPTED into a manifest before anything is written (from then on
-    * visibility is the manifest, so the target dir is born invisible),
-    * the `_FOLDED` resurrection guard is extended before the swap
-    * (no reader-facing effect while sources are still the visible
-    * set), and then a single atomic manifest swap replaces all source
-    * commits with the compacted one. Physical deletion is a separate
-    * GC sweep — every `batch=*` dir the manifest does not list is
-    * garbage by definition (replaced sources from a crash after the
-    * swap, orphan targets from a crash before it) and is collected on
-    * every compact() call. SINGLE-WRITER contract, same as the stream
-    * itself: run between ticks (or from the stream's own driver),
-    * never concurrently with a step on the same store. */
+    * One [[StoreCommits.foldAndSwap]] per sub-store, crash-safe at
+    * EVERY point including the first compaction of a manifest-less
+    * store: the commit set is adopted into a manifest before anything
+    * is written, and one atomic manifest swap replaces the sources with
+    * the compacted commit. A sub-store is claimed only when it folds
+    * (two or more commits), so a never-compacted one keeps publishing
+    * without a manifest rewrite. Replaced generations age out on the
+    * shared grace ledger; at grace 0 they are deleted at once. Batch-mode
+    * callers CAN read these sub-stores concurrently with an offline
+    * compact — the grace is what keeps a straddling reader's files.
+    * SINGLE-WRITER contract, same as the stream itself: run between
+    * ticks (or from the stream's own driver), never concurrently with a
+    * step on the same store. */
   def compact(spark: SparkSession, storeDir: String,
       gcGraceMs: Long = StoreCommits.defaultGcGraceMs): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    // NOTE: annvecs (AnnStream) is NOT in this list — its commits may
-    // be L0 single files (no ab= subdirs), which this generic fold
-    // would silently exclude from the rewrite and then tombstone via
-    // _FOLDED; AnnStream.compactStore re-derives the partition column
-    // from row content and handles both layouts. ivfvecs (IvfStream)
-    // is likewise excluded — IvfStream.compactStore owns it (same L0
-    // reason, plus the refit-swap discipline).
+    val fs = new Path(storeDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // NOTE: the vector stores' sub-stores are NOT in this list — their
+    // commits may be L0 single files (no ab= subdirs), and their
+    // compactStore re-derives the partition column from row content
     Seq("buckets" -> "pb", "sigs" -> "ps", "spans" -> "ph", "wins" -> "pw",
-        "chunks" -> "pc", "fps" -> "ps", "hashes" -> "ph").foreach {
-      case (sub, partCol) =>
-        val root = new org.apache.hadoop.fs.Path(s"$storeDir/$sub")
-        val fs = root.getFileSystem(conf)
-        if (fs.exists(root)) {
-          val manifest = readManifest(fs, root)
-          // adoption gate: a manifest-less listing may contain a
-          // PARTIALLY-written dir — a tick that crashed mid-store-write
-          // task-committed parquet files but never the job `_SUCCESS`
-          // marker. Adopting it would freeze the partial rows forever:
-          // its tag lands in `_FOLDED`, which suppresses the checkpoint
-          // replay's clean rewrite. Only `_SUCCESS`-bearing dirs are
-          // commits here; an incomplete dir stays unadopted, turns
-          // invisible the instant the manifest exists, is GC'd below,
-          // and the replay then rewrites and publishes it normally.
-          // (Manifest-gated stores can't hit this: publishCommit runs
-          // only after a completed write.)
-          val visible = {
-            val v = visibleCommits(fs, root)
-            if (manifest.isDefined) v
-            else v.filter(s => fs.exists(
-              new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-          }
-          // fold only when there is something to fold (a compacted
-          // store is a single commit); GC runs either way below
-          var justReplaced = Set.empty[String]
-          if (visible.size >= 2) {
-            val srcNames = visible.map(_.getPath.getName).toSet
-            // adopt BEFORE writing anything: from here on readers gate
-            // on the manifest, so the target dir is born invisible and
-            // a crash at any later point cannot double history
-            if (manifest.isEmpty)
-              writeManifest(spark, root, srcNames)
-            // skip empty commits (no parquet data → no hash subdirs);
-            // mixing them into partition discovery would conflict
-            val srcs = visible.filter(s => fs.listStatus(s.getPath)
-              .exists(c => c.isDirectory && c.getPath.getName.startsWith(s"$partCol=")))
-            if (srcs.nonEmpty) {
-              val target = s"batch=compact-${java.util.UUID.randomUUID()}"
-              // partition discovery (anchored at the sub-store root so
-              // multiple commit dirs don't conflict) restores the hash
-              // column; rewrite preserves the pruning layout
-              spark.read.option("basePath", root.toString)
-                .parquet(srcs.map(_.getPath.toString): _*)
-                .drop("batch")
-                .repartition(col(partCol))
-                .write.partitionBy(partCol)
-                .mode("overwrite").parquet(s"$storeDir/$sub/$target")
-              // resurrection guard first: sources are still the visible
-              // set, so this has no reader-facing effect yet
-              writeNameFile(spark, root, "_FOLDED", readFolded(fs, root) ++ srcNames)
-              writeManifest(spark, root, Set(target)) // THE commit point
-              justReplaced = srcNames
-            }
-          }
-          // GC sweep on the SHARED time-based grace ledger (round 18,
-          // unified with the ANN stores — StoreCommits.gcUnlisted):
-          // replaced generations are stamped into `_RETIRED` and
-          // deleted only once older than the grace window. These
-          // sub-stores are read by the stream's own tick under the
-          // single-writer contract, but batch-mode callers CAN read
-          // them concurrently with an offline compact — the same
-          // straddling-reader race the ANN stores closed in round 17;
-          // the grace costs nothing per tick (specs pinning immediate
-          // deletion pass gcGraceMs = 0, the prior behavior: replaced
-          // sources are already in _FOLDED, so with no stampNow
-          // privilege they age out the moment the grace is zero).
-          // Never-visible strays (crashed partial writes) still delete
-          // immediately.
-          StoreCommits.gcUnlisted(spark, root, gcGraceMs,
-            stampNow = if (gcGraceMs <= 0) Set.empty else justReplaced)
-        }
+        "chunks" -> "pc", "fps" -> "ps", "hashes" -> "ph").foreach { case (sub, partCol) =>
+      StoreCommits.foldAndSwap(spark, storeDir, Seq((sub, partCol, Nil)), { case Seq(visible) =>
+        // skip empty commits (no parquet data → no hash subdirs);
+        // mixing them into partition discovery would conflict
+        lazy val data = visible.filter(s => fs.listStatus(s.getPath)
+          .exists(c => c.isDirectory && c.getPath.getName.startsWith(s"$partCol=")))
+        if (visible.size < 2 || data.isEmpty) None
+        // partition discovery (anchored at the sub-store root so
+        // multiple commit dirs don't conflict) restores the hash column
+        else Some((Seq(spark.read.option("basePath", s"$storeDir/$sub")
+            .parquet(data.map(_.getPath.toString): _*).drop("batch")),
+          s"batch=compact-${java.util.UUID.randomUUID()}", None))
+      }, gcGraceMs = gcGraceMs, claimFirst = false, stampReplaced = false)
     }
   }
 
@@ -425,7 +139,7 @@ object DedupStream {
   def step(batch: DataFrame, storeDir: String, cfg: Config = Config(),
       batchTag: String = java.util.UUID.randomUUID().toString): DataFrame = {
     val spark = batch.sparkSession
-    ensureStoreMeta(spark, storeDir, cfg.storeParts)
+    ensureStoreMeta(spark, storeDir, cfg.storeParts, KeyFamily)
     val parts = lit(cfg.storeParts.toLong)
     val sigs = Dedup.minhashSignatures(
       Dedup.shingleHashes(batch, cfg.n),
@@ -509,9 +223,9 @@ object DedupStream {
     // post-compaction stores gate visibility through the manifest;
     // publishing is idempotent under foreachBatch replay
     publishCommit(spark,
-      new org.apache.hadoop.fs.Path(s"$storeDir/buckets"), s"batch=$batchTag")
+      new Path(s"$storeDir/buckets"), s"batch=$batchTag")
     publishCommit(spark,
-      new org.apache.hadoop.fs.Path(s"$storeDir/sigs"), s"batch=$batchTag")
+      new Path(s"$storeDir/sigs"), s"batch=$batchTag")
     newBuckets.unpersist()
     batchKeys.unpersist()
     sigs.unpersist()
@@ -590,7 +304,7 @@ object DedupStream {
       .repartition(col("ph")).write.partitionBy("ph")
       .mode("overwrite").parquet(s"$storeDir/hashes/batch=$batchTag")
     publishCommit(spark,
-      new org.apache.hadoop.fs.Path(s"$storeDir/hashes"), s"batch=$batchTag")
+      new Path(s"$storeDir/hashes"), s"batch=$batchTag")
     hs.unpersist()
     withOld.unpersist()
     out
@@ -678,9 +392,9 @@ object DedupStream {
       .repartition(col("ps")).write.partitionBy("ps")
       .mode("overwrite").parquet(s"$storeDir/fps/batch=$batchTag")
     publishCommit(spark,
-      new org.apache.hadoop.fs.Path(s"$storeDir/chunks"), s"batch=$batchTag")
+      new Path(s"$storeDir/chunks"), s"batch=$batchTag")
     publishCommit(spark,
-      new org.apache.hadoop.fs.Path(s"$storeDir/fps"), s"batch=$batchTag")
+      new Path(s"$storeDir/fps"), s"batch=$batchTag")
     newKeys.unpersist()
     batchCk.unpersist()
     fps.unpersist()
@@ -1023,9 +737,9 @@ object DedupStream {
       writePartitioned(moved.unionByName(singles), moved)
     }
     publishCommit(spark,
-      new org.apache.hadoop.fs.Path(byIdDir), s"batch=$batchTag")
+      new Path(byIdDir), s"batch=$batchTag")
     publishCommit(spark,
-      new org.apache.hadoop.fs.Path(byCompDir), s"batch=$batchTag")
+      new Path(byCompDir), s"batch=$batchTag")
     toRelease.foreach(_.unpersist())
     mark("publish+unpersist")
     latestLabels(spark, storeDir)
@@ -1046,7 +760,7 @@ object DedupStream {
       spark: SparkSession, dir: String, rows: Array[(Long, Long)]): Unit = {
     val conf = new org.apache.hadoop.conf.Configuration(
       spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(dir)
+    val p = new Path(dir)
     val fs = p.getFileSystem(conf)
     if (fs.exists(p)) fs.delete(p, true)
     fs.mkdirs(p)
@@ -1055,7 +769,7 @@ object DedupStream {
     org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(schema, conf)
     val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
       .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p, "part-00000.snappy.parquet"), conf))
+        new Path(p, "part-00000.snappy.parquet"), conf))
       .withConf(conf)
       .withCompressionCodec(
         org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
@@ -1068,34 +782,18 @@ object DedupStream {
       g.add("component", c)
       writer.write(g)
     } finally writer.close()
-    fs.create(new org.apache.hadoop.fs.Path(p, "_SUCCESS"), true).close()
-  }
-
-  /** Every visible labels/byId commit, optionally tag-excluded — no
-    * partition pruning (the full-corpus read path). */
-  private def readAllById(
-      spark: SparkSession, storeDir: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(s"$storeDir/labels/byId")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val leaves = visibleCommits(fs, root).flatMap { b =>
-      val subs = fs.listStatus(b.getPath).filter(_.isDirectory)
-        .filter(_.getPath.getName.startsWith("li="))
-      if (subs.isEmpty) Seq(b.getPath.toString) else subs.toSeq.map(_.getPath.toString)
-    }
-    if (leaves.nonEmpty) spark.read.schema(labelSchema).parquet(leaves: _*)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], labelSchema)
+    fs.create(new Path(p, "_SUCCESS"), true).close()
   }
 
   /** Offline maintenance for the delta label store: resolve the
     * accumulated byId commits to the current labelling (min-wins) and
     * rewrite BOTH sub-stores as one commit each, dropping stale rows
-    * and restoring O(storeParts) files. Crash-safe exactly like
-    * [[compact]]: manifests are adopted before anything is written (a
-    * manifest-less listing only adopts `_SUCCESS`-bearing dirs), the
-    * `_FOLDED` resurrection guard extends before each swap, the swap
-    * itself is one atomic manifest replace per sub-store, and unlisted
-    * dirs are GC'd. A crash between the two sub-store swaps leaves
+    * and restoring O(storeParts) files. ONE
+    * [[StoreCommits.foldAndSwap]] over both sub-stores: both are claimed
+    * first (a manifest-less listing only adopts `_SUCCESS`-bearing dirs,
+    * and unlisted dirs are then GC'd even when nothing folds), the
+    * `_FOLDED` resurrection guard extends before each swap, and the swap
+    * itself is one atomic manifest replace per sub-store. A crash between the two sub-store swaps leaves
     * them at different compaction generations but identical logical
     * content (stale byComp rows are unreachable — their roots are
     * merged away). ALSO the repair path for a mid-[[foldLabels]] crash
@@ -1106,111 +804,55 @@ object DedupStream {
     * between ticks. */
   def compactLabels(spark: SparkSession, storeDir: String,
       gcGraceMs: Long = StoreCommits.defaultGcGraceMs): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val roots = Seq("byId" -> "li", "byComp" -> "lc").map { case (sub, pc) =>
-      (sub, pc, new org.apache.hadoop.fs.Path(s"$storeDir/labels/$sub"))
-    }
-    val existing = roots.filter { case (_, _, r) => r.getFileSystem(conf).exists(r) }
-    if (existing.isEmpty) return
-    // adopt manifests first so every target dir below is born invisible
-    existing.foreach { case (_, _, root) =>
-      val fs = root.getFileSystem(conf)
-      if (readManifest(fs, root).isEmpty) {
-        val visible = visibleCommits(fs, root).filter(s => fs.exists(
-          new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-        writeManifest(spark, root, visible.map(_.getPath.getName).toSet)
-      }
-    }
-    // foldLabels commits byId then byComp (two publishes, not one
-    // atomic point). A crash between them followed by a restart that
-    // ABANDONS the streaming checkpoint (so the tag is never replayed)
-    // leaves byComp missing that tick's relabel rows — a later merge
-    // of an affected root would then strand its off-batch members.
-    // compaction heals this by construction (both sub-stores are
-    // rebuilt from byId's resolved labelling), so commit-set
-    // divergence forces a fold even when a sub-store has < 2 commits.
-    // Post-compaction-crash generation skew also lands here; re-folding
-    // it is merely redundant, never wrong. byId is the authority — a
-    // fold only runs when it exists (folding byComp from a missing
-    // byId would wipe it), and a byComp missing ENTIRELY (crash before
-    // its first write) is adopted empty so the divergence check sees it.
-    val haveById = roots.head._3.getFileSystem(conf).exists(roots.head._3)
-    if (haveById) roots.foreach { case (_, _, root) =>
-      val fs = root.getFileSystem(conf)
-      if (!fs.exists(root)) {
-        fs.mkdirs(root)
-        writeManifest(spark, root, Set.empty[String])
-      }
-    }
-    val active = if (haveById) roots else existing
-    val commitSets = active.map { case (sub, _, root) =>
-      sub -> visibleCommits(root.getFileSystem(conf), root)
-        .map(_.getPath.getName).toSet
-    }.toMap
-    val diverged = commitSets.size == 2 &&
-      commitSets("byId") != commitSets("byComp")
-    // pending deletes force a fold (tombstoned ids must drop physically)
+    // pending deletes force a fold (tombstoned ids must drop
+    // physically); captured BEFORE it, so the retirement below retires
+    // exactly the set the fold applied
     val appliedTombs = StoreCommits.tombstoneCommits(spark, storeDir, LabelTombs)
-    val needsFold =
-      haveById && (diverged || appliedTombs.nonEmpty ||
-        commitSets.valuesIterator.exists(_.size >= 2))
-    var justReplaced = Map.empty[String, Set[String]]
-    if (needsFold) {
-      val target = s"batch=compact-${java.util.UUID.randomUUID()}"
-      val parts = lit(storeMetaParts(spark, storeDir).toLong)
-      val resolved = StoreCommits.deltaMasked(
-        readAllById(spark, storeDir)
-          .groupBy("id").agg(min("component").as("component")),
-        spark, storeDir, "id", tombSubdir = LabelTombs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // sorted within partitions: tight per-row-group id/component
-      // min-max stats, so the tick path's pushed isin/equality filters
-      // skip row groups inside a big compacted partition file — the
-      // read cost of an endpoint lookup stays proportional to the
-      // MATCHING row groups, not the partition
-      resolved.withColumn("li", pmod(xxhash64(col("id")), parts).cast("int"))
-        .repartition(col("li")).sortWithinPartitions("id")
-        .write.partitionBy("li")
-        .mode("overwrite").parquet(s"$storeDir/labels/byId/$target")
-      resolved.withColumn("lc", pmod(xxhash64(col("component")), parts).cast("int"))
-        .repartition(col("lc")).sortWithinPartitions("component")
-        .write.partitionBy("lc")
-        .mode("overwrite").parquet(s"$storeDir/labels/byComp/$target")
-      resolved.unpersist()
-      active.foreach { case (_, _, root) =>
-        val fs = root.getFileSystem(conf)
-        val srcNames = visibleCommits(fs, root).map(_.getPath.getName).toSet
-        writeNameFile(spark, root, "_FOLDED", readFolded(fs, root) ++ srcNames)
-        writeManifest(spark, root, Set(target)) // THE commit point per sub-store
-        justReplaced += root.toString -> srcNames
-      }
-      // applied deletes retire AFTER both swaps — a crash in between
-      // leaves dropped rows + standing tombstones, which re-filter to
-      // the same answer until the next compaction (idempotent)
-      StoreCommits.retireTombstones(spark, storeDir, appliedTombs, LabelTombs)
-    }
-    // GC on the shared time-based grace ledger (round 18 — see
-    // [[compact]]): just-replaced generations are stamped, age out past
-    // the grace window; never-visible strays delete immediately; grace
-    // 0 pins the prior immediate-deletion layout (sources are in
-    // _FOLDED, so dropping the stampNow privilege ages them out now)
-    active.foreach { case (_, _, root) =>
-      StoreCommits.gcUnlisted(spark, root, gcGraceMs,
-        stampNow =
-          if (gcGraceMs <= 0) Set.empty
-          else justReplaced.getOrElse(root.toString, Set.empty))
-    }
-  }
-
-  /** The store's partition count from its `_PARTS` marker — compaction
-    * must rewrite with the layout every reader prunes by. */
-  private def storeMetaParts(spark: SparkSession, storeDir: String): Int = {
-    val dir = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(dir, "_PARTS")
-    val in = fs.open(marker)
-    val txt = try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
-    txt.split('/')(0).toInt
+    var resolved: DataFrame = null
+    StoreCommits.foldAndSwap(spark, storeDir,
+      Seq(("labels/byId", "li", Seq("id")), ("labels/byComp", "lc", Seq("component"))),
+      { case Seq(byId, byComp) =>
+        // foldLabels commits byId then byComp (two publishes, not one
+        // atomic point). A crash between them followed by a restart that
+        // ABANDONS the streaming checkpoint (so the tag is never replayed)
+        // leaves byComp missing that tick's relabel rows — a later merge
+        // of an affected root would then strand its off-batch members.
+        // Compaction heals this by construction (both sub-stores are
+        // rebuilt from byId's resolved labelling), so commit-set
+        // divergence forces a fold even when a sub-store has < 2 commits
+        // (a byComp missing ENTIRELY is claimed empty, so it diverges).
+        // Post-compaction-crash generation skew also lands here;
+        // re-folding it is merely redundant, never wrong.
+        val names = byId.map(_.getPath.getName).toSet
+        if (names == byComp.map(_.getPath.getName).toSet && appliedTombs.isEmpty && names.size < 2)
+          None
+        else {
+          val dir = new Path(storeDir)
+          val parts = lit(StoreCommits.storePartsOf(
+            dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir).toLong)
+          resolved = StoreCommits.deltaMasked(
+            readStoreFrom(spark, byId, labelSchema, " none ", "li", _ => true)
+              .groupBy("id").agg(min("component").as("component")),
+            spark, storeDir, "id", tombSubdir = LabelTombs)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          // sorted within partitions (the targets' sort columns): tight
+          // per-row-group id/component min-max stats, so the tick path's
+          // pushed isin/equality filters skip row groups inside a big
+          // compacted partition file
+          Some((Seq(
+              resolved.withColumn("li", pmod(xxhash64(col("id")), parts).cast("int")),
+              resolved.withColumn("lc", pmod(xxhash64(col("component")), parts).cast("int"))),
+            s"batch=compact-${java.util.UUID.randomUUID()}", None))
+        }
+      },
+      afterSwap = () => {
+        resolved.unpersist()
+        // applied deletes retire AFTER both swaps — a crash in between
+        // leaves dropped rows + standing tombstones, which re-filter to
+        // the same answer until the next compaction (idempotent)
+        StoreCommits.retireTombstones(spark, storeDir, appliedTombs, LabelTombs)
+      },
+      gcGraceMs = gcGraceMs, stampReplaced = false)
   }
 
   /** Incremental SPAN dedup (the streaming form of
@@ -1240,7 +882,7 @@ object DedupStream {
       batchTag: String = java.util.UUID.randomUUID().toString,
       storeParts: Int = 64): DataFrame = {
     val spark = batch.sparkSession
-    ensureStoreMeta(spark, storeDir, storeParts)
+    ensureStoreMeta(spark, storeDir, storeParts, KeyFamily)
     val parts = lit(storeParts.toLong)
     val spanSchema = StructType(Seq(
       StructField("h", org.apache.spark.sql.types.StringType, nullable = false),
@@ -1285,7 +927,7 @@ object DedupStream {
       .repartition(col("ph")).write.partitionBy("ph")
       .mode("overwrite").parquet(s"$storeDir/spans/batch=$batchTag")
     publishCommit(spark,
-      new org.apache.hadoop.fs.Path(s"$storeDir/spans"), s"batch=$batchTag")
+      new Path(s"$storeDir/spans"), s"batch=$batchTag")
     spans.unpersist()
     claimed.unpersist()
     out
@@ -1321,7 +963,7 @@ object DedupStream {
       storeParts: Int = 64,
       prefilterBroadcastLimit: Long = 1000000L): DataFrame = {
     val spark = batch.sparkSession
-    ensureStoreMeta(spark, storeDir, storeParts)
+    ensureStoreMeta(spark, storeDir, storeParts, KeyFamily)
     val parts = lit(storeParts.toLong)
     val L = windowWords
     val winSchema = StructType(Seq(
@@ -1414,7 +1056,7 @@ object DedupStream {
       .repartition(col("pw")).write.partitionBy("pw")
       .mode("overwrite").parquet(s"$storeDir/wins/batch=$batchTag")
     publishCommit(spark,
-      new org.apache.hadoop.fs.Path(s"$storeDir/wins"), s"batch=$batchTag")
+      new Path(s"$storeDir/wins"), s"batch=$batchTag")
     wins.unpersist()
     batchHashes.unpersist()
     firsts.unpersist()
@@ -1432,7 +1074,7 @@ object DedupStream {
     * listing instead of accreting one commit per tick forever. Safe
     * against the crash-before-checkpoint-commit replay: the `_FOLDED`
     * ledger suppresses the replayed tick's re-publish beside its
-    * compacted copy (see [[compact]]/[[readFolded]]). */
+    * compacted copy (see [[compact]]/[[StoreCommits.readFolded]]). */
   def start(
       spark: SparkSession,
       docsPath: String,
@@ -1514,7 +1156,7 @@ object DedupStream {
     * scan job). Empty when no tick has published yet. */
   def latestLabels(spark: SparkSession, storeDir: String): DataFrame =
     StoreCommits.deltaMasked(
-      readAllById(spark, storeDir)
+      readStore(spark, s"$storeDir/labels/byId", labelSchema, " none ", "li", _ => true)
         .groupBy("id").agg(min("component").as("component")),
       spark, storeDir, "id", tombSubdir = LabelTombs)
 

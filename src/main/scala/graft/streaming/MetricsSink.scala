@@ -16,8 +16,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * events (rows/batch, duration) into the same table. At 100 TB a
   * metrics table beats an external push: it is written by the same
   * committed batch that produced the numbers (no drift), joins directly
-  * with the data it describes, and day-partitions prune retention
-  * sweeps to file deletes.
+  * with the data it describes, and day partitions would let a
+  * retention sweep delete whole days. No retention sweep or day fold
+  * exists yet (ROADMAP directions 2 and 5): the table only grows.
   */
 final class MetricsSink(spark: SparkSession, root: String) {
 
@@ -25,9 +26,9 @@ final class MetricsSink(spark: SparkSession, root: String) {
     * reference's `recordTelemetry(name, p => p.intField(...))`).
     *
     * File-count note: one small file per tick ≈ 8.6k files/day/loop at
-    * a 10 s cadence. Day partitioning keeps reads pruned; fold closed
-    * days with `spark.read.parquet(day).coalesce(1)` overwrite in the
-    * retention sweep (same pattern as `DealStateStore.compact`). */
+    * a 10 s cadence. Day partitioning keeps reads pruned; nothing folds
+    * closed days or sweeps old ones yet, so the file count grows with
+    * every tick (ROADMAP directions 2 and 5). */
   def record(loop: String, counters: Map[String, Long],
       ts: Timestamp = new Timestamp(System.currentTimeMillis())): Unit = {
     if (counters.isEmpty) return

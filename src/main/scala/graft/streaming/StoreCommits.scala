@@ -1,49 +1,252 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** The commit-store plumbing SHARED by the four ANN stores (the
-  * [[VectorStore]] lifecycle) and the dedup label store: atomic
-  * control-file writes, `_PARTS` reads, manifest claiming, the
-  * fold-and-swap compaction skeleton with time-based GC grace
-  * ([[gcUnlisted]]), and the generic two-phase pending-marker promote
-  * for data-fit models — a fix to the promote/GC machinery lands HERE,
-  * once.
-  *
-  * The contracts these primitives implement are documented at their
-  * sites ([[DedupStream]] for manifest/`_FOLDED`/visibility,
-  * [[VectorStore]] for the store lifecycle and the refit two-phase
-  * commit). */
+/** The commit protocol every durable store shares — the four ANN stores
+  * (the [[VectorStore]] lifecycle) and the dedup store with its label
+  * sub-stores — and its one home: `_PARTS` layout pinning, manifest
+  * visibility (`_MANIFEST`, `_FOLDED`), commit publishing and reading,
+  * the ONE fold-and-swap ([[foldAndSwap]]) with time-based GC grace
+  * ([[gcUnlisted]], `_RETIRED`), tombstone deletes, and the generic
+  * two-phase pending-marker promote for data-fit models. A fix to the
+  * commit, fold or GC machinery lands HERE, once. The store lifecycle
+  * and the refit two-phase commit are documented at [[VectorStore]]. */
 private[graft] object StoreCommits {
 
-  private def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
+  private def fs(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Atomic full-text file replace (temp + FileContext rename with
-    * OVERWRITE): ORDERED content, unlike the sorted-set writeNameFile —
-    * centroid/codebook rows must round-trip in file order because
-    * stored codes index into them. */
+  /** Atomic control-file replace: temp file + FileContext rename with
+    * OVERWRITE (atomic on posix-local and HDFS — never a window where
+    * the file is partial). The text is written as given: a name set is
+    * its sorted lines ([[lines]]), and centroid/codebook rows keep their
+    * file order because stored codes index into it. */
   def writeTextFile(
-      spark: SparkSession, root: org.apache.hadoop.fs.Path,
+      spark: SparkSession, root: Path,
       fileName: String, text: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val f = fs(spark, root)
-    val tmp = new org.apache.hadoop.fs.Path(root,
+    val tmp = new Path(root,
       s"_$fileName.tmp-${java.util.UUID.randomUUID()}")
     val out = f.create(tmp, true)
     try out.write(text.getBytes("UTF-8")) finally out.close()
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(root.toUri, conf)
-    fc.rename(tmp, new org.apache.hadoop.fs.Path(root, fileName),
+    fc.rename(tmp, new Path(root, fileName),
       org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
-  /** ChecksumException-retrying read: see [[DedupStream.readSmallText]]. */
-  def readTextFile(
-      f: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[String] =
-    DedupStream.readSmallText(f, p)
+  /** Read a small control file, retrying on ChecksumException: the
+    * rename swap is atomic for the DATA file on posix-local and HDFS,
+    * but the local ChecksumFileSystem moves the `.crc` sidecar in a
+    * SECOND step, so a reader racing the swap can momentarily see new
+    * bytes against the old checksum. HDFS/object stores have no
+    * client-side sidecar (the window doesn't exist there); locally the
+    * re-open lands after the sidecar rename. Bounded, so a genuinely
+    * corrupt file still fails loudly. */
+  def readSmallText(f: FileSystem, p: Path): Option[String] = {
+    var attempt = 0
+    while (true) {
+      if (!f.exists(p)) return None
+      try {
+        val in = f.open(p)
+        return Some(
+          try scala.io.Source.fromInputStream(in).mkString finally in.close())
+      } catch {
+        case e: org.apache.hadoop.fs.ChecksumException =>
+          attempt += 1
+          if (attempt >= 20) throw e
+          Thread.sleep(5L * attempt)
+      }
+    }
+    None // unreachable
+  }
+
+  // ======== store layout marker ========
+
+  /** The `_PARTS` family of a store no content-keyed writer has claimed
+    * yet: the vector stores and the labels sub-stores hash only ids and
+    * components (family-independent), so a store whose FIRST writer is
+    * one of them pins its partition count without committing to a
+    * shingle-key family; the first content-keyed writer (a dedup
+    * sketch/span/exact step) then upgrades the marker in place.
+    * Partition-count drift stays fatal either way. */
+  val NoKeyFamily = 0
+
+  /** The one `_PARTS` parser: `<parts>/<family>`. A truncated or
+    * hand-edited marker is an IllegalArgumentException naming it, never
+    * a bare NumberFormatException or MatchError. */
+  private def parseParts(dir: Path, txt: String): (Int, Int) =
+    txt.trim.split('/').map(s => if (s.forall(_.isDigit)) s.toIntOption else None) match {
+      case Array(Some(p), Some(f)) => (p, f)
+      case _ => throw new IllegalArgumentException(
+        s"store $dir has a malformed _PARTS marker '${txt.trim}' " +
+          "(expected '<parts>/<family>', e.g. '64/2') — " +
+          "rebuild the store or restore the marker to the writing config")
+    }
+
+  /** The pinned partition count from the store's `_PARTS` marker. */
+  def storePartsOf(f: FileSystem, dir: Path): Int =
+    parseParts(dir, readSmallText(f, new Path(dir, "_PARTS")).getOrElse(
+      throw new IllegalArgumentException(s"store $dir has no _PARTS marker")))._1
+
+  /** Layout/key-family marker, checked BEFORE any store read or write.
+    * Two silent-corruption vectors die here, loudly:
+    *   - `parts` drift: pruned reads pick subdirectories by
+    *     `hash mod parts` — a store written at 64 parts read at 256
+    *     would silently skip most matching history;
+    *   - key-family drift: signatures from a different shingle-hash
+    *     family (including any pre-marker store) agree with new
+    *     signatures only by chance, so every cross-history near-dup
+    *     would silently read as unique.
+    * First commit writes the marker; every later commit must match
+    * ([[NoKeyFamily]] matches any family). */
+  def ensureStoreMeta(
+      spark: SparkSession, root: String, parts: Int, family: Int): Unit = {
+    val dir = new Path(root)
+    val f = fs(spark, dir)
+    readSmallText(f, new Path(dir, "_PARTS")) match {
+      case Some(raw) =>
+        val txt = raw.trim
+        val (p, fam) = parseParts(dir, txt)
+        def drifted = s"store $root was written with parts/family=$txt; this config is " +
+          s"$parts/$family — rebuild the store or match the writing config"
+        require(p == parts, drifted)
+        if (family != NoKeyFamily) {
+          if (fam == NoKeyFamily) // id-keyed-first store: claim the family
+            writeTextFile(spark, dir, "_PARTS", s"$parts/$family")
+          else require(fam == family, drifted)
+        }
+      case None =>
+        // commits live one level down (buckets/sigs/spans sub-stores)
+        val hasCommits = f.exists(dir) && f.listStatus(dir).exists { s =>
+          s.isDirectory && (s.getPath.getName.startsWith("batch=") ||
+            f.listStatus(s.getPath).exists(c =>
+              c.isDirectory && c.getPath.getName.startsWith("batch=")))
+        }
+        require(!hasCommits,
+          s"store $root has commits but no _PARTS marker, so its partition " +
+            "count and shingle-key family cannot be verified. If it was written " +
+            s"by THIS key family at partition count P, adopt it by writing 'P/$family' " +
+            s"to $root/_PARTS; otherwise rebuild it (signatures from another " +
+            "family agree with new ones only by chance) or pin the old code")
+        f.mkdirs(dir)
+        // atomic temp+rename: a crash mid-write must not leave an
+        // empty/partial marker that fails every later tick's
+        // parts/family check until hand-repaired — the marker is either
+        // absent (rewritten next tick) or complete
+        writeTextFile(spark, dir, "_PARTS", s"$parts/$family")
+    }
+  }
+
+  // ======== commit visibility ========
+
+  /** A sub-store root's `_MANIFEST`, when present, lists EXACTLY the
+    * commit dirs readers may see — the atomic commit point of
+    * [[foldAndSwap]]: folded data is written under an UNLISTED dir name,
+    * then one atomic manifest swap makes the folded commit visible and
+    * the replaced commits invisible in the same instant. Without a
+    * manifest (a never-compacted dedup sub-store), every `batch=*` dir
+    * is visible. Kept O(commits since the last fold): the tick path
+    * rewrites it once per commit. */
+  def readManifest(f: FileSystem, root: Path): Option[Set[String]] =
+    readNames(f, new Path(root, "_MANIFEST"))
+
+  /** The `_FOLDED` ledger: names of commits a fold ever replaced. A
+    * micro-batch replayed from a rolled-back checkpoint AFTER its commit
+    * was folded away rewrites its data dirs, and re-publishing them
+    * would double its rows beside the folded copy — the ledger keeps
+    * such rewrites invisible (the replay still EMITS its pairs; only the
+    * store fold is suppressed, which is exactly right because the folded
+    * commit already holds those rows). Separate from `_MANIFEST` so the
+    * per-tick publish rewrites only the small visible list; only folds
+    * and tombstone retirement rewrite the ledger. */
+  def readFolded(f: FileSystem, root: Path): Set[String] =
+    readNames(f, new Path(root, "_FOLDED")).getOrElse(Set.empty)
+
+  private def readNames(f: FileSystem, p: Path): Option[Set[String]] =
+    readSmallText(f, p).map(_.split('\n').map(_.trim).filter(_.nonEmpty).toSet)
+
+  /** A name set as its control-file text: the names sorted, one a line. */
+  private def lines(names: Set[String]): String = names.toSeq.sorted.mkString("\n")
+
+  private def namesOf(commits: Seq[FileStatus]): Set[String] =
+    commits.map(_.getPath.getName).toSet
+
+  def writeManifest(spark: SparkSession, root: Path, dirs: Set[String]): Unit =
+    writeTextFile(spark, root, "_MANIFEST", lines(dirs))
+
+  /** Visible commit dirs under a sub-store root: manifest-filtered when
+    * a manifest exists, plain `batch=*` listing otherwise. */
+  def visibleCommits(f: FileSystem, root: Path): Seq[FileStatus] = {
+    if (!f.exists(root)) return Nil
+    val manifest = readManifest(f, root)
+    f.listStatus(root).filter(_.isDirectory).toSeq
+      .filter(_.getPath.getName.startsWith("batch="))
+      .filter(s => manifest.forall(_.contains(s.getPath.getName)))
+  }
+
+  /** A commit's name is made reader-visible: no-op for manifest-less
+    * stores (listing is the visibility), idempotent otherwise. A name
+    * the `_FOLDED` ledger records is never resurrected — see
+    * [[readFolded]]. */
+  def publishCommit(spark: SparkSession, root: Path, name: String): Unit = {
+    val f = fs(spark, root)
+    readManifest(f, root).foreach { visible =>
+      if (!visible.contains(name) && !readFolded(f, root).contains(name))
+        writeManifest(spark, root, visible + name)
+    }
+  }
+
+  /** The store's HISTORY view for one batch, PRUNED to the key
+    * partitions the batch can touch: lists every VISIBLE commit
+    * EXCEPT the current batch's own (a replayed batch must not treat
+    * its previous, possibly partial, commit as history), then inside
+    * each commit keeps only the `<partCol>=<k>` subdirectories with
+    * `wanted(k)` — the one structural guarantee that a tick's read is
+    * O(batch keys), not O(corpus). Layout compatibility is enforced by
+    * [[ensureStoreMeta]] before this is called. Listing is explicit,
+    * so the read needs no partition discovery and an empty/missing
+    * store stays a clean miss. */
+  def readStore(
+      spark: SparkSession, dir: String, schema: StructType,
+      excludeTag: String, partCol: String, wanted: Int => Boolean): DataFrame = {
+    val p = new Path(dir)
+    val f = fs(spark, p)
+    readStoreFrom(spark, visibleCommits(f, p), schema, excludeTag, partCol, wanted, f)
+  }
+
+  /** [[readStore]] over an ALREADY-RESOLVED commit set — the round-18
+    * consistency thread: a search resolves its visible commits ONCE and
+    * feeds the same set to the scan, the read mask, and the
+    * compacted fast-path decision, so a fold landing mid-search can
+    * never split them across generations. A commit without
+    * `<partCol>=` subdirectories (an L0 single-file or an empty commit)
+    * is read whole. */
+  def readStoreFrom(
+      spark: SparkSession, commits: Seq[FileStatus], schema: StructType,
+      excludeTag: String, partCol: String, wanted: Int => Boolean,
+      f0: FileSystem = null): DataFrame = {
+    if (commits.isEmpty)
+      return spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    val f = Option(f0).getOrElse(fs(spark, commits.head.getPath))
+    val leaves: Seq[String] = commits
+      .filterNot(_.getPath.getName == s"batch=$excludeTag")
+      .flatMap { b =>
+        val subs = f.listStatus(b.getPath).filter(_.isDirectory)
+          .filter(_.getPath.getName.startsWith(s"$partCol="))
+        if (subs.isEmpty) Seq(b.getPath.toString)
+        else subs.toSeq
+          .filter(s => wanted(s.getPath.getName.stripPrefix(s"$partCol=").toInt))
+          .map(_.getPath.toString)
+      }
+    if (leaves.nonEmpty)
+      spark.read.schema(schema).parquet(leaves: _*)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  }
 
   // ======== deferred physical GC (round-17 optimization round) ========
   //
@@ -76,14 +279,18 @@ private[graft] object StoreCommits {
       .map(_.trim.toLong).getOrElse(600000L)
 
   private def readRetired(
-      f: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Map[String, Long] =
-    readTextFile(f, new org.apache.hadoop.fs.Path(root, "_RETIRED"))
+      f: FileSystem,
+      root: Path): Map[String, Long] =
+    readSmallText(f, new Path(root, "_RETIRED"))
       .map(_.linesIterator.map(_.trim).filter(_.nonEmpty).flatMap { l =>
         val i = l.lastIndexOf(' ')
         if (i <= 0) None
         else scala.util.Try(l.substring(0, i) -> l.substring(i + 1).toLong).toOption
       }.toMap).getOrElse(Map.empty)
+
+  private def writeRetired(spark: SparkSession, root: Path, ledger: Map[String, Long]): Unit =
+    writeTextFile(spark, root, "_RETIRED",
+      ledger.toSeq.sorted.map { case (n, t) => s"$n $t" }.mkString("\n"))
 
   /** Sweep UNLISTED commit dirs under `root`: manifest-visible dirs are
     * untouchable; `stampNow` names (the generation this call just
@@ -94,14 +301,14 @@ private[graft] object StoreCommits {
     * vanished dirs drop out naturally (the rewrite keeps only what the
     * listing walk retained). */
   def gcUnlisted(
-      spark: SparkSession, root: org.apache.hadoop.fs.Path,
+      spark: SparkSession, root: Path,
       graceMs: Long, stampNow: Set[String]): Unit = {
     val f = fs(spark, root)
     if (!f.exists(root)) return
-    DedupStream.readManifest(f, root) match {
+    readManifest(f, root) match {
       case None => () // no manifest authority: never delete
       case Some(visible) =>
-        val folded = DedupStream.readFolded(f, root)
+        val folded = readFolded(f, root)
         val ledger = readRetired(f, root)
         val now = System.currentTimeMillis()
         var next = Map.empty[String, Long]
@@ -119,9 +326,7 @@ private[graft] object StoreCommits {
               else next += name -> t
             }
           }
-        if (next != ledger)
-          writeTextFile(spark, root, "_RETIRED",
-            next.toSeq.sorted.map { case (n, t) => s"$n $t" }.mkString("\n"))
+        if (next != ledger) writeRetired(spark, root, next)
     }
   }
 
@@ -132,40 +337,36 @@ private[graft] object StoreCommits {
     * distance from the last fold — the drift auto-refit's cooldown
     * signal (no extra state file). */
   def visibleCommitCount(spark: SparkSession, dataRoot: String): Int = {
-    val root = new org.apache.hadoop.fs.Path(dataRoot)
+    val root = new Path(dataRoot)
     val f = fs(spark, root)
-    DedupStream.readManifest(f, root).map(_.size).getOrElse(
+    readManifest(f, root).map(_.size).getOrElse(
       if (f.exists(root))
         f.listStatus(root).count(s =>
           s.isDirectory && s.getPath.getName.startsWith("batch="))
       else 0)
   }
 
-  /** The pinned partition count from the store's `_PARTS` marker. */
-  def storePartsOf(
-      f: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Int = {
-    val t = readTextFile(f, new org.apache.hadoop.fs.Path(dir, "_PARTS"))
-      .getOrElse(throw new IllegalArgumentException(
-        s"store $dir has no _PARTS marker")).trim
-    t.split('/')(0).toInt
-  }
+  /** The commits a claim adopts on a root no manifest claims yet: the
+    * `_SUCCESS`-complete ones. A manifest-less listing may hold a
+    * PARTIALLY-written dir (a tick that crashed mid-write task-committed
+    * parquet files but never the job's `_SUCCESS`); adopting it would
+    * freeze the partial rows forever, because `_FOLDED` then suppresses
+    * the replay's clean rewrite. Left out, it turns invisible the
+    * instant the manifest exists, the next GC collects it, and the
+    * replay rewrites and publishes it normally. */
+  private def adoptable(f: FileSystem, root: Path): Seq[FileStatus] =
+    visibleCommits(f, root).filter(s => f.exists(new Path(s.getPath, "_SUCCESS")))
 
   /** Manifest-gated from birth: claim a `_MANIFEST` before the first
     * commit so readers never see a half-written dir through the
-    * manifest-less listing fallback; adopt `_SUCCESS`-complete dirs if
+    * manifest-less listing fallback; adopt the [[adoptable]] dirs if
     * the file is somehow absent on a non-empty store. */
-  def ensureManifestClaimed(
-      spark: SparkSession,
-      root: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileSystem = {
+  def ensureManifestClaimed(spark: SparkSession, root: Path): Unit = {
     val f = fs(spark, root)
-    if (!f.exists(new org.apache.hadoop.fs.Path(root, "_MANIFEST"))) {
+    if (!f.exists(new Path(root, "_MANIFEST"))) {
       f.mkdirs(root)
-      val adopt = DedupStream.visibleCommits(f, root).filter(s =>
-        f.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      DedupStream.writeManifest(spark, root, adopt.map(_.getPath.getName).toSet)
+      writeManifest(spark, root, namesOf(adoptable(f, root)))
     }
-    f
   }
 
   /** The EFFECTIVE pinned model under the two-phase `<marker>.pending`
@@ -182,14 +383,14 @@ private[graft] object StoreCommits {
       parse: String => M, render: M => String,
       targetOf: M => Option[String], clearTarget: M => M,
       promote: Boolean): Option[M] = {
-    val dir = new org.apache.hadoop.fs.Path(storeDir)
+    val dir = new Path(storeDir)
     val f = fs(spark, dir)
-    val root = new org.apache.hadoop.fs.Path(dir, subdir)
-    val pendingPath = new org.apache.hadoop.fs.Path(dir, s"$marker.pending")
+    val root = new Path(dir, subdir)
+    val pendingPath = new Path(dir, s"$marker.pending")
     // (the effective model, whether the store has a visible commit)
     def resolveOnce(): (Option[M], Boolean) = {
-      val pending = readTextFile(f, pendingPath).map(parse)
-      val visible = DedupStream.readManifest(f, root).getOrElse(Set.empty)
+      val pending = readSmallText(f, pendingPath).map(parse)
+      val visible = readManifest(f, root).getOrElse(Set.empty)
       pending match {
         case Some(m) if targetOf(m).exists(visible.contains) =>
           if (promote) {
@@ -198,7 +399,7 @@ private[graft] object StoreCommits {
           }
           (Some(clearTarget(m)), true)
         case _ =>
-          (readTextFile(f, new org.apache.hadoop.fs.Path(dir, marker)).map(parse),
+          (readSmallText(f, new Path(dir, marker)).map(parse),
             visible.nonEmpty)
       }
     }
@@ -268,10 +469,10 @@ private[graft] object StoreCommits {
     * (harmless) rather than ever reusing one (two versions of an id
     * with the same number would make the election ambiguous). */
   def nextVersion(spark: SparkSession, storeDir: String): Long = {
-    val dir = new org.apache.hadoop.fs.Path(storeDir)
+    val dir = new Path(storeDir)
     val f = fs(spark, dir)
     f.mkdirs(dir)
-    val v = readTextFile(f, new org.apache.hadoop.fs.Path(dir, "_SEQ"))
+    val v = readSmallText(f, new Path(dir, "_SEQ"))
       .map(_.trim.toLong).getOrElse(0L) + 1L
     writeTextFile(spark, dir, "_SEQ", v.toString)
     v
@@ -314,10 +515,10 @@ private[graft] object StoreCommits {
     * deletes since the last compaction, which retires both. */
   def deltaMasked(
       df: DataFrame, spark: SparkSession, storeDir: String, idCol: String,
-      commits: Seq[org.apache.hadoop.fs.FileStatus] = Nil,
+      commits: Seq[FileStatus] = Nil,
       tombSubdir: String = "tombstones",
       broadcastDeltaBytes: Long = 1L << 30): DataFrame = {
-    val f = fs(spark, new org.apache.hadoop.fs.Path(storeDir))
+    val f = fs(spark, new Path(storeDir))
     var deltaBytes = 0L
     // both layouts: hash-partitioned ab= subdirs, L0 single files
     val deltaLeaves = commits.filterNot(s => isFoldTarget(s.getPath.getName)).flatMap { b =>
@@ -327,8 +528,8 @@ private[graft] object StoreCommits {
         subs.iterator.flatMap(s => f.listStatus(s.getPath)).map(_.getLen).sum
       if (subs.isEmpty) Seq(b.getPath.toString) else subs.toSeq.map(_.getPath.toString)
     }
-    val tombLeaves = DedupStream.visibleCommits(f,
-      new org.apache.hadoop.fs.Path(s"$storeDir/$tombSubdir")).map(_.getPath.toString)
+    val tombLeaves = visibleCommits(f,
+      new Path(s"$storeDir/$tombSubdir")).map(_.getPath.toString)
     if (deltaLeaves.isEmpty && tombLeaves.isEmpty) return df
     val verSchema = StructType(Seq(
       org.apache.spark.sql.types.StructField(idCol,
@@ -409,9 +610,9 @@ private[graft] object StoreCommits {
   def relayout(
       spark: SparkSession, commitDir: String, schema: StructType,
       withAb: DataFrame => DataFrame): Unit = {
-    val dirP = new org.apache.hadoop.fs.Path(commitDir)
+    val dirP = new Path(commitDir)
     val f = fs(spark, dirP)
-    val tmp = new org.apache.hadoop.fs.Path(
+    val tmp = new Path(
       s"$commitDir.tmp-${java.util.UUID.randomUUID()}")
     withAb(spark.read.schema(schema).parquet(commitDir))
       .repartition(col("ab")).write.partitionBy("ab")
@@ -724,7 +925,7 @@ private[graft] object StoreCommits {
   def liveVectors(
       spark: SparkSession, storeDir: String, subdir: String,
       schema: StructType, multiRowPerId: Boolean = true): DataFrame = {
-    val dir = new org.apache.hadoop.fs.Path(storeDir)
+    val dir = new Path(storeDir)
     val f = fs(spark, dir)
     val parts = storePartsOf(f, dir)
     // ONE commit-set resolution feeds the scan, the read mask, and
@@ -732,9 +933,9 @@ private[graft] object StoreCommits {
     // generation (round-18 ADVICE: a fold landing between two separate
     // manifest reads could flip the fast path on while the scan still
     // holds a delta snapshot with per-id duplicates)
-    val root = new org.apache.hadoop.fs.Path(s"$storeDir/$subdir")
-    val commits = DedupStream.visibleCommits(f, root)
-    val all = DedupStream.readStoreFrom(spark, commits, schema,
+    val root = new Path(s"$storeDir/$subdir")
+    val commits = visibleCommits(f, root)
+    val all = readStoreFrom(spark, commits, schema,
       excludeTag = " none ", partCol = "ab",
       wanted = (0 until parts).toSet)
     val masked = deltaMasked(all, spark, storeDir, "neighbor_id", commits)
@@ -762,11 +963,11 @@ private[graft] object StoreCommits {
     * read (round-18 ADVICE — see [[liveVectors]]). Bounded FS
     * existence checks (one per visible fold target, normally one). */
   def compactedOnly(
-      f: org.apache.hadoop.fs.FileSystem,
-      commits: Seq[org.apache.hadoop.fs.FileStatus]): Boolean =
+      f: FileSystem,
+      commits: Seq[FileStatus]): Boolean =
     commits.nonEmpty && commits.forall(s =>
       isFoldTarget(s.getPath.getName) &&
-        f.exists(new org.apache.hadoop.fs.Path(s.getPath, OneRowMarker)))
+        f.exists(new Path(s.getPath, OneRowMarker)))
 
   /** The fused tiers' exact re-rank, shared by the IVF-PQ and IVF-SQ
     * stores: join the approximate shortlist to one deterministic
@@ -821,7 +1022,7 @@ private[graft] object StoreCommits {
       batchTag: String = java.util.UUID.randomUUID().toString,
       subdir: String = "tombstones"): Long = {
     val spark = ids.sparkSession
-    val root = new org.apache.hadoop.fs.Path(s"$storeDir/$subdir")
+    val root = new Path(s"$storeDir/$subdir")
     ensureManifestClaimed(spark, root)
     val commitDir = s"$storeDir/$subdir/batch=$batchTag"
     // ONE job: the distinct-id count rides the write as an observed
@@ -833,7 +1034,7 @@ private[graft] object StoreCommits {
       .filter(col("id").isNotNull).coalesce(1).distinct()
       .observe(obs, count(lit(1)).as("n"))
       .write.mode("overwrite").parquet(commitDir)
-    DedupStream.publishCommit(spark, root, s"batch=$batchTag")
+    publishCommit(spark, root, s"batch=$batchTag")
     obs.get("n").asInstanceOf[Long]
   }
 
@@ -843,10 +1044,10 @@ private[graft] object StoreCommits {
   def tombstoneCommits(
       spark: SparkSession, storeDir: String,
       subdir: String = "tombstones"): Set[String] = {
-    val root = new org.apache.hadoop.fs.Path(s"$storeDir/$subdir")
+    val root = new Path(s"$storeDir/$subdir")
     val f = fs(spark, root)
     if (!f.exists(root)) Set.empty
-    else DedupStream.visibleCommits(f, root).map(_.getPath.getName).toSet
+    else namesOf(visibleCommits(f, root))
   }
 
   /** Retire APPLIED tombstone commits after a compaction's manifest
@@ -860,11 +1061,10 @@ private[graft] object StoreCommits {
       subdir: String = "tombstones",
       gcGraceMs: Long = defaultGcGraceMs): Unit = {
     if (applied.isEmpty) return
-    val root = new org.apache.hadoop.fs.Path(s"$storeDir/$subdir")
+    val root = new Path(s"$storeDir/$subdir")
     val f = fs(spark, root)
     if (!f.exists(root)) return
-    DedupStream.writeNameFile(spark, root, "_FOLDED",
-      DedupStream.readFolded(f, root) ++ applied)
+    writeTextFile(spark, root, "_FOLDED", lines(readFolded(f, root) ++ applied))
     // stamp the applied dirs into the grace ledger BEFORE the manifest
     // rewrite (round-18 ADVICE): ordering alone must guarantee a crash
     // can only EXTEND a retired tombstone's grace, never skip it — a
@@ -874,12 +1074,8 @@ private[graft] object StoreCommits {
     // (The _FOLDED write above already protects this path; the
     // pre-stamp makes the guarantee independent of that coupling.)
     val now = System.currentTimeMillis()
-    writeTextFile(spark, root, "_RETIRED",
-      (readRetired(f, root) ++ applied.map(_ -> now))
-        .toSeq.sorted.map { case (n, t) => s"$n $t" }.mkString("\n"))
-    val remaining =
-      DedupStream.visibleCommits(f, root).map(_.getPath.getName).toSet -- applied
-    DedupStream.writeManifest(spark, root, remaining)
+    writeRetired(spark, root, readRetired(f, root) ++ applied.map(_ -> now))
+    writeManifest(spark, root, namesOf(visibleCommits(f, root)) -- applied)
     // physical deletion deferred by the grace window — an in-flight
     // reader's mask (or a distributed one, built lazily) may still open
     // these files; the mask it applies is against the generation it is
@@ -887,76 +1083,102 @@ private[graft] object StoreCommits {
     gcUnlisted(spark, root, gcGraceMs, stampNow = applied)
   }
 
-  /** The fold-and-swap compaction skeleton: adopt the manifest, read
-    * the whole visible store, let the caller transform it (identity
-    * fold or refit re-encode), write the target commit hash-partitioned
-    * and sorted, stage an optional pending marker, extend `_FOLDED`,
-    * swap the manifest atomically, run the caller's post-swap step
-    * (e.g. finish a pending promotion), then GC with a TIME-BASED
-    * GRACE PERIOD ([[gcUnlisted]]): the commits this call replaced are
-    * ledger-stamped and stay on disk until `gcGraceMs` has elapsed —
-    * an in-flight reader whose leaf list was captured against a prior
-    * manifest finishes its lazy read even when multiple folds complete
-    * under it (the one-generation grace this replaces lost that race
-    * whenever two folds landed inside one read's latency).
-    * Never-visible strays are deleted immediately.
-    * SINGLE-WRITER contract: run between upserts.
+  /** THE fold: every compaction of every store — the vector stores'
+    * identity fold and refit, the seven dedup sub-stores, the labels'
+    * byId/byComp pair — is one call. Per call, once:
+    *   - ADOPTION: each target root's commits as the manifest lists
+    *     them; a root no manifest claims yet adopts only its
+    *     [[adoptable]] dirs, claimed before anything is written (with
+    *     `claimFirst`, before the fold decision), so every target dir
+    *     is born invisible and a crash at any later point cannot double
+    *     history;
+    *   - the caller's `fold` over the adopted commits: None, nothing to
+    *     fold; else each target's rows (carrying its partition column),
+    *     the target dir name, and an optional staged
+    *     `(pendingMarkerName, text)`;
+    *   - the INVISIBLE target writes, hash-partitioned by the target's
+    *     partition column and sorted by its sort columns, the in-dir
+    *     one-row marker, the pending marker;
+    *   - per root, the `_FOLDED` resurrection guard (sources are still
+    *     the visible set, so it has no reader-facing effect yet), then
+    *     the atomic manifest swap — THE commit point of that root;
+    *   - `afterSwap` (finish a pending promotion, retire tombstones);
+    *   - GC with a TIME-BASED GRACE PERIOD ([[gcUnlisted]]) of every
+    *     root and the sibling `tombstones` root: replaced commits stay
+    *     on disk until `gcGraceMs` has elapsed, so an in-flight reader
+    *     whose leaf list was captured against a prior manifest finishes
+    *     its lazy read even when several folds complete under it;
+    *     never-visible strays are deleted immediately.
+    * SINGLE-WRITER contract: run between writes.
     *
-    * @param extraWork   work even with one visible commit (a refit
-    *                    must re-encode a single-commit store)
-    * @param transform   visible rows → (target rows, target dir name,
-    *                    optional (pendingMarkerName, pendingText))
-    * @param afterSwap   runs after the manifest swap (before GC)
-    * @param oneRowPerId the caller's transform guarantees exactly one
-    *                    row per live id ([[electLatestOne]]) — stamps
-    *                    the in-dir marker the compacted fast paths
-    *                    ([[compactedOnly]]) require */
+    * @param targets      (sub-store dir under `storeDir`, partition
+    *                     column, sort columns) per root. The first root
+    *                     is the authority: without it there is nothing
+    *                     to fold, and a missing later root is claimed
+    *                     empty (so a fold rebuilds it)
+    * @param claimFirst   false: a root is claimed only by a fold — a
+    *                     never-compacted dedup sub-store stays
+    *                     manifest-less, so its ticks rewrite no manifest
+    * @param stampReplaced ledger-stamp the commits this call replaced, so
+    *                     its own GC keeps them even at grace 0 (the
+    *                     vector stores keep one generation); false: at
+    *                     grace 0 they go in this call (they are in
+    *                     `_FOLDED`, so any positive grace stamps them)
+    * @param oneRowPerId  the caller's rows hold exactly one row per live
+    *                     id ([[electLatestOne]]) — stamps the in-dir
+    *                     marker the compacted fast paths
+    *                     ([[compactedOnly]]) require */
   def foldAndSwap(
-      spark: SparkSession, storeDir: String, subdir: String,
-      schema: StructType, abOf: Long => Column, sortCols: Seq[String],
-      extraWork: Boolean,
-      transform: DataFrame => (DataFrame, String, Option[(String, String)]),
+      spark: SparkSession, storeDir: String,
+      targets: Seq[(String, String, Seq[String])],
+      fold: Seq[Seq[FileStatus]] => Option[(Seq[DataFrame], String, Option[(String, String)])],
       afterSwap: () => Unit = () => (),
       gcGraceMs: Long = defaultGcGraceMs,
+      claimFirst: Boolean = true,
+      stampReplaced: Boolean = true,
       oneRowPerId: Boolean = false): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(storeDir)
-    val root = new org.apache.hadoop.fs.Path(dir, subdir)
-    val f = fs(spark, root)
-    if (!f.exists(root)) return
-    ensureManifestClaimed(spark, root)
-    val visible = DedupStream.visibleCommits(f, root)
-    val justReplaced: Set[String] =
-      if (visible.size >= 2 || (extraWork && visible.nonEmpty)) {
-        val parts = storePartsOf(f, dir)
-        val all = DedupStream.readStore(spark, s"$storeDir/$subdir", schema,
-          excludeTag = " none ", partCol = "ab", wanted = (0 until parts).toSet)
-        val (rows, target, pending) = transform(all)
-        rows.withColumn("ab", abOf(parts.toLong))
-          .repartition(col("ab")).sortWithinPartitions(sortCols.map(col): _*)
-          .write.partitionBy("ab")
-          .mode("overwrite").parquet(s"$storeDir/$subdir/$target")
-        // one-row-per-id marker INSIDE the target dir, before the swap:
-        // the fast paths ([[compactedOnly]]) trust the guarantee only
-        // for folds that carry it (underscore-prefixed → invisible to
-        // the parquet reader and the leaf enumeration)
-        if (oneRowPerId)
-          writeTextFile(spark,
-            new org.apache.hadoop.fs.Path(s"$storeDir/$subdir/$target"),
-            OneRowMarker, "1")
+    val dir = new Path(storeDir)
+    val roots = targets.map(t => new Path(dir, t._1))
+    val f = fs(spark, dir)
+    if (!f.exists(roots.head)) return
+    // (claimed, adopted commits) per root
+    val adopted = roots.map { root =>
+      if (claimFirst) ensureManifestClaimed(spark, root)
+      if (claimFirst || f.exists(new Path(root, "_MANIFEST"))) (true, visibleCommits(f, root))
+      else (false, adoptable(f, root))
+    }
+    val replaced = fold(adopted.map(_._2)) match {
+      case None => roots.map(_ => Set.empty[String])
+      case Some((rows, target, pending)) =>
+        roots.zip(adopted).foreach { case (root, (claimed, commits)) =>
+          if (!claimed) writeManifest(spark, root, namesOf(commits))
+        }
+        targets.zip(rows).foreach { case ((sub, partCol, sortCols), r) =>
+          val byPart = r.repartition(col(partCol))
+          (if (sortCols.isEmpty) byPart else byPart.sortWithinPartitions(sortCols.map(col): _*))
+            .write.partitionBy(partCol)
+            .mode("overwrite").parquet(s"$storeDir/$sub/$target")
+          // one-row-per-id marker INSIDE the target dir, before the swap:
+          // the fast paths ([[compactedOnly]]) trust the guarantee only
+          // for folds that carry it (underscore-prefixed → invisible to
+          // the parquet reader and the leaf enumeration)
+          if (oneRowPerId)
+            writeTextFile(spark, new Path(s"$storeDir/$sub/$target"), OneRowMarker, "1")
+        }
         pending.foreach { case (name, text) => writeTextFile(spark, dir, name, text) }
-        DedupStream.writeNameFile(spark, root, "_FOLDED",
-          DedupStream.readFolded(f, root) ++ visible.map(_.getPath.getName).toSet)
-        DedupStream.writeManifest(spark, root, Set(target)) // THE commit point
+        roots.zip(adopted).foreach { case (root, (_, commits)) =>
+          writeTextFile(spark, root, "_FOLDED", lines(readFolded(f, root) ++ namesOf(commits)))
+          writeManifest(spark, root, Set(target)) // THE commit point
+        }
         afterSwap()
-        visible.map(_.getPath.getName).toSet
-      } else Set.empty
-    // grace-ledger GC: just-replaced dirs are stamped (never deleted in
-    // the call that retired them), prior generations age out past the
-    // grace window, never-visible strays go immediately
-    gcUnlisted(spark, root, gcGraceMs, stampNow = justReplaced)
+        adopted.map(a => namesOf(a._2))
+    }
+    roots.zip(replaced).foreach { case (root, names) =>
+      gcUnlisted(spark, root, gcGraceMs, stampNow = if (stampReplaced) names else Set.empty)
+    }
     // opportunistic sweep of the sibling tombstones root so retired
     // tombstone dirs age out even when no further deletes ever happen
-    val tombRoot = new org.apache.hadoop.fs.Path(dir, "tombstones")
+    val tombRoot = new Path(dir, "tombstones")
     if (f.exists(tombRoot)) gcUnlisted(spark, tombRoot, gcGraceMs, Set.empty)
   }
 }

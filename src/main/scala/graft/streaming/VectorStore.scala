@@ -227,7 +227,7 @@ private[streaming] abstract class VectorStore(c: VectorCodec) {
       batch: DataFrame, storeDir: String, cfg: Seq[Long], batchTag: String,
       storeParts: Int, l0Bound: Int, idCol: String, vecCol: String): DataFrame = {
     val spark = batch.sparkSession
-    DedupStream.ensureStoreMeta(spark, storeDir, storeParts, family = 0)
+    StoreCommits.ensureStoreMeta(spark, storeDir, storeParts, StoreCommits.NoKeyFamily)
     val root = new Path(s"$storeDir/${c.subdir}")
     StoreCommits.ensureManifestClaimed(spark, root)
     val commitDir = s"$storeDir/${c.subdir}/batch=$batchTag"
@@ -289,7 +289,7 @@ private[streaming] abstract class VectorStore(c: VectorCodec) {
         c.driftName.toSeq.map(avg(err).as(_)): _*)
     wrote.fold(monitor(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], c.schema),
         lit(0.0))) { m =>
-      DedupStream.publishCommit(spark, root, s"batch=$batchTag")
+      StoreCommits.publishCommit(spark, root, s"batch=$batchTag")
       monitor(spark.read.schema(c.schema).parquet(commitDir), c.drift(spark, m))
     }
   }
@@ -308,18 +308,23 @@ private[streaming] abstract class VectorStore(c: VectorCodec) {
       spark: SparkSession, storeDir: String, refit: Boolean, gcGraceMs: Long): Unit = {
     // the applied tombstone set is captured BEFORE the fold so the
     // retirement retires exactly what the filter read; pending deletes
-    // force a fold even on a single-commit store
+    // (and a refit) force a fold even on a single-commit store
     val applied = StoreCommits.tombstoneCommits(spark, storeDir)
+    val force = refit || applied.nonEmpty
     val elect =
       if (c.oneRowPerId) StoreCommits.electLatestOne _ else StoreCommits.electLatest _
-    StoreCommits.foldAndSwap(
-      spark, storeDir, c.subdir, c.schema, abCol, c.keyCols,
-      extraWork = refit || applied.nonEmpty,
-      transform = { all0 =>
-        val all = elect(StoreCommits.deltaMasked(all0, spark, storeDir, "neighbor_id"), "neighbor_id")
+    StoreCommits.foldAndSwap(spark, storeDir, Seq((c.subdir, "ab", c.keyCols)), { case Seq(visible) =>
+      if (visible.size < 2 && !(force && visible.nonEmpty)) None
+      else {
+        val dir = new Path(storeDir)
+        val parts = StoreCommits.storePartsOf(fs(spark, dir), dir)
+        val all = elect(StoreCommits.deltaMasked(
+          StoreCommits.readStoreFrom(spark, visible, c.schema, excludeTag = " none ",
+            partCol = "ab", wanted = _ => true),
+          spark, storeDir, "neighbor_id"), "neighbor_id")
         // promote a crashed refit's pending BEFORE this fold replaces its target
         val m = pinned(spark, storeDir, promote = true)
-        if (refit) {
+        val (rows, target, pending) = if (refit) {
           val m2 = c.fit(all, m.config)
           val target = s"batch=refit-${java.util.UUID.randomUUID()}"
           // versions ride through: the re-encoded rows are all
@@ -327,12 +332,12 @@ private[streaming] abstract class VectorStore(c: VectorCodec) {
           (c.encode(all, m2), target,
             Some(s"${c.marker}.pending" -> m2.copy(target = Some(target)).render))
         } else (all, s"batch=compact-${java.util.UUID.randomUUID()}", None)
-      },
-      afterSwap = () => {
-        effective(spark, storeDir, promote = true)
-        StoreCommits.retireTombstones(spark, storeDir, applied, gcGraceMs = gcGraceMs)
-      },
-      gcGraceMs = gcGraceMs, oneRowPerId = c.oneRowPerId)
+        Some((Seq(rows.withColumn("ab", abCol(parts))), target, pending))
+      }
+    }, afterSwap = () => {
+      effective(spark, storeDir, promote = true)
+      StoreCommits.retireTombstones(spark, storeDir, applied, gcGraceMs = gcGraceMs)
+    }, gcGraceMs = gcGraceMs, oneRowPerId = c.oneRowPerId)
   }
 
   /** Top-k cosine search of the accumulated store: the probe opens only
@@ -377,9 +382,9 @@ private[streaming] abstract class VectorStore(c: VectorCodec) {
       probe = c.probe(m, qs, nprobe, touches)
       val wanted = probe.keys.map(key => math.floorMod(
         org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(key, 42L), parts.toLong).toInt)
-      commits = DedupStream.visibleCommits(f, new Path(s"$storeDir/${c.subdir}"))
-      scan = DedupStream.readStoreFrom(spark, commits, c.schema,
-        excludeTag = " none ", partCol = "ab", wanted = wanted, fs0 = f)
+      commits = StoreCommits.visibleCommits(f, new Path(s"$storeDir/${c.subdir}"))
+      scan = StoreCommits.readStoreFrom(spark, commits, c.schema,
+        excludeTag = " none ", partCol = "ab", wanted = wanted, f0 = f)
       val after = pinned(spark, storeDir)
       if (after.render == m.render) consistent = true
       else {

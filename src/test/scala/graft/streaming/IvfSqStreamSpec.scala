@@ -123,7 +123,7 @@ class IvfSqStreamSpec extends SparkSpec {
     for ((sub, marker, upsert) <- kinds) {
       val store = java.nio.file.Files.createTempDirectory("empty").toString
       val root = new org.apache.hadoop.fs.Path(s"$store/$sub")
-      def visible = DedupStream.visibleCommits(
+      def visible = StoreCommits.visibleCommits(
         root.getFileSystem(spark.sparkContext.hadoopConfiguration), root).map(_.getPath.getName)
       // on an unpinned store: nothing published, nothing pinned
       assert(upsert(none, store, "e0").count() == 0, sub)
@@ -149,7 +149,7 @@ class IvfSqStreamSpec extends SparkSpec {
     def neighbors(df: DataFrame): Set[Long] =
       df.select("neighbor_id").collect().map(_.getLong(0)).toSet
     def storedIds: Set[Long] =
-      DedupStream.readStore(spark, s"$store/sqvecs", SqCodec.schema,
+      StoreCommits.readStore(spark, s"$store/sqvecs", SqCodec.schema,
           excludeTag = " none ", partCol = "ab", wanted = (0 until 64).toSet)
         .select("neighbor_id").distinct().collect().map(_.getLong(0)).toSet
     val beforeSearch = IvfSqStream.searchStore(spark, store, queries, k = 5,

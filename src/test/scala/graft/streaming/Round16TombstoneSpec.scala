@@ -29,7 +29,7 @@ class Round16TombstoneSpec extends SparkSpec {
 
   private def storedIds(store: String, sub: String,
       schema: org.apache.spark.sql.types.StructType): Set[Long] =
-    DedupStream.readStore(spark, s"$store/$sub", schema,
+    StoreCommits.readStore(spark, s"$store/$sub", schema,
       excludeTag = " none ", partCol = "ab", wanted = (0 until 64).toSet)
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
 

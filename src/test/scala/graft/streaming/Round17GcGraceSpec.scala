@@ -55,7 +55,7 @@ class Round17GcGraceSpec extends SparkSpec {
     // visibility: a fresh reader sees only the new generation
     val root = new org.apache.hadoop.fs.Path(s"$store/annvecs")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val visible = DedupStream.readManifest(fs, root).get
+    val visible = StoreCommits.readManifest(fs, root).get
     assert(visible.size == 1 && visible.head.startsWith("batch=compact-"),
       s"manifest must hide retired dirs: $visible")
 

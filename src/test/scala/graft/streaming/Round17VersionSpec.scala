@@ -62,7 +62,7 @@ class Round17VersionSpec extends SparkSpec {
 
   private def storeRows(store: String, sub: String, schema: StructType,
       id: Long): Long =
-    DedupStream.readStore(spark, s"$store/$sub", schema,
+    StoreCommits.readStore(spark, s"$store/$sub", schema,
       excludeTag = " none ", partCol = "ab", wanted = (0 until 64).toSet)
       .filter(col("neighbor_id") === id).count()
 

@@ -41,7 +41,7 @@ class Round18FastPathSpec extends SparkSpec {
     IvfSqStream.compactStore(spark, store)
     val root = new org.apache.hadoop.fs.Path(s"$store/sqvecs")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val commits = DedupStream.visibleCommits(fs, root)
+    val commits = StoreCommits.visibleCommits(fs, root)
     assert(commits.size == 1 &&
       commits.head.getPath.getName.startsWith("batch=compact-"))
     assert(StoreCommits.compactedOnly(fs, commits),
@@ -69,7 +69,7 @@ class Round18FastPathSpec extends SparkSpec {
     // the fold target (name unchanged — still a fold target) and
     // DUPLICATE its rows at the same version (what equal-version
     // duplicates under the old election looked like)
-    val target = DedupStream.visibleCommits(fs, root).head.getPath
+    val target = StoreCommits.visibleCommits(fs, root).head.getPath
     assert(target.getName.startsWith("batch=compact-"),
       s"expected a fold target, got ${target.getName}")
     fs.delete(new org.apache.hadoop.fs.Path(target, "_ONE_ROW_PER_ID"), false)
@@ -84,7 +84,7 @@ class Round18FastPathSpec extends SparkSpec {
     org.apache.hadoop.fs.FileContext.getFileContext(target.toUri,
         spark.sparkContext.hadoopConfiguration)
       .rename(new org.apache.hadoop.fs.Path(tmp), target)
-    val commits = DedupStream.visibleCommits(fs, root)
+    val commits = StoreCommits.visibleCommits(fs, root)
     assert(!StoreCommits.compactedOnly(fs, commits),
       "a markerless fold must NOT qualify for the fast path")
     val live = IvfSqStream.liveVectors(spark, store)
@@ -106,7 +106,7 @@ class Round18FastPathSpec extends SparkSpec {
     val fs = tombRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // manifest empty (mask retired) but the dir graced AND ledgered
     assert(StoreCommits.tombstoneCommits(spark, store).isEmpty)
-    val ledger = DedupStream.readSmallText(fs,
+    val ledger = StoreCommits.readSmallText(fs,
       new org.apache.hadoop.fs.Path(tombRoot, "_RETIRED")).getOrElse("")
     assert(ledger.contains("batch=d0"),
       s"applied tombstone must be stamped in the ledger, got: '$ledger'")
@@ -136,10 +136,10 @@ class Round18FastPathSpec extends SparkSpec {
       "replaced dedup generation must survive under the default grace")
     val root = new org.apache.hadoop.fs.Path(s"$store/buckets")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val visible = DedupStream.readManifest(fs, root).get
+    val visible = StoreCommits.readManifest(fs, root).get
     assert(visible.size == 1 && visible.head.startsWith("batch=compact-"),
       s"manifest must hide retired dirs: $visible")
-    val ledger = DedupStream.readSmallText(fs,
+    val ledger = StoreCommits.readSmallText(fs,
       new org.apache.hadoop.fs.Path(root, "_RETIRED")).getOrElse("")
     assert(ledger.contains("batch=g1") && ledger.contains("batch=g2"),
       s"replaced dirs must be stamped: '$ledger'")

@@ -181,8 +181,8 @@ class StoreMaskSpec extends SparkSpec {
       k.up(df(Seq(130L -> rv(5L), 301L -> rv(301L))), store, "b2")
       val f = new org.apache.hadoop.fs.Path(store)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val commits = DedupStream.visibleCommits(f, new org.apache.hadoop.fs.Path(s"$store/${k.sub}"))
-      val all = DedupStream.readStoreFrom(spark, commits, k.schema,
+      val commits = StoreCommits.visibleCommits(f, new org.apache.hadoop.fs.Path(s"$store/${k.sub}"))
+      val all = StoreCommits.readStoreFrom(spark, commits, k.schema,
         excludeTag = " none ", partCol = "ab", wanted = (0 until 64).toSet)
       def masked(bytes: Long) = StoreCommits.deltaMasked(all, spark, store, "neighbor_id",
         commits, broadcastDeltaBytes = bytes)
