@@ -9,14 +9,18 @@ import scala.util.Try
   * store (reference: backend/bin/deal-observer-backend.js:165-173).
   *
   *   observe — streaming query over the epoch event source
-  *   resolve — per-tick batch: work queue → lookups → state machine
+  *   resolve — per-tick batch: work queue → peerIds → lookups → state machine
   *   submit  — per-tick batch: eligibility → POST batches → flag
   *
   * Resolve and submit run as timed ticks between micro-batches (they
   * touch disjoint columns from observe's appends; the snapshot store
   * serializes writers). Transports (peerId dim, payload lookup, POST)
   * are injected, mirroring the reference's DI style
-  * (resolve-payload-cids.js:32, spark-api-submit-deals.js:15).
+  * (resolve-payload-cids.js:32, spark-api-submit-deals.js:15). There is
+  * one resolve tick body; `resolveTick` feeds it the fixture tables and
+  * `resolveTickLive` the peerId directory and the piece-indexer client,
+  * each as a dimension and a [[ResolvePayloadCids.Lookup]]: the table
+  * adapter `ResolvePayloadCids.tableLookup`, or `PieceIndexer.lookup`.
   *
   * Run: `runMain graft.DealObserverApp <eventLog> <headFile> <storeRoot>
   * <checkpoint> [maxTicks]` — file-transport demo wiring; a deployment
@@ -42,72 +46,51 @@ object DealObserverApp {
       spark, cfg.eventLog, cfg.storeRoot, cfg.checkpoint, chainHead, trigger,
       metrics = Some(new graft.streaming.MetricsSink(spark, cfg.metricsRoot)))
 
-  /** Delta-write helper: persist only the epoch-days in `days`, carrying
-    * the rest of the table forward by reference. `newState` must hold
-    * every row of those days. */
-  private def writeDays(store: DealStateStore, newState: DataFrame, days: Set[Int]): Unit =
-    if (days.nonEmpty) {
-      store.writeDelta(newState.filter(DealStateStore.dayCol.isInCollection(days)))
-      if (store.chainDepth() > 32) store.compact()
-    }
-
-  /** The resolve tick over the fixture lookup tables (demo wiring). */
+  /** The resolve tick over the fixture tables (demo wiring). */
   def resolveTick(
       spark: SparkSession, cfg: Config,
       peerIds: DataFrame, payloadLookup: DataFrame,
       now: java.sql.Timestamp): Unit =
-    resolveTickWith(spark, cfg, now) { (state, _) =>
-      ResolvePayloadCids.resolve(state, peerIds, payloadLookup, now, cfg.maxDeals)
-    }
+    resolveTick(spark, cfg, now, _ => peerIds, ResolvePayloadCids.tableLookup(payloadLookup))
 
   /** The resolve tick with LIVE transports on both lookup legs
-    * (reference deployment shape): the peerId dimension comes from
-    * [[graft.sources.MinerPeerIdClient]]'s contract→StateMinerInfo
-    * chain refreshed for exactly this tick's DISTINCT work-queue
-    * miners (≤ maxDeals — the reference's per-deal loop, batched), and
-    * the payload side from the piece-indexer HTTP client inside
-    * [[ResolvePayloadCids.resolveLive]]. Selected by `main` when
-    * `GRAFT_RPC_URLS` + `GRAFT_PEERID_CONTRACT` +
-    * `GRAFT_PIECE_INDEXER_URL` are set. */
+    * (reference deployment shape): the peerId dimension is `directory`'s
+    * contract→StateMinerInfo chain refreshed for exactly this tick's
+    * distinct work-queue miners (≤ maxDeals — the reference's per-deal
+    * loop, batched), and the payloads come from the piece-indexer HTTP
+    * client. Selected by `main` when `GRAFT_RPC_URLS` +
+    * `GRAFT_PEERID_CONTRACT` + `GRAFT_PIECE_INDEXER_URL` are set. */
   def resolveTickLive(
       spark: SparkSession, cfg: Config,
       directory: graft.state.PeerIdDirectory,
       pieceIndexerUrl: String,
       now: java.sql.Timestamp): Unit =
-    resolveTickWith(spark, cfg, now) { (state, queue) =>
-      import org.apache.spark.sql.functions.{col, concat, lit}
-      val miners = queue
-        .select(concat(lit("f0"), col("miner_id")).as("m"))
-        .distinct().collect().map(_.getString(0)).toSeq
-      val dim = directory.refreshed(spark, miners, now.getTime)
-      ResolvePayloadCids.resolveLive(state, dim, None, pieceIndexerUrl, now, cfg.maxDeals)
-    }
+    resolveTick(spark, cfg, now, directory.refreshed(spark, _, now.getTime),
+      graft.sources.PieceIndexer.lookup(_, pieceIndexerUrl))
 
-  /** One resolve tick: read the days that hold open-resolve rows, cache
-    * the work queue, let `lookup(state, queue)` merge this tick's
-    * lookups into `state`, write back the queue's days, record the
-    * telemetry, release the queue. */
-  private def resolveTickWith(spark: SparkSession, cfg: Config, now: java.sql.Timestamp)(
-      lookup: (DataFrame, DataFrame) => DataFrame): Unit = {
+  /** One resolve tick: read the days that hold open-resolve rows,
+    * collect the work queue once (its size, days and miners), build the
+    * peerId dimension for those miners, run [[ResolvePayloadCids.tick]]
+    * with `lookup`, write back the queue's days, record the telemetry. */
+  private def resolveTick(spark: SparkSession, cfg: Config, now: java.sql.Timestamp,
+      peerIds: Seq[String] => DataFrame, lookup: ResolvePayloadCids.Lookup): Unit = {
     val store = new DealStateStore(spark, cfg.storeRoot)
     val open = store.openDays(_.openResolve)
     if (open.isEmpty) return
     val state = store.read(open)
-    val queue = ResolvePayloadCids.workQueue(state, now, cfg.maxDeals).cache()
-    try {
-      val queued = queue.count()
-      if (queued > 0) {
-        val days = queue.select(DealStateStore.dayCol).distinct().collect().map(_.getInt(0))
-        writeDays(store, lookup(state, queue), days.toSet)
-        // S12: reference resolve loop telemetry (resolve-payload-cids.js:93-97),
-        // plus the store's footprint gauges in the same write
-        val fp = store.footprint()
-        new graft.streaming.MetricsSink(spark, cfg.metricsRoot).record("resolve",
-          store.stateCounts() ++ Map("queued" -> queued,
-            "store_chain_depth" -> fp.chainDepth.toLong, "store_day_files" -> fp.dayFiles,
-            "store_day_bytes" -> fp.dayBytes), now)
-      }
-    } finally queue.unpersist()
+    val queue = ResolvePayloadCids.workQueue(state, now, cfg.maxDeals).collect()
+    if (queue.isEmpty) return
+    val dim = peerIds(queue.map(r => s"f0${r.getAs[Int]("miner_id")}").distinct.toSeq)
+    val days = queue.map(r => DealStateStore.dayOf(r.getAs[Int]("activated_at_epoch"))).toSet
+    store.writeDelta(ResolvePayloadCids.tick(state, queue.toSeq, dim, lookup, now)
+      .filter(DealStateStore.dayCol.isInCollection(days)))
+    // S12: reference resolve loop telemetry (resolve-payload-cids.js:93-97),
+    // plus the store's footprint gauges in the same write
+    val fp = store.footprint()
+    new graft.streaming.MetricsSink(spark, cfg.metricsRoot).record("resolve",
+      store.stateCounts() ++ Map("queued" -> queue.length.toLong,
+        "store_chain_depth" -> fp.chainDepth.toLong, "store_day_files" -> fp.dayFiles,
+        "store_day_bytes" -> fp.dayBytes), now)
   }
 
   /** One submit tick over the days that hold open-submit rows whose
@@ -123,7 +106,7 @@ object DealObserverApp {
     if (open.isEmpty) return SubmitDeals.SubmitResult(0, 0, 0, state, Set.empty)
     val res = SubmitDeals.submit(state, now, cfg.submitBatchSize, post)
     if (res.submitted > 0) {
-      writeDays(store, res.newState, res.postedDays)
+      store.writeDelta(res.newState.filter(DealStateStore.dayCol.isInCollection(res.postedDays)))
       // S12: reference submit loop telemetry (spark-api-submit-deals.js:23-25)
       new graft.streaming.MetricsSink(spark, cfg.metricsRoot).record("submit",
         Map("submitted" -> res.submitted, "ingested" -> res.ingested,

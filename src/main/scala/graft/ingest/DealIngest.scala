@@ -2,7 +2,7 @@ package graft.ingest
 
 import graft.codec.EventCodec
 import graft.model.ActiveDeal
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The observe loop as a batch dataflow: raw events in an epoch range →
@@ -34,26 +34,17 @@ object DealIngest {
   /** Dedup within the batch, then against existing state.
     *
     * Scale design: the natural key contains `activated_at_epoch`, so a
-    * collision can only occur inside the batch's own epoch range. We
-    * therefore prune `existing` to that range *before* the anti-join —
-    * at 100 TB the state side collapses from the whole table to a few
-    * partitions (the store partitions by epoch_day), and the pruned side
-    * is small enough to broadcast. Without the pruning this would be a
-    * full shuffle of the state table on every micro-batch.
+    * collision can only occur inside the batch's own epoch range. The
+    * caller prunes `existing` to that range ([[observe]] does, with the
+    * window it already holds) — at 100 TB the state side collapses from
+    * the whole table to a few partitions (the store partitions by
+    * epoch_day), and the pruned side is small enough to broadcast.
     */
   def dedupeAgainst(newDeals: DataFrame, existing: DataFrame): DataFrame = {
     val key = ActiveDeal.naturalKey
-    val range = newDeals.agg(
-      min("activated_at_epoch").as("lo"), max("activated_at_epoch").as("hi"))
-      .collect()(0)
-    if (range.isNullAt(0)) return newDeals.limit(0)
-    val (lo, hi) = (range.getInt(0), range.getInt(1))
-    val pruned = existing
-      .filter(col("activated_at_epoch").between(lo, hi))
-      .select(key.map(col): _*)
     newDeals
       .dropDuplicates(key)
-      .join(broadcast(pruned), key, "left_anti")
+      .join(broadcast(existing.select(key.map(col): _*)), key, "left_anti")
   }
 
   /** BEYOND-REFERENCE: reorg retraction. The reference stores reverted
@@ -79,34 +70,28 @@ object DealIngest {
   }
 
   /** One observe tick: compute the epoch window from the chain head and
-    * the stored high-watermark, ingest it, and return the appended rows.
+    * the stored high-watermark `lastStored` (DealStateStore.maxEpoch
+    * reads it O(1) from the `_META` sidecar), ingest it, and return the
+    * appended rows. `existing` is pruned to the window before the dedup
+    * (a deal's `activated_at_epoch` is its event's height).
     * reference: backend/lib/deal-observer.js:17-28 */
-  /** @param storedWatermark the store's high-watermark when the caller
-    *   already knows it (DealStateStore.maxEpoch reads it O(1) from the
-    *   `_META` sidecar). `None` falls back to a distributed `agg(max)`
-    *   over `existing` — correct but a full state scan per tick, so the
-    *   streaming loop always passes the sidecar value. */
   def observe(
       raw: DataFrame,
       existing: DataFrame,
       chainHeadHeight: Int,
+      lastStored: Option[Int],
       maxPastEpochs: Int = MaxPastEpochs,
-      finalityEpochs: Int = FinalityEpochs,
-      storedWatermark: Option[Option[Int]] = None): DataFrame = {
+      finalityEpochs: Int = FinalityEpochs): DataFrame =
     // When finality exceeds the lookback cap the window is empty and the
     // tick is a no-op (reference deal-observer.test.js:274-277; the main
     // binary separately asserts the invariant at startup,
     // deal-observer-backend.js:34).
-    val lastStored = storedWatermark.getOrElse {
-      val watermark = existing.agg(max("activated_at_epoch")).collect()(0)
-      if (watermark.isNullAt(0)) None else Some(watermark.getInt(0))
-    }
     window(chainHeadHeight, lastStored, maxPastEpochs, finalityEpochs) match {
       case Some((startEpoch, endEpoch)) =>
-        dedupeAgainst(decodeRange(raw, startEpoch, endEpoch), existing)
+        dedupeAgainst(decodeRange(raw, startEpoch, endEpoch),
+          existing.filter(col("activated_at_epoch").between(startEpoch, endEpoch)))
       case None => existing.limit(0)
     }
-  }
 
   /** The epoch range one observe tick ingests: from just past the
     * stored watermark (but not before the lookback cap) to the finality

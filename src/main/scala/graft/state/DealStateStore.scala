@@ -182,7 +182,9 @@ final class DealStateStore(spark: SparkSession, root: String) {
     *
     * This is the 100 TB write path: an ingest tick touches a handful of
     * recent epoch-days; rewriting them costs O(changed), not O(table).
-    * `compact()` folds a chain back into a full snapshot.
+    * A delta that leaves the chain deeper than 32 versions folds it
+    * back into a full snapshot (`compact()`) and returns that
+    * snapshot's version; the depth comes from the GC step's chain walk.
     *
     * `tombstoneDays` deletes whole epoch-days by reference: the version
     * records the day numbers in a `_TOMBSTONES` sidecar and `read()`
@@ -257,8 +259,8 @@ final class DealStateStore(spark: SparkSession, root: String) {
     writeMeta(vdir, parentMax = parent.flatMap(metaMaxOf), floor = floor,
       ceil = if (floor.isEmpty) None else ceil)
     flipPointer(next)
-    gc(next)
-    next
+    // the read-amplification budget: a chain past 32 versions folds
+    if (gc(next) > 32) compact() else next
   }
 
   /** The GC step both writers run after the flip to `next`: delete every
@@ -267,8 +269,9 @@ final class DealStateStore(spark: SparkSession, root: String) {
     * resolves. The chains' version dirs and control files stay: the
     * chain walk, pointer recovery and the rescan span read them. One
     * root listing beside the chain walk, no Spark job: a delta's parent
-    * view is its own chain's tail, so only a full write walks twice. */
-  private def gc(next: Long): Unit = {
+    * view is its own chain's tail, so only a full write walks twice.
+    * Returns the depth of the chain from `next`. */
+  private def gc(next: Long): Int = {
     val head = walk(Some(next))
     val prev =
       if (head.drop(1).headOption.exists(_.version == next - 1)) head.drop(1)
@@ -280,6 +283,7 @@ final class DealStateStore(spark: SparkSession, root: String) {
       .foreach(fs.delete(_, true))
     val live = (resolve(head).values ++ resolve(prev).values).map(_._2).toSet
     for (l <- chains; (_, p) <- l.days if !live(p)) fs.delete(p, true)
+    head.size
   }
 
   /** Per-version metadata sidecar (`v=N/_META`): the table-level
@@ -469,8 +473,8 @@ final class DealStateStore(spark: SparkSession, root: String) {
     Footprint(chainDepth(), parts.length, parts.map(_.getLen).sum)
   }
 
-  /** Fold the delta chain into one full snapshot (run when the chain
-    * outgrows the read-amplification budget). */
+  /** Fold the delta chain into one full snapshot (`writeDelta` runs it
+    * when the chain outgrows the read-amplification budget). */
   def compact(): Long = write(read())
 }
 

@@ -1,8 +1,9 @@
 package graft.state
 
 import graft.model.{ActiveDeal, PayloadRetrievabilityState => St}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 
 /** The resolve loop as a batch dataflow: pick the work queue, look up
   * each deal's payload CID, advance the retrievability state machine,
@@ -11,17 +12,18 @@ import org.apache.spark.sql.functions._
   * reference: backend/lib/resolve-payload-cids.js:32-66 (loop + queue),
   * :40-51 (state transitions), :20 (3-day retry gate).
   *
-  * Spark restatement: the per-deal serial HTTP loop becomes two left
-  * joins — a broadcast dimension join (minerId → peerId; the LRU cache
-  * at resolve-payload-cids.js:177-181 becomes a broadcast variable
-  * refreshed per batch) and a lookup join against the piece indexer
-  * (injected as a DataFrame for tests / batch replays; a `mapPartitions`
-  * HTTP client with bounded concurrency in live mode). The state
-  * transition is a `when/otherwise` column program; the merge is a
-  * broadcast left join of the ≤maxDeals update set against the state
-  * it is given — the big side never shuffles. The app's resolve tick
-  * gives only the epoch-days that hold open-resolve rows
-  * (`DealStateStore.openDays`), a superset of the work queue's days.
+  * Spark restatement: the per-deal serial HTTP loop becomes one tick
+  * body ([[tick]]) over the ≤ maxDeals work queue, collected once: a
+  * minerId → peerId dimension (the LRU cache at
+  * resolve-payload-cids.js:177-181, refreshed per batch), one
+  * [[Lookup]] of the distinct (peerId, pieceCid) pairs — a fixture
+  * table for tests and batch replays, or the `mapPartitions` HTTP
+  * client with bounded concurrency in live mode — and the state
+  * transitions on the driver. The merge is a broadcast left join of
+  * the ≤ maxDeals update set against the state it is given — the big
+  * side never shuffles. The app's resolve tick gives only the
+  * epoch-days that hold open-resolve rows (`DealStateStore.openDays`),
+  * a superset of the work queue's days.
   */
 object ResolvePayloadCids {
 
@@ -42,146 +44,88 @@ object ResolvePayloadCids {
         col("piece_cid").asc, col("sector_id").asc)
       .limit(maxDeals)
 
-  /** One resolve tick.
-    *
-    * @param peerIds        minerId ("f0…" string) → peerId dimension
-    * @param payloadLookup  (peerId, pieceCid) → payloadCid lookup table
-    * @param now            injected clock (reference threads `now` the
-    *                       same way, resolve-payload-cids.js:32)
-    * @return `state` with this tick's updates merged in
-    */
-  def resolve(
-      state: DataFrame,
-      peerIds: DataFrame,
-      payloadLookup: DataFrame,
-      now: java.sql.Timestamp,
-      maxDeals: Int = 1000): DataFrame =
-    resolveWithFallback(state, peerIds, None, payloadLookup, now, maxDeals)
+  /** A payload lookup: the tick's distinct (peerId, pieceCid) pairs →
+    * `(peerId, pieceCid, payloadCid, error)` rows
+    * ([[graft.sources.PieceIndexer.resultSchema]]). A null payloadCid
+    * with a null error is a clean miss. */
+  type Lookup = DataFrame => DataFrame
 
-  /** One resolve tick with the full peerId fallback chain: the primary
-    * dimension (the miner→peerId smart contract) coalesced with a
-    * fallback dimension (the `Filecoin.StateMinerInfo` RPC) — the Spark
-    * restatement of `getIndexProviderPeerId`'s try-contract-then-RPC
-    * chain (reference resolve-payload-cids.js:125-155 via the
-    * index-provider-peer-id package). Both dims are broadcast; the
-    * resulting `peer_source` column mirrors the reference's
-    * `{ peerId, source }` pair. */
-  def resolveWithFallback(
-      state: DataFrame,
-      peerIdsPrimary: DataFrame,
-      peerIdsFallback: Option[DataFrame],
-      payloadLookup: DataFrame,
-      now: java.sql.Timestamp,
-      maxDeals: Int = 1000): DataFrame =
-    applyTick(state, workQueue(state, now, maxDeals),
-      peerIdsPrimary, peerIdsFallback, payloadLookup, now, excludePairs = None)
+  /** The fixture adapter: a `(peerId, pieceCid, payloadCid)` table. */
+  def tableLookup(table: DataFrame): Lookup = pairs =>
+    pairs.join(table.select("peerId", "pieceCid", "payloadCid"), Seq("peerId", "pieceCid"), "left")
+      .withColumn("error", lit(null).cast("string"))
 
-  /** Live resolve tick (S4): the payload-lookup side is fetched from the
-    * piece-indexer HTTP service for exactly this tick's distinct
-    * (peerId, pieceCid) pairs via the bounded-concurrency
-    * `mapPartitions` client ([[graft.sources.PieceIndexer]]).
+  /** [[tick]] over this state's work queue and a fixture lookup table.
+    * `now` is the injected clock (the reference threads it the same
+    * way, resolve-payload-cids.js:32). */
+  def resolve(state: DataFrame, peerIds: DataFrame, payloadLookup: DataFrame,
+      now: java.sql.Timestamp, maxDeals: Int = 1000): DataFrame =
+    tick(state, workQueue(state, now, maxDeals).collect().toSeq, peerIds,
+      tableLookup(payloadLookup), now)
+
+  /** [[tick]] over this state's work queue and the piece-indexer HTTP
+    * client (S4). */
+  def resolveLive(state: DataFrame, peerIds: DataFrame, pieceIndexerUrl: String,
+      now: java.sql.Timestamp, maxDeals: Int = 1000, concurrency: Int = 4,
+      retries: Int = 5): DataFrame =
+    tick(state, workQueue(state, now, maxDeals).collect().toSeq, peerIds,
+      graft.sources.PieceIndexer.lookup(_, pieceIndexerUrl, concurrency, retries), now)
+
+  /** One resolve tick over the collected work queue (≤ maxDeals rows of
+    * `state`): map each deal's miner ("f0…") to its peerId through the
+    * `(minerId, peerId)` dimension, look up the distinct
+    * (peerId, pieceCid) pairs once, advance the state machine, and
+    * merge the updates into `state`. The contract→StateMinerInfo
+    * fallback is the dimension's business ([[PeerIdDirectory]]).
     *
-    * Failure isolation: a pair whose request still fails after the
+    * Failure isolation: a pair whose lookup still errors after the
     * retries gets NO state advance this tick (it stays in the queue for
     * the next one) — the reference instead aborts the whole loop
     * iteration on a persistent error (piece-indexer-service.js:43-45);
     * isolating the failing rows keeps one bad CID from stalling the
-    * other ≤ maxDeals−1 resolutions. A clean `PROVIDER_OR_PIECE_NOT_
-    * FOUND` miss advances the retry state machine exactly like the
-    * injected-lookup path.
+    * other ≤ maxDeals−1 resolutions.
     *
-    * The lookups run once, here: their ≤ maxDeals results are collected
-    * into a local table, so the merge never re-runs the HTTP calls and
-    * nothing stays cached. The work queue is not cached here either; a
-    * caller that reuses it (the app's resolve tick) caches it. */
-  def resolveLive(
-      state: DataFrame,
-      peerIdsPrimary: DataFrame,
-      peerIdsFallback: Option[DataFrame],
-      pieceIndexerUrl: String,
-      now: java.sql.Timestamp,
-      maxDeals: Int = 1000,
-      concurrency: Int = 4,
-      retries: Int = 5): DataFrame = {
-    val queue = workQueue(state, now, maxDeals)
-    // hash-spread the pairs over every core before the distinct (which
-    // keeps that partitioning, no second exchange): AQE would otherwise
-    // coalesce the distinct's exchange to one partition, and the lookups
-    // would run `concurrency` at a time in a single task
-    val pairs = joinPeer(queue, peerIdsPrimary, peerIdsFallback)
-      .filter(col("peerId").isNotNull)
-      .select(col("peerId"), col("piece_cid").as("pieceCid"))
-      .repartition(state.sparkSession.sparkContext.defaultParallelism,
-        col("peerId"), col("pieceCid"))
-      .distinct()
-    val remote = graft.sources.PieceIndexer.lookup(pairs, pieceIndexerUrl, concurrency, retries)
-    val looked = state.sparkSession.createDataFrame(
-      java.util.Arrays.asList(remote.collect(): _*), remote.schema)
-    val hits = looked.filter(col("payloadCid").isNotNull)
-      .select("peerId", "pieceCid", "payloadCid")
-    val errored = looked.filter(col("error").isNotNull)
-      .select(col("peerId"), col("pieceCid").as("piece_cid"))
-    applyTick(state, queue, peerIdsPrimary, peerIdsFallback, hits, now,
-      excludePairs = Some(errored))
-  }
-
-  /** The peerId fallback chain as joins: primary (smart contract) dim
-    * coalesced with the optional fallback (StateMinerInfo) dim. */
-  private def joinPeer(
-      queue: DataFrame,
-      peerIdsPrimary: DataFrame,
-      peerIdsFallback: Option[DataFrame]): DataFrame = {
-    val primaryJoined = queue
-      .withColumn("f0_miner", concat(lit("f0"), col("miner_id")))
-      .join(broadcast(peerIdsPrimary.select(
-          col("minerId").as("f0_miner"), col("peerId").as("peer_primary"))),
-        Seq("f0_miner"), "left")
-    (peerIdsFallback match {
-      case Some(fb) => primaryJoined
-        .join(broadcast(fb.select(
-            col("minerId").as("f0_miner"), col("peerId").as("peer_fallback"))),
-          Seq("f0_miner"), "left")
-      case None => primaryJoined.withColumn("peer_fallback", lit(null).cast("string"))
-    })
-      .withColumn("peerId", coalesce(col("peer_primary"), col("peer_fallback")))
-      .drop("peer_primary", "peer_fallback")
-  }
-
-  private def applyTick(
-      state: DataFrame,
-      queue: DataFrame,
-      peerIdsPrimary: DataFrame,
-      peerIdsFallback: Option[DataFrame],
-      payloadLookup: DataFrame,
-      now: java.sql.Timestamp,
-      excludePairs: Option[DataFrame]): DataFrame = {
-    val withPeerAll = joinPeer(queue, peerIdsPrimary, peerIdsFallback)
-    val withPeer = excludePairs match {
-      case Some(ex) =>
-        withPeerAll.join(broadcast(ex), Seq("peerId", "piece_cid"), "left_anti")
-      case None => withPeerAll
-    }
-
-    val looked = withPeer
-      .join(broadcast(payloadLookup.select(
-          col("peerId"), col("pieceCid").as("piece_cid"),
-          col("payloadCid").as("found_payload_cid"))),
-        Seq("peerId", "piece_cid"), "left")
+    * The pairs go to `lookup` as a local table, which Spark spreads
+    * over min(pairs, cores) partitions; its ≤ maxDeals results come
+    * back to the driver, so the merge never re-runs them. */
+  def tick(state: DataFrame, queue: Seq[Row], peerIds: DataFrame, lookup: Lookup,
+      now: java.sql.Timestamp): DataFrame = {
+    val spark = state.sparkSession
+    val peerOf = peerIds.select("minerId", "peerId").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    def pairOf(r: Row): Option[(String, String)] =
+      peerOf.get(s"f0${r.getAs[Int]("miner_id")}").map(_ -> r.getAs[String]("piece_cid"))
+    val pairs = queue.flatMap(pairOf).distinct.map { case (p, c) => Row(p, c) }
+    val looked = lookup(spark.createDataFrame(java.util.Arrays.asList(pairs: _*), PairSchema))
+      .collect().map(r => (r.getAs[String]("peerId"), r.getAs[String]("pieceCid")) -> r).toMap
 
     // ST6 transitions (reference resolve-payload-cids.js:40-51):
     //   found               → Resolved
     //   miss, 1st attempt   → Unresolved
     //   miss, 2nd attempt   → TerminallyUnretrievable
-    val updates = looked.select(
-      (ActiveDeal.naturalKey.map(col) :+
-        col("found_payload_cid").as("new_payload_cid") :+
-        when(col("found_payload_cid").isNotNull, St.Resolved)
-          .when(col("last_payload_retrieval_attempt").isNotNull, St.TerminallyUnretrievable)
-          .otherwise(St.Unresolved).as("new_state") :+
-        lit(now).as("new_attempt_ts")): _*)
-
-    merge(state, updates)
+    val updates = queue.flatMap { r =>
+      val hit = pairOf(r).flatMap(looked.get)
+      if (hit.exists(_.getAs[String]("error") != null)) None
+      else {
+        val found = hit.flatMap(h => Option(h.getAs[String]("payloadCid")))
+        val next =
+          if (found.isDefined) St.Resolved
+          else if (r.getAs[java.sql.Timestamp]("last_payload_retrieval_attempt") != null)
+            St.TerminallyUnretrievable
+          else St.Unresolved
+        Some(Row.fromSeq(ActiveDeal.naturalKey.map(r.getAs[Any]) ++ Seq(found.orNull, next, now)))
+      }
+    }
+    merge(state, spark.createDataFrame(java.util.Arrays.asList(updates: _*), UpdateSchema))
   }
+
+  private val PairSchema = StructType(Seq(
+    StructField("peerId", StringType), StructField("pieceCid", StringType)))
+
+  private val UpdateSchema = StructType(
+    ActiveDeal.naturalKey.map(ActiveDeal.schema(_)) ++ Seq(
+      StructField("new_payload_cid", StringType), StructField("new_state", StringType),
+      StructField("new_attempt_ts", TimestampType)))
 
   /** Broadcast-merge the update set into the state snapshot (the Spark
     * analog of the reference's per-row UPDATE, resolve-payload-cids.js:107-123). */

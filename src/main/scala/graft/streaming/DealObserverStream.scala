@@ -98,19 +98,17 @@ object DealObserverStream {
           if (nr > 0) DealIngest.retractReverted(existing, reverts) else existing
         val appended = DealIngest.observe(
           if (retractReverts) batch.filter(!col("reverted")) else batch,
-          baseState, head, maxPastEpochs, finalityEpochs,
-          storedWatermark = Some(effectiveWm))
-        val n = appended.cache().count()
+          baseState, head, effectiveWm, maxPastEpochs, finalityEpochs).cache()
+        // one collect: the appended rows per epoch-day
+        val perDay = appended.groupBy(DealStateStore.dayCol).count().collect()
+        val n = perDay.map(_.getLong(1)).sum
         if (n > 0 || nr > 0) {
           // delta write: replace only the epoch-days this batch touched
           // (existing rows of those days, minus retracted keys, plus the
           // new rows) — an ingest tick costs O(touched days), never
           // O(table)
-          val r = appended.unionByName(reverts).agg(
-            min("activated_at_epoch").as("lo"), max("activated_at_epoch").as("hi"))
-            .collect()(0)
-          val loDay = DealStateStore.dayOf(r.getInt(0))
-          val hiDay = DealStateStore.dayOf(r.getInt(1))
+          val days = perDay.map(_.getInt(0)) ++ (revertLo ++ revertHi).map(DealStateStore.dayOf)
+          val (loDay, hiDay) = (days.min, days.max)
           val touched = store.read(d => d >= loDay && d <= hiDay)
           // parity default: plain append path, no retraction plan nodes
           val newDays =
@@ -153,7 +151,6 @@ object DealObserverStream {
             lowerRescanFloor = revertLo,
             raiseRescanCeil = revertHi,
             clearRescanFloor = spanAgedOut)
-          if (store.chainDepth() > 32) store.compact()
         }
         // S12: per-tick counters to the metrics table (the reference's
         // recordTelemetry call at the end of each loop body)
@@ -167,16 +164,6 @@ object DealObserverStream {
       }
       .start()
   }
-
-  /** Streaming telemetry: per-trigger counts by retrievability state over
-    * the event stream — the reference's four COUNT(*) telemetry queries
-    * as one windowed grouped count (ST1 + A4). */
-  def stateCountsStream(spark: SparkSession, eventsPath: String): DataFrame =
-    spark.readStream
-      .schema(RawActorEvent.schema)
-      .json(eventsPath)
-      .groupBy(col("height"))
-      .agg(count(lit(1)).as("n_events"))
 
   /** ST5, fully-streaming variant: decode the event stream and drop
     * natural-key duplicates inside the engine's dedup state instead of

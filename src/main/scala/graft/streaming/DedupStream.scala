@@ -850,7 +850,7 @@ object DedupStream {
         // applied deletes retire AFTER both swaps — a crash in between
         // leaves dropped rows + standing tombstones, which re-filter to
         // the same answer until the next compaction (idempotent)
-        StoreCommits.retireTombstones(spark, storeDir, appliedTombs, LabelTombs)
+        StoreCommits.retireTombstones(spark, storeDir, appliedTombs, LabelTombs, gcGraceMs)
       },
       gcGraceMs = gcGraceMs, stampReplaced = false)
   }

@@ -1104,7 +1104,7 @@ private[graft] object StoreCommits {
     *     the atomic manifest swap — THE commit point of that root;
     *   - `afterSwap` (finish a pending promotion, retire tombstones);
     *   - GC with a TIME-BASED GRACE PERIOD ([[gcUnlisted]]) of every
-    *     root and the sibling `tombstones` root: replaced commits stay
+    *     root and its sibling `tombstones` root: replaced commits stay
     *     on disk until `gcGraceMs` has elapsed, so an in-flight reader
     *     whose leaf list was captured against a prior manifest finishes
     *     its lazy read even when several folds complete under it;
@@ -1176,9 +1176,10 @@ private[graft] object StoreCommits {
     roots.zip(replaced).foreach { case (root, names) =>
       gcUnlisted(spark, root, gcGraceMs, stampNow = if (stampReplaced) names else Set.empty)
     }
-    // opportunistic sweep of the sibling tombstones root so retired
-    // tombstone dirs age out even when no further deletes ever happen
-    val tombRoot = new Path(dir, "tombstones")
-    if (f.exists(tombRoot)) gcUnlisted(spark, tombRoot, gcGraceMs, Set.empty)
+    // opportunistic sweep of the targets' sibling tombstones roots
+    // (`tombstones`, `labels/tombstones`) so retired tombstone dirs age
+    // out even when no further deletes ever happen
+    (dir +: roots.map(_.getParent)).distinct.map(new Path(_, "tombstones"))
+      .filter(f.exists).foreach(gcUnlisted(spark, _, gcGraceMs, Set.empty))
   }
 }

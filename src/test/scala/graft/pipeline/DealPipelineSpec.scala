@@ -44,16 +44,16 @@ class DealPipelineSpec extends SparkSpec {
   test("oldest visible epoch holds 25 deals (reference: maxPast=11, finality=10)") {
     // reference deal-observer.test.js:261-266 — only epoch head−10 visible
     val appended = DealIngest.observe(raw, emptyState,
-      chainHeadHeight = ChainHead, maxPastEpochs = 11, finalityEpochs = 10)
+      chainHeadHeight = ChainHead, lastStored = None, maxPastEpochs = 11, finalityEpochs = 10)
     assert(appended.count() == 25)
     assert(appended.agg(max("activated_at_epoch")).collect()(0).getInt(0) == 4622129)
   }
 
   test("finality > lookback stores nothing; single-epoch window stores one height") {
     // reference deal-observer.test.js:273-283
-    assert(DealIngest.observe(raw, emptyState, ChainHead,
+    assert(DealIngest.observe(raw, emptyState, ChainHead, None,
       maxPastEpochs = 11, finalityEpochs = 12).count() == 0)
-    val one = DealIngest.observe(raw, emptyState, ChainHead,
+    val one = DealIngest.observe(raw, emptyState, ChainHead, None,
       maxPastEpochs = 11, finalityEpochs = 10)
     assert(one.select("activated_at_epoch").distinct().count() == 1)
   }
@@ -84,18 +84,18 @@ class DealPipelineSpec extends SparkSpec {
 
   test("observe computes the epoch window from head, finality and watermark") {
     // head - finality(940) covers everything; empty state → full backfill
-    val appended = DealIngest.observe(raw, emptyState,
-      chainHeadHeight = ChainHead + 940, maxPastEpochs = 1999, finalityEpochs = 940)
+    val appended = DealIngest.observe(raw, emptyState, chainHeadHeight = ChainHead + 940,
+      lastStored = None, maxPastEpochs = 1999, finalityEpochs = 940)
     assert(appended.count() == 360)
     // resume: watermark at 4622138 → only the newest epoch (24 events) remains
     val state336 = DealIngest.dedupeAgainst(
       DealIngest.decodeRange(raw, 4622129, 4622138), emptyState)
-    val tail = DealIngest.observe(raw, state336,
-      chainHeadHeight = ChainHead + 940, maxPastEpochs = 1999, finalityEpochs = 940)
+    val tail = DealIngest.observe(raw, state336, chainHeadHeight = ChainHead + 940,
+      lastStored = Some(4622138), maxPastEpochs = 1999, finalityEpochs = 940)
     assert(tail.count() == 24)
     // finality gate: head too close → nothing ingested
-    val gated = DealIngest.observe(raw, emptyState,
-      chainHeadHeight = ChainHead, maxPastEpochs = 1999, finalityEpochs = 940)
+    val gated = DealIngest.observe(raw, emptyState, chainHeadHeight = ChainHead,
+      lastStored = None, maxPastEpochs = 1999, finalityEpochs = 940)
     assert(gated.filter(col("activated_at_epoch") > ChainHead - 940).count() == 0)
   }
 
@@ -118,23 +118,34 @@ class DealPipelineSpec extends SparkSpec {
 
   test("peerId fallback chain: primary misses resolve via the fallback dim (golden 85)") {
     // split the fixture dimension in two: half the miners only known to
-    // the smart contract, half only to StateMinerInfo — the coalesce of
-    // the two lookups must reproduce the golden resolve exactly
+    // the smart contract, half only to StateMinerInfo — the directory's
+    // chain over the two lookups must reproduce the golden resolve exactly
     val primary = peerIds.filter(abs(hash(col("minerId"))) % 2 === 0)
     val fallback = peerIds.filter(abs(hash(col("minerId"))) % 2 =!= 0)
     assert(primary.count() > 0 && fallback.count() > 0)
+    def half(df: DataFrame): Map[String, String] =
+      df.collect().map(r => r.getAs[String]("minerId") -> r.getAs[String]("peerId")).toMap
+    val (contract, minerInfo) = (half(primary), half(fallback))
     val state = DealIngest.dedupeAgainst(
       DealIngest.decodeRange(raw, 4622129, 4622138), emptyState).cache()
+    val miners = state.select(concat(lit("f0"), col("miner_id"))).distinct()
+      .collect().map(_.getString(0)).toSeq
     val now = java.sql.Timestamp.valueOf("2025-01-15 00:00:00")
-    val resolved = ResolvePayloadCids.resolveWithFallback(
-      state, primary, Some(fallback), payloadCids, now, maxDeals = 10000).cache()
+    val dim = new graft.state.PeerIdDirectory(contract.get, minerInfo.get)
+      .refreshed(spark, miners, now.getTime)
+    assert(dim.select("peer_source").distinct().collect().map(_.getString(0)).toSet ==
+      Set("smartContract", "stateMinerInfo"))
+    val resolved = ResolvePayloadCids.resolve(
+      state, dim, payloadCids, now, maxDeals = 10000).cache()
     assert(resolved.count() == 336)
     assert(resolved.filter(col("payload_cid").isNull).count() == 85)
     assert(resolved.filter(col("payload_retrievability_state") === St.Resolved)
       .count() == 336 - 85)
     // primary-only dim with no fallback: the fallback-half miners miss
-    val partial = ResolvePayloadCids.resolveWithFallback(
-      state, primary, None, payloadCids, now, maxDeals = 10000)
+    val contractOnly = new graft.state.PeerIdDirectory(contract.get, _ => None)
+      .refreshed(spark, miners, now.getTime)
+    val partial = ResolvePayloadCids.resolve(
+      state, contractOnly, payloadCids, now, maxDeals = 10000)
     assert(partial.filter(col("payload_cid").isNotNull).count() < 336 - 85)
   }
 

@@ -24,7 +24,7 @@ object PipelineDemo {
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ActiveDeal.schema)
 
-    val deals = DealIngest.observe(raw, empty, 4622139 + 940)
+    val deals = DealIngest.observe(raw, empty, 4622139 + 940, lastStored = None)
     println(s"OBSERVE appended=${deals.count()}")
 
     val storeDir = java.nio.file.Files.createTempDirectory("drive-store").toString
@@ -32,7 +32,7 @@ object PipelineDemo {
     store.write(deals)
     println(s"STORE version=${store.latestVersion} rows=${store.read().count()}")
 
-    val again = DealIngest.observe(raw, store.read(), 4622139 + 940)
+    val again = DealIngest.observe(raw, store.read(), 4622139 + 940, store.maxEpoch())
     println(s"REPLAY appended=${again.count()}")
 
     val now = java.sql.Timestamp.valueOf("2025-01-15 00:00:00")

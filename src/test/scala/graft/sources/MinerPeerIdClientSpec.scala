@@ -194,7 +194,7 @@ class MinerPeerIdClientSpec extends SparkSpec {
       assert(ethCalls.get() >= miners.size, "every miner tries the contract first")
       assert(minerInfoCalls.get() > 0, "odd miners fall back to StateMinerInfo")
       val resolved = ResolvePayloadCids.resolveLive(
-        state, dim, None, base, now, maxDeals = 10000, concurrency = 8).cache()
+        state, dim, base, now, maxDeals = 10000, concurrency = 8).cache()
       assert(resolved.count() == 336)
       assert(resolved.filter(col("payload_cid").isNull).count() == 85)
       assert(resolved.filter(col("payload_retrievability_state") === St.Resolved)

@@ -105,7 +105,7 @@ class PieceIndexerSpec extends SparkSpec {
         DealIngest.decodeRange(raw, 4622129, 4622138), emptyState).cache()
       val now = java.sql.Timestamp.valueOf("2025-01-15 00:00:00")
       val resolved = ResolvePayloadCids.resolveLive(
-        state, peerIds, None, base, now, maxDeals = 10000, concurrency = 8).cache()
+        state, peerIds, base, now, maxDeals = 10000, concurrency = 8).cache()
       assert(resolved.count() == 336)
       assert(resolved.filter(col("payload_cid").isNull).count() == 85)
       assert(resolved.filter(col("payload_retrievability_state") === St.Resolved)
@@ -137,7 +137,7 @@ class PieceIndexerSpec extends SparkSpec {
       val state = DealIngest.dedupeAgainst(
         DealIngest.decodeRange(raw, 4622129, 4622138), emptyState)
       val now = java.sql.Timestamp.valueOf("2025-01-15 00:00:00")
-      val resolved = ResolvePayloadCids.resolveLive(state, peerIds, None,
+      val resolved = ResolvePayloadCids.resolveLive(state, peerIds,
         s"http://127.0.0.1:${server.getAddress.getPort}", now, maxDeals = 40, concurrency = 1)
       assert(resolved.filter(col("payload_retrievability_state") === St.Unresolved).count() > 0)
       assert(peak.get() > 1, s"peak in-flight requests ${peak.get()}")

@@ -107,16 +107,16 @@ class DeltaStoreSpec extends SparkSpec {
   test("observe with the stored watermark matches the agg(max) path") {
     val existing = deals(4622129, 4622135)
     val head = 4622139 + DealIngest.FinalityEpochs // endEpoch == 4622139
-    val viaAgg = DealIngest.observe(raw, existing, head)
+    val aggMax = existing.agg(max("activated_at_epoch")).collect()(0)
+    val viaAgg = DealIngest.observe(raw, existing, head,
+      lastStored = if (aggMax.isNullAt(0)) None else Some(aggMax.getInt(0)))
       .orderBy(ActiveDeal.naturalKey.map(col): _*).collect()
-    val viaMeta = DealIngest.observe(raw, existing, head,
-      storedWatermark = Some(Some(4622135)))
+    val viaMeta = DealIngest.observe(raw, existing, head, lastStored = Some(4622135))
       .orderBy(ActiveDeal.naturalKey.map(col): _*).collect()
     assert(viaAgg.nonEmpty)
     assert(viaAgg.toSeq == viaMeta.toSeq)
     // empty-store watermark ingests from the lookback cap
-    val fresh = DealIngest.observe(raw, emptyState, head,
-      storedWatermark = Some(None))
+    val fresh = DealIngest.observe(raw, emptyState, head, lastStored = None)
     assert(fresh.count() == 360)
   }
 
