@@ -758,30 +758,16 @@ object DedupStream {
     * until publishCommit). */
   private def writeLocalLabelL0(
       spark: SparkSession, dir: String, rows: Array[(Long, Long)]): Unit = {
-    val conf = new org.apache.hadoop.conf.Configuration(
-      spark.sparkContext.hadoopConfiguration)
     val p = new Path(dir)
-    val fs = p.getFileSystem(conf)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
     fs.mkdirs(p)
-    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-      "message labels { required int64 id; required int64 component; }")
-    org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(schema, conf)
-    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
-        new Path(p, "part-00000.snappy.parquet"), conf))
-      .withConf(conf)
-      .withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .build()
-    val factory =
-      new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
-    try rows.foreach { case (id, c) =>
-      val g = factory.newGroup()
-      g.add("id", id)
-      g.add("component", c)
-      writer.write(g)
-    } finally writer.close()
+    StoreCommits.writeLocalParquet(spark, new Path(p, "part-00000.snappy.parquet"),
+      "message labels { required int64 id; required int64 component; }", rows) {
+      case (g, (id, c)) =>
+        g.add("id", id)
+        g.add("component", c)
+    }
     fs.create(new Path(p, "_SUCCESS"), true).close()
   }
 

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Telemetry sink (S12). The reference pushes InfluxDB points per loop
@@ -14,16 +14,27 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * append-only parquet of (ts, loop, metric, value) points partitioned
   * by day, plus a [[StreamingQueryListener]] bridging engine progress
   * events (rows/batch, duration) into the same table. At 100 TB a
-  * metrics table beats an external push: it is written by the same
-  * committed batch that produced the numbers (no drift), joins directly
-  * with the data it describes, and day partitions would let a
-  * retention sweep delete whole days. No retention sweep or day fold
-  * exists yet (ROADMAP directions 2 and 5): the table only grows.
+  * metrics table beats an external push: it is written by the loop that
+  * produced the numbers, right after its committed write (no drift),
+  * joins directly with the data it describes, and day partitions would
+  * let a retention sweep delete whole days. A point is a handful of
+  * rows, so it is written on the driver, not by a Spark job: the loops'
+  * ticks pay no job, committer or plan for their telemetry. No
+  * retention sweep or day fold exists yet (ROADMAP directions 2 and
+  * 5): the table only grows.
   */
 final class MetricsSink(spark: SparkSession, root: String) {
 
   /** Record one point: a named counter set for a loop tick (the
     * reference's `recordTelemetry(name, p => p.intField(...))`).
+    *
+    * One parquet file in `day=<ts's date in the session time zone>`
+    * (the `to_date(ts)` a Spark write would partition by), written on
+    * the driver with parquet-mr under a hidden `.`-prefixed name that
+    * readers skip, then renamed into view: zero Spark jobs, and a
+    * reader never lists a half-written file. `ts` is INT64 microseconds
+    * (UTC-adjusted); files an older Spark write left (INT96 `ts`) read
+    * through the same [[table]].
     *
     * File-count note: one small file per tick ≈ 8.6k files/day/loop at
     * a 10 s cadence. Day partitioning keeps reads pruned; nothing folds
@@ -32,14 +43,22 @@ final class MetricsSink(spark: SparkSession, root: String) {
   def record(loop: String, counters: Map[String, Long],
       ts: Timestamp = new Timestamp(System.currentTimeMillis())): Unit = {
     if (counters.isEmpty) return
-    import spark.implicits._
-    counters.toSeq.toDF("metric", "value")
-      .withColumn("ts", lit(ts))
-      .withColumn("loop", lit(loop))
-      .withColumn("day", to_date(col("ts")))
-      .select("ts", "loop", "metric", "value", "day")
-      .coalesce(1) // a tick's counters are a handful of rows — one file
-      .write.mode("append").partitionBy("day").parquet(root)
+    val zone = org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(
+      spark.conf.get("spark.sql.session.timeZone"))
+    val dayDir = new Path(root, s"day=${ts.toInstant.atZone(zone).toLocalDate}")
+    val name = s"part-${java.util.UUID.randomUUID()}.snappy.parquet"
+    val hidden = new Path(dayDir, s".$name")
+    val micros = java.time.temporal.ChronoUnit.MICROS.between(java.time.Instant.EPOCH, ts.toInstant)
+    StoreCommits.writeLocalParquet(spark, hidden, MetricsSink.FileSchema, counters) {
+      case (g, (metric, value)) =>
+        g.add("ts", micros)
+        g.add("loop", loop)
+        g.add("metric", metric)
+        g.add("value", value)
+    }
+    val fs = dayDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.rename(hidden, new Path(dayDir, name)))
+      throw new java.io.IOException(s"could not publish metrics file $hidden as $name")
   }
 
   /** Adapter for the iterative graph loops' `(round, value)` hooks
@@ -65,13 +84,13 @@ final class MetricsSink(spark: SparkSession, root: String) {
   /** The metrics table (empty-schema DataFrame when nothing recorded).
     *
     * Always reads with the FIXED schema, never inference: a concurrent
-    * first [[record]] can have created the directory without a committed
-    * footer yet, and schema inference over zero readable footers throws
-    * `UNABLE_TO_INFER_SCHEMA`. With the explicit schema, empty-dir,
-    * dir-with-in-flight-write, and populated-dir all return the same
-    * shape — the read is race-free against writers. */
+    * first [[record]] can have created a day directory that holds only
+    * its hidden in-flight file, and schema inference over zero readable
+    * footers throws `UNABLE_TO_INFER_SCHEMA`. With the explicit schema,
+    * empty-dir, dir-with-in-flight-write, and populated-dir all return
+    * the same shape — the read is race-free against writers. */
   def table(): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(root)
+    val p = new Path(root)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) spark.read.schema(MetricsSink.schema).parquet(root)
     else spark.createDataFrame(
@@ -111,4 +130,14 @@ object MetricsSink {
     StructField("metric", StringType),
     StructField("value", LongType),
     StructField("day", DateType)))
+
+  /** The parquet message type of one [[MetricsSink.record]] file (the
+    * `day` column is the directory). */
+  private val FileSchema =
+    """message metrics {
+      |  required int64 ts (TIMESTAMP(MICROS,true));
+      |  required binary loop (STRING);
+      |  required binary metric (STRING);
+      |  required int64 value;
+      |}""".stripMargin
 }

@@ -44,8 +44,10 @@ private[graft] object StoreCommits {
     * SECOND step, so a reader racing the swap can momentarily see new
     * bytes against the old checksum. HDFS/object stores have no
     * client-side sidecar (the window doesn't exist there); locally the
-    * re-open lands after the sidecar rename. Bounded, so a genuinely
-    * corrupt file still fails loudly. */
+    * re-open lands after the sidecar rename. Bounded: a mismatch that
+    * outlasts the retries is a file edited or damaged outside the store:
+    * on a checksummed local file system it fails with an IOException
+    * naming the file and its stale sidecar. */
   def readSmallText(f: FileSystem, p: Path): Option[String] = {
     var attempt = 0
     while (true) {
@@ -57,11 +59,38 @@ private[graft] object StoreCommits {
       } catch {
         case e: org.apache.hadoop.fs.ChecksumException =>
           attempt += 1
-          if (attempt >= 20) throw e
+          if (attempt >= 20) throw (f match {
+            case c: org.apache.hadoop.fs.ChecksumFileSystem => new java.io.IOException(
+              s"control file $p does not match its checksum sidecar ${c.getChecksumFile(p)}: " +
+                "the sidecar is stale (the file was edited or damaged outside the store) — " +
+                "restore the file, or delete the sidecar to accept it", e)
+            case _ => e
+          })
           Thread.sleep(5L * attempt)
       }
     }
     None // unreachable
+  }
+
+  /** One snappy parquet file of `rows` at `file`, written on the driver
+    * with parquet-mr: no Spark job and no Catalyst analysis. `schema` is
+    * a parquet message type; `fill` sets one row's fields. */
+  def writeLocalParquet[T](spark: SparkSession, file: Path, schema: String, rows: Iterable[T])(
+      fill: (org.apache.parquet.example.data.Group, T) => Unit): Unit = {
+    val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
+    val message = org.apache.parquet.schema.MessageTypeParser.parseMessageType(schema)
+    org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(message, conf)
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(file, conf))
+      .withConf(conf)
+      .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+      .build()
+    val factory = new org.apache.parquet.example.data.simple.SimpleGroupFactory(message)
+    try rows.foreach { r =>
+      val g = factory.newGroup()
+      fill(g, r)
+      writer.write(g)
+    } finally writer.close()
   }
 
   // ======== store layout marker ========

@@ -27,4 +27,35 @@ object TestSpark {
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** The Spark jobs `f` starts, on this thread and the threads it
+    * starts (a streaming query's, a broadcast's): a listener counts the
+    * jobs tagged with a fresh local property, and a sentinel job makes
+    * the count exact — the listener bus delivers in order, so once the
+    * sentinel's start arrives every job of `f` has. */
+  def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.span"
+    val span = java.util.UUID.randomUUID().toString
+    val counted = new java.util.concurrent.atomic.AtomicInteger(0)
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty(key)).foreach { v =>
+          if (v == span) counted.incrementAndGet()
+          else if (v == s"$span-end") seen.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, span)
+      try f finally sc.setLocalProperty(key, s"$span-end")
+      sc.parallelize(Seq(1), 1).count()
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
+      counted.get()
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }

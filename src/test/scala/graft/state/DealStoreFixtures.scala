@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Deal-store fixtures the store specs share: fixture days, a four-day
-  * state with every loop shape, file and job counters, and the
+  * state with every loop shape, a file counter, and the
   * pruned-vs-full read check. */
 trait DealStoreFixtures extends SparkSpec {
 
@@ -62,17 +62,6 @@ trait DealStoreFixtures extends SparkSpec {
 
   def sorted(df: DataFrame): Seq[Row] =
     df.orderBy(ActiveDeal.naturalKey.map(col): _*).collect().toSeq
-
-  def jobsDuring(f: => Unit): Int = {
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try { f; Thread.sleep(500); jobs } // listener bus is async
-    finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   /** Pruned reads must drive the loops exactly as the full read does. */
   def assertPrunedMatchesFull(store: DealStateStore): Unit = {

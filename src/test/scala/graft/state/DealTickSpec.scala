@@ -9,9 +9,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-/** One tick of the observe and live resolve loops over a fixture store:
-  * the Spark jobs each runs, and the resolve tick's isolation of pairs
-  * whose lookup fails. */
+/** One tick of each deal loop over a fixture store: the Spark jobs each
+  * runs, and the live resolve tick's isolation of pairs whose lookup
+  * fails. */
 class DealTickSpec extends DealStoreFixtures {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -57,7 +57,7 @@ class DealTickSpec extends DealStoreFixtures {
   private def firstTenEpochs = DealIngest.dedupeAgainst(
     DealIngest.decodeRange(raw, 4622129, 4622138), emptyState)
 
-  test("an AvailableNow observe tick over the fixture store runs at most 10 Spark jobs") {
+  test("an AvailableNow observe tick over the fixture store runs at most 7 Spark jobs") {
     val root = newDir("tick-observe")
     val cfg = config(root)
     new java.io.File(cfg.eventLog).mkdirs()
@@ -68,16 +68,28 @@ class DealTickSpec extends DealStoreFixtures {
     val jobs = jobsDuring(DealObserverApp.observeQuery(spark, cfg,
       () => 4622139 + DealIngest.FinalityEpochs, Trigger.AvailableNow()).awaitTermination())
     assert(store.rowCount() == 360, "the last epoch's 24 deals appended")
-    assert(jobs <= 10, s"observe tick ran $jobs Spark jobs")
+    assert(jobs <= 7, s"observe tick ran $jobs Spark jobs")
   }
 
-  test("a live resolve tick over the fixture store runs at most 8 Spark jobs") {
+  test("a live resolve tick over the fixture store runs at most 5 Spark jobs") {
     val cfg = config(newDir("tick-resolve"))
     new DealStateStore(spark, cfg.storeRoot).write(fourDays())
     withPieceIndexer((_, _) => false) { url =>
       val jobs = jobsDuring(DealObserverApp.resolveTickLive(spark, cfg, directory, url, now))
-      assert(jobs <= 8, s"resolve tick ran $jobs Spark jobs")
+      assert(jobs <= 5, s"resolve tick ran $jobs Spark jobs")
     }
+  }
+
+  test("a submit tick over the fixture store runs at most 6 Spark jobs") {
+    val cfg = config(newDir("tick-submit"))
+    new DealStateStore(spark, cfg.storeRoot).write(fourDays())
+    var submitted = 0L
+    val jobs = jobsDuring {
+      submitted = DealObserverApp.submitTick(spark, cfg,
+        rows => (rows.length.toLong, 0L), now).submitted
+    }
+    assert(submitted > 0, "the open-submit days POST and write back")
+    assert(jobs <= 6, s"submit tick ran $jobs Spark jobs")
   }
 
   test("live resolve tick: failing lookups keep their deals queued, the rest advance as golden") {

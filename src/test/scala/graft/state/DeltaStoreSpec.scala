@@ -91,17 +91,7 @@ class DeltaStoreSpec extends SparkSpec {
     assert(store.maxEpoch().contains(4622139))
 
     // the sidecar read is metadata-only: zero Spark jobs
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      store.maxEpoch()
-      Thread.sleep(500) // listener bus is async
-      assert(jobs == 0, "maxEpoch() must not launch a Spark job")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobsDuring(store.maxEpoch()) == 0, "maxEpoch() must not launch a Spark job")
   }
 
   test("observe with the stored watermark matches the agg(max) path") {

@@ -28,6 +28,98 @@ class MetricsSinkSpec extends SparkSpec {
     assert(tbl.select("day").distinct().count() == 2)
   }
 
+  test("record() writes its point on the driver: zero Spark jobs") {
+    val root = java.nio.file.Files.createTempDirectory("metrics-jobs").toString + "/m"
+    val sink = new MetricsSink(spark, root)
+    val t = java.sql.Timestamp.valueOf("2025-01-15 10:00:00")
+    assert(jobsDuring(sink.record("resolve", Map("queued" -> 85L, "failed" -> 0L), t)) == 0)
+    assert(jobsDuring(sink.record("resolve", Map("queued" -> 3L), t)) == 0)
+    assert(sink.table().filter(col("metric") === "queued").count() == 2)
+  }
+
+  test("a point's day is to_date(ts) in the session time zone, on both sides of midnight") {
+    val root = java.nio.file.Files.createTempDirectory("metrics-tz").toString + "/m"
+    val sink = new MetricsSink(spark, root)
+    val zoneKey = "spark.sql.session.timeZone"
+    val saved = spark.conf.get(zoneKey)
+    def at(utc: String) = java.sql.Timestamp.from(java.time.Instant.parse(utc))
+    // (zone, instant, its date in that zone): the Los Angeles points fall
+    // on the other UTC day from their local one
+    val cases = Seq(
+      ("UTC", "2025-01-15T23:59:59.999Z", "2025-01-15"),
+      ("UTC", "2025-01-16T00:00:00Z", "2025-01-16"),
+      ("America/Los_Angeles", "2025-01-16T07:59:59.999Z", "2025-01-15"),
+      ("America/Los_Angeles", "2025-01-16T08:00:00Z", "2025-01-16"))
+    try cases.zipWithIndex.foreach { case ((zone, utc, date), i) =>
+      spark.conf.set(zoneKey, zone)
+      sink.record(s"p$i", Map("v" -> i.toLong), at(utc))
+      val Array(r) = sink.table().filter(col("loop") === s"p$i")
+        .select(col("day").cast("string"), (col("day") === to_date(col("ts"))).as("same"),
+          col("ts")).collect()
+      assert(r.getString(0) == date && r.getBoolean(1), s"$zone $utc: $r")
+      assert(r.getTimestamp(2) == at(utc), "ts keeps its microseconds")
+    } finally spark.conf.set(zoneKey, saved)
+  }
+
+  test("a hidden in-flight file is not listed, and a published point leaves none behind") {
+    val root = java.nio.file.Files.createTempDirectory("metrics-hidden").toString + "/m"
+    val sink = new MetricsSink(spark, root)
+    sink.record("observe", Map("ingested" -> 1L), java.sql.Timestamp.valueOf("2025-01-15 10:00:00"))
+    val day = new java.io.File(root, "day=2025-01-15")
+    assert(day.list().filterNot(_.endsWith(".crc")).forall(_.startsWith("part-")),
+      day.list().mkString(","))
+    // another writer's half-written files: beside a published point, and
+    // alone in a day directory of their own
+    val half = "PAR1 half-written".getBytes("UTF-8")
+    java.nio.file.Files.write(new java.io.File(day, ".part-inflight.snappy.parquet").toPath, half)
+    val lone = new java.io.File(root, "day=2025-01-16")
+    lone.mkdirs()
+    java.nio.file.Files.write(new java.io.File(lone, ".part-inflight.snappy.parquet").toPath, half)
+    assert(sink.table().count() == 1)
+  }
+
+  test("table() reads a directory of Spark-written (INT96 ts) and driver-written points together") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("metrics-adopt").toString + "/m"
+    val t1 = java.sql.Timestamp.valueOf("2025-01-15 10:00:00.123456")
+    val t2 = java.sql.Timestamp.valueOf("2025-01-16 11:00:00")
+    // the points an older sink wrote: a Spark append with INT96 timestamps
+    val typeKey = "spark.sql.parquet.outputTimestampType"
+    val savedType = spark.conf.get(typeKey)
+    spark.conf.set(typeKey, "INT96")
+    try Seq(("observe", "ingested", 360L), ("observe", "retracted", 0L))
+      .toDF("loop", "metric", "value")
+      .withColumn("ts", lit(t1))
+      .withColumn("day", to_date(col("ts")))
+      .select("ts", "loop", "metric", "value", "day")
+      .coalesce(1)
+      .write.mode("append").partitionBy("day").parquet(root)
+    finally spark.conf.set(typeKey, savedType)
+    val sink = new MetricsSink(spark, root)
+    sink.record("resolve", Map("queued" -> 85L), t1)
+    sink.record("submit", Map("submitted" -> 270L), t2)
+
+    val conf = spark.sparkContext.hadoopConfiguration
+    val tsTypes = new java.io.File(root).listFiles().filter(_.isDirectory)
+      .flatMap(_.listFiles()).filter(f => f.getName.startsWith("part-")).map { f =>
+        val in = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.getPath), conf))
+        try in.getFooter.getFileMetaData.getSchema.getFields.get(0).asPrimitiveType()
+          .getPrimitiveTypeName.toString
+        finally in.close()
+      }
+    assert(tsTypes.sorted.toSeq == Seq("INT64", "INT64", "INT96"), tsTypes.mkString(","))
+
+    val rows = sink.table().collect().map(r =>
+      (r.getTimestamp(0), r.getString(1), r.getString(2), r.getLong(3), r.getDate(4).toString)).toSet
+    assert(rows == Set(
+      (t1, "observe", "ingested", 360L, "2025-01-15"),
+      (t1, "observe", "retracted", 0L, "2025-01-15"),
+      (t1, "resolve", "queued", 85L, "2025-01-15"),
+      (t2, "submit", "submitted", 270L, "2025-01-16")))
+  }
+
   test("iterative graph loops record per-round telemetry through roundHook") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("metrics-graph").toString + "/m"

@@ -94,35 +94,6 @@ class StoreMaskSpec extends SparkSpec {
     k.store.deleteStep(Seq(id).toDF("vec_id"), store, tag)
   }
 
-  /** Jobs started while `f` runs on this thread, counted by a listener
-    * and made exact by a sentinel job: the listener bus delivers in
-    * order, so once the sentinel's start arrives every job of `f` has. */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.spec.span"
-    val span = java.util.UUID.randomUUID().toString
-    val counted = new java.util.concurrent.atomic.AtomicInteger(0)
-    val seen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty(key)).foreach { v =>
-          if (v == span) counted.incrementAndGet()
-          else if (v == s"$span-end") seen.countDown()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, span)
-      try f finally sc.setLocalProperty(key, s"$span-end")
-      sc.parallelize(Seq(1), 1).count()
-      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
-      counted.get()
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   kinds.foreach { k =>
     test(s"${k.name}: a re-upsert after a delete stays masked until the compaction, then inserts fresh") {
       val store = newStore(k)
@@ -207,9 +178,9 @@ class StoreMaskSpec extends SparkSpec {
       k.up(df(background :+ (7L -> u)), store, "b0")
       k.compact(store)
       k.up(df((100L until 140L).map(id => id -> rv(id + 1000L))), store, "b1")
-      assert(jobsOf { delete(k, store, 120L, "d0"); () } == 1)
+      assert(jobsDuring { delete(k, store, 120L, "d0"); () } == 1)
       hits(k, store) // warm
-      val jobs = jobsOf { k.search(store, queries).collect(); () }
+      val jobs = jobsDuring { k.search(store, queries).collect(); () }
       assert(jobs <= k.maxSearchJobs, s"${k.name} search ran $jobs jobs")
     }
   }
